@@ -133,8 +133,7 @@ object Glyphs {
       if ((pat & (1L << b)) != 0L) px((b / W + pad) * cw + (b % W + pad)) = 18
       b += 1
     }
-    val bin = graft.img.ImageOps.adaptiveGaussian(
-      graft.img.ImageOps.gaussianBlur(px, cw, ch, 3), cw, ch, 11, 2.0)
+    val (bin, _) = graft.ocr.OcrEngine.preprocess(px, cw, ch, "balanced")
     var mask = 0L
     b = 0
     while (b < PIX) {

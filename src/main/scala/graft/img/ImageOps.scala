@@ -48,7 +48,15 @@ object ImageOps {
   /** Separable binomial Gaussian blur; ksize in {3, 5} mirrors
     * `cv2.GaussianBlur(img,(k,k),0)` (`app.py:530,538,547`).
     */
-  def gaussianBlur(px: Array[Int], w: Int, h: Int, ksize: Int): Array[Int] = {
+  def gaussianBlur(px: Array[Int], w: Int, h: Int, ksize: Int): Array[Int] =
+    blur(px, w, h, ksize, null)
+
+  /** The blur both [[gaussianBlur]] and [[blurOtsu]] run; a non-null
+    * `hist` (256 bins) also counts every output value as the vertical
+    * pass produces it.
+    */
+  private def blur(px: Array[Int], w: Int, h: Int, ksize: Int,
+                   hist: Array[Long]): Array[Int] = {
     val (kern, norm) = ksize match {
       case 3 => (Array(1, 2, 1), 4)
       case 5 => (Array(1, 4, 6, 4, 1), 16)
@@ -108,7 +116,16 @@ object ImageOps {
       }
       val row = y * w
       var x = 0
-      while (x < w) { out(row + x) = (acc(x) + half) / norm; x += 1 }
+      if (hist == null) {
+        while (x < w) { out(row + x) = (acc(x) + half) / norm; x += 1 }
+      } else {
+        while (x < w) {
+          val v = (acc(x) + half) / norm
+          out(row + x) = v
+          hist(v) += 1
+          x += 1
+        }
+      }
       y += 1
     }
     out
@@ -187,10 +204,10 @@ object ImageOps {
     else px.map(p => if (p > t) 255 else 0)
   }
 
-  /** Fused `thresholdOtsu(gaussianBlur(px, w, h, ksize), invert)` —
-    * the OCR preprocess "default"/"quality" chain as 3 full-image
-    * passes instead of 5 (round-6, profile-driven: preprocess was the
-    * hottest flagship frame at 19% of task samples after the loop
+  /** [[gaussianBlur]] fused with [[thresholdOtsu]] — the OCR
+    * preprocess "default"/"quality" chain as 3 full-image passes
+    * instead of 5 (round-6, profile-driven: preprocess was the hottest
+    * flagship frame at 19% of task samples after the loop
     * restructure). The 256-bin histogram rides the blur's vertical
     * pass as each output value is produced; the low-contrast guard
     * reads min/max as the first/last nonzero bins (equal by definition
@@ -200,70 +217,14 @@ object ImageOps {
     * (histogram counts are order-free, the bin walk is shared code),
     * so the result is bit-identical to the unfused chain — law-checked
     * in GraftProps including 1xN / Nx1 / w<r degenerates.
+    *
+    * Returns the binarized page and the Otsu threshold it used
+    * (`otsuThreshold` of the blurred page), or -1 for a low-contrast
+    * page, which binarizes to all-background.
     */
-  def blurOtsu(px: Array[Int], w: Int, h: Int, ksize: Int,
-               invert: Boolean = false): Array[Int] = {
-    val (kern, norm) = ksize match {
-      case 3 => (Array(1, 2, 1), 4)
-      case 5 => (Array(1, 4, 6, 4, 1), 16)
-      case k => throw new IllegalArgumentException(s"ksize $k")
-    }
-    val r = ksize / 2
-    val half = norm / 2
-    val tmp = new Array[Int](w * h)
-    var y = 0
-    while (y < h) { // horizontal pass (identical to gaussianBlur)
-      val row = y * w
-      var x = 0
-      val lo = math.min(r, w)
-      val hi = math.max(lo, w - r)
-      while (x < lo) {
-        var acc = 0
-        var k = -r
-        while (k <= r) { acc += kern(k + r) * px(row + ref101(x + k, w)); k += 1 }
-        tmp(row + x) = (acc + half) / norm
-        x += 1
-      }
-      while (x < hi) {
-        var acc = 0
-        var k = -r
-        while (k <= r) { acc += kern(k + r) * px(row + x + k); k += 1 }
-        tmp(row + x) = (acc + half) / norm
-        x += 1
-      }
-      while (x < w) {
-        var acc = 0
-        var k = -r
-        while (k <= r) { acc += kern(k + r) * px(row + ref101(x + k, w)); k += 1 }
-        tmp(row + x) = (acc + half) / norm
-        x += 1
-      }
-      y += 1
-    }
-    val out = new Array[Int](w * h)
+  def blurOtsu(px: Array[Int], w: Int, h: Int, ksize: Int): (Array[Int], Int) = {
     val hist = new Array[Long](256)
-    val acc = new Array[Int](w)
-    y = 0
-    while (y < h) { // vertical pass + histogram
-      java.util.Arrays.fill(acc, 0)
-      var k = -r
-      while (k <= r) {
-        val src = ref101(y + k, h) * w
-        val kv = kern(k + r)
-        var x = 0
-        while (x < w) { acc(x) += kv * tmp(src + x); x += 1 }
-        k += 1
-      }
-      val row = y * w
-      var x = 0
-      while (x < w) {
-        val v = (acc(x) + half) / norm
-        out(row + x) = v
-        hist(v) += 1
-        x += 1
-      }
-      y += 1
-    }
+    val out = blur(px, w, h, ksize, hist)
     // low-contrast guard from the histogram: min/max pixel values are
     // the first/last nonzero bins
     var mn = 0
@@ -271,14 +232,13 @@ object ImageOps {
     var mx = 255
     while (mx > 0 && hist(mx) == 0L) mx -= 1
     if (out.length == 0 || mx - mn < minContrast) {
-      java.util.Arrays.fill(out, if (invert) 0 else 255)
-      return out
+      java.util.Arrays.fill(out, 255)
+      return (out, -1)
     }
     val t = otsuFromHist(hist, out.length)
     var i = 0
-    if (invert) { while (i < out.length) { out(i) = if (out(i) > t) 0 else 255; i += 1 } }
-    else { while (i < out.length) { out(i) = if (out(i) > t) 255 else 0; i += 1 } }
-    out
+    while (i < out.length) { out(i) = if (out(i) > t) 255 else 0; i += 1 }
+    (out, t)
   }
 
   /** Adaptive Gaussian threshold, blockSize x blockSize window, bias C:
@@ -435,58 +395,18 @@ object ImageOps {
     (out, nw, nh)
   }
 
-  /** 3x3 median filter (`cv2.medianBlur(img, 3)`), BORDER_REFLECT_101
-    * like the blur kernels. OPT-IN denoise stage (north_star names
-    * "median-filter denoise"; the reference code itself never calls
-    * it — SURVEY's discrepancy note — so it ships off by default to
-    * preserve span equality and is enabled via
-    * `ExtractJob.Config.preStages`).
-    */
-  def medianFilter3(px: Array[Int], w: Int, h: Int): Array[Int] = {
-    val out = new Array[Int](w * h)
-    val win = new Array[Int](9)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        var k = 0
-        var dy = -1
-        while (dy <= 1) {
-          val yy = ref101(y + dy, h)
-          var dx = -1
-          while (dx <= 1) {
-            win(k) = px(yy * w + ref101(x + dx, w))
-            k += 1
-            dx += 1
-          }
-          dy += 1
-        }
-        // partial selection sort to the middle element (5 of 9)
-        var i = 0
-        while (i <= 4) {
-          var m = i
-          var j = i + 1
-          while (j < 9) { if (win(j) < win(m)) m = j; j += 1 }
-          val t = win(i); win(i) = win(m); win(m) = t
-          i += 1
-        }
-        out(y * w + x) = win(4)
-        x += 1
-      }
-      y += 1
-    }
-    out
-  }
-
   /** Conditional 3x3 median ("despeckle") — the denoise stage the
     * pipeline actually ships: a pixel is replaced by its 3x3 median
     * ONLY when no 8-neighbor is within +-64 gray levels of it (a true
-    * salt/pepper outlier). The unconditional [[medianFilter3]] erases
-    * this codec's 1-px glyph strokes outright (a stroke pixel's
-    * neighborhood is majority paper), so the classical filter is kept
-    * for real-image deployments and the conditional form guards the
-    * glyph fixtures: isolated speckles vanish, strokes (which always
-    * continue into at least one similar neighbor) are untouched.
+    * salt/pepper outlier). The unconditional 3x3 median
+    * (`cv2.medianBlur(img, 3)`) would erase this codec's 1-px glyph
+    * strokes outright (a stroke pixel's neighborhood is majority
+    * paper); the conditional form makes isolated speckles vanish while
+    * strokes (which always continue into at least one similar
+    * neighbor) are untouched. OPT-IN via `ExtractJob.Config.preStages`
+    * ("denoise"): the reference code never median-filters (SURVEY's
+    * discrepancy note), so it ships off by default to preserve span
+    * equality.
     */
   def despeckle3(px: Array[Int], w: Int, h: Int): Array[Int] = {
     val out = new Array[Int](w * h)
@@ -605,7 +525,7 @@ object ImageOps {
     * estimated skew in degrees (rotate by -estimate to deskew).
     */
   def estimateSkew(px: Array[Int], w: Int, h: Int, maxDeg: Double = 8.0): Double = {
-    val bin = thresholdOtsu(gaussianBlur(px, w, h, 3))
+    val (bin, _) = blurOtsu(px, w, h, 3)
     // sample ink pixels (cap keeps the vote O(points * angles))
     val xs = new Array[Int](20000)
     val ys = new Array[Int](20000)

@@ -27,18 +27,43 @@ object OcrEngine {
   /** Preprocess mode, keyed exactly like the reference's
     * `preprocess_type` (`app.py:524-548`) with the v2 quality mapping
     * low->fast, medium->balanced, high->quality (`app2.py:557-558`).
+    * The one definition of each chain: returns the binarized page and
+    * the global threshold it used — 128 for fast, the page's Otsu
+    * threshold for quality/default, -1 for the adaptive chain and for
+    * a blank (low-contrast) page.
     */
-  def preprocess(px: Array[Int], w: Int, h: Int, mode: String): Array[Int] =
+  def preprocess(px: Array[Int], w: Int, h: Int, mode: String): (Array[Int], Int) =
     mode match {
       case "fast" =>
-        ImageOps.thresholdGlobal(px, 128)
+        (ImageOps.thresholdGlobal(px, 128), 128)
       case "balanced" =>
-        ImageOps.adaptiveGaussian(ImageOps.gaussianBlur(px, w, h, 3), w, h, 11, 2.0)
+        (ImageOps.adaptiveGaussian(ImageOps.gaussianBlur(px, w, h, blurSize(mode)), w, h, 11, 2.0), -1)
       case "quality" =>
-        ImageOps.morphClose(ImageOps.blurOtsu(px, w, h, 5), w, h, 1, 1)
+        val (bin, t) = ImageOps.blurOtsu(px, w, h, blurSize(mode))
+        (ImageOps.morphClose(bin, w, h, 1, 1), t)
       case _ => // "default"
-        ImageOps.blurOtsu(px, w, h, 3)
+        ImageOps.blurOtsu(px, w, h, blurSize(mode))
     }
+
+  /** The Gaussian blur kernel each chain runs before binarizing
+    * (0 = none): [[preprocess]] and the engine's calibration both read
+    * it here.
+    */
+  private[ocr] def blurSize(mode: String): Int = mode match {
+    case "fast" => 0
+    case "quality" => 5
+    case _ => 3 // balanced / default
+  }
+
+  /** Opt-in raster pre-stages (`ExtractJob.Config.preStages`), applied
+    * in the caller's order before the chain: "deskew" (Hough-vote angle
+    * estimate + rotate-out) and "denoise" (the stroke-preserving
+    * conditional 3x3 median, [[ImageOps.despeckle3]]). The one
+    * allowlist: the plan-time config check reads its keys.
+    */
+  val PreStages: Map[String, (Array[Int], Int, Int) => Array[Int]] = Map(
+    "deskew" -> ImageOps.deskew,
+    "denoise" -> ImageOps.despeckle3)
 
   /** v2 resize caps by quality (`app2.py:214-223`); v1 cap 1500. */
   def resizeCapFor(quality: String): Int = quality match {
@@ -122,33 +147,36 @@ object OcrEngine {
 final class OcrEngine(val mode: String, val language: String = "eng") {
   import OcrEngine._
 
-  /** Blurred (pre-threshold) grayscale calibration cells per glyph. */
+  /** The zero-noise calibration page: every glyph once (40 glyphs =
+    * exactly one line), rendered with seed-0 jitter, which matching
+    * tolerates.
+    */
+  private val (calibW, calibH, calibPx) = SynthRaster.parse(
+    SynthRaster.render(Glyphs.alphabet, seed = 0L, noise = false, language))
+
+  /** Pre-threshold calibration cells per glyph: the page through this
+    * chain's blur.
+    */
   private val calibGray: Array[Array[Int]] = {
-    val calib = Glyphs.alphabet // 40 glyphs = exactly one line
-    val bytes = SynthRaster.render(calib, seed = 0L, noise = false, language)
-    val (w, h, px0) = SynthRaster.parse(bytes)
-    // zero the noise: re-render deterministically gives tiny jitter; the
-    // calibration page uses seed 0 jitter which matching tolerates.
-    val px = mode match {
-      case "fast" => px0
-      case "quality" => ImageOps.gaussianBlur(px0, w, h, 5)
-      case _ => ImageOps.gaussianBlur(px0, w, h, 3) // balanced / default
-    }
+    val k = blurSize(mode)
+    val px = if (k == 0) calibPx else ImageOps.gaussianBlur(calibPx, calibW, calibH, k)
     Array.tabulate(Glyphs.alphabet.length) { gi =>
       val x0 = SynthRaster.MARGIN + gi * SynthRaster.CELL_W
       val y0 = SynthRaster.MARGIN
       Array.tabulate(Glyphs.PIX) { b =>
-        px((y0 + b / Glyphs.W) * w + (x0 + b % Glyphs.W))
+        px((y0 + b / Glyphs.W) * calibW + (x0 + b % Glyphs.W))
       }
     }
   }
 
-  /** Static templates for the balanced (adaptive) chain. */
-  private lazy val balancedTemplates: Array[Long] = {
-    val bytes = SynthRaster.render(Glyphs.alphabet, seed = 0L, noise = false, language)
-    val (w, h, px) = SynthRaster.parse(bytes)
-    val bin = preprocess(px, w, h, "balanced")
-    Array.tabulate(Glyphs.alphabet.length)(gi => cellMask(bin, w, gi, 0))
+  /** Static templates: the calibration page through this engine's own
+    * chain. The tables of the adaptive chain, which has no global
+    * threshold; a blank page of the Otsu chains also lands here, where
+    * no cell holds ink and the tables are never consulted.
+    */
+  private lazy val chainTemplates: Array[Long] = {
+    val (bin, _) = preprocess(calibPx, calibW, calibH, mode)
+    Array.tabulate(Glyphs.alphabet.length)(gi => cellMask(bin, calibW, gi, 0))
   }
 
   private val templCache = new java.util.concurrent.ConcurrentHashMap[Integer, Array[Long]]()
@@ -223,37 +251,17 @@ final class OcrEngine(val mode: String, val language: String = "eng") {
       if (graft.img.ImageCodec.isCompressedImage(bytes))
         ImageOps.resizeCap(px0, w0, h0, resizeCapFor(quality))
       else (px0, w0, h0)
-    // opt-in raster pre-stages (Config.preStages; default Nil = the
-    // reference-exact path): deskew then/or median denoise, in the
-    // caller's order, BEFORE the quality chain
-    val px = preStages.foldLeft(pxCapped) {
-      case (p, "deskew") => ImageOps.deskew(p, w, h)
-      // despeckle (conditional median) — the unconditional 3x3 median
-      // erases this codec's 1-px glyph strokes (ImageOps.despeckle3
-      // scaladoc); "median" selects the classical filter for
-      // real-image deployments
-      case (p, "denoise") => ImageOps.despeckle3(p, w, h)
-      case (p, "median") => ImageOps.medianFilter3(p, w, h)
-      case (p, other) =>
-        throw new IllegalArgumentException(s"unknown preStage '$other'")
+    // opt-in raster pre-stages (default Nil = the reference-exact
+    // path), in the caller's order, BEFORE the quality chain
+    val px = preStages.foldLeft(pxCapped) { (p, stage) =>
+      PreStages.getOrElse(stage,
+        throw new IllegalArgumentException(s"unknown preStage '$stage'"))(p, w, h)
     }
 
     // run the chain, keeping the page's global threshold (if any) so the
     // decode tables reflect exactly this page's binarization
-    val (bin, templates, pageT): (Array[Int], Array[Long], Int) = mode match {
-      case "fast" =>
-        (ImageOps.thresholdGlobal(px, 128), templatesAt(128), 128)
-      case "balanced" =>
-        (preprocess(px, w, h, "balanced"), balancedTemplates, -1)
-      case m => // default / quality: blur + Otsu (+ identity 1x1 close)
-        val bl = ImageOps.gaussianBlur(px, w, h, if (m == "quality") 5 else 3)
-        if (ImageOps.lowContrast(bl))
-          (Array.fill(bl.length)(255), templatesAt(-1), -1) // blank page
-        else {
-          val t = ImageOps.otsuThreshold(bl)
-          (ImageOps.thresholdGlobal(bl, t), templatesAt(t), t)
-        }
-    }
+    val (bin, pageT) = preprocess(px, w, h, mode)
+    val templates = if (pageT >= 0) templatesAt(pageT) else chainTemplates
     // fast engine mode scores against the fixed nominal tables; glyph
     // choice stays on the exact ones
     val confTemplates: Array[Long] =

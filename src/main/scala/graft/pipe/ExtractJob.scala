@@ -1,16 +1,13 @@
 package graft.pipe
 
-import graft.ocr.EnginePool
+import graft.ocr.{EnginePool, OcrEngine}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Kernel output row. Top-level (not nested in the object): a nested
-  * case class carries an outer pointer that knocks the Dataset encoder
-  * out of whole-stage codegen.
+/** Per-ref kernel output (one row per needed media_ref). Top-level (not
+  * nested in the object): a nested case class carries an outer pointer
+  * that knocks the Dataset encoder out of whole-stage codegen.
   */
-final case class OcrRow(content_hash: String, ocr_text: String, ocr_conf: Double)
-
-/** Per-ref kernel output (one row per needed media_ref). */
 final case class RefOcr(media_ref: String, ocr_text: String, ocr_conf: Double)
 
 /** The extraction pipeline — the reference's per-request dataflow
@@ -31,7 +28,7 @@ final case class RefOcr(media_ref: String, ocr_text: String, ocr_conf: Double)
   * reference's path-keyed OCR cache (`app2.py:329-379`) with strictly
   * better hit semantics at ONE media scan + ONE bytes shuffle. The
   * join back to span rows is where the Zipf media skew lives; it is
-  * salted (`saltBuckets`) by exploding the small per-ref side S ways
+  * salted by exploding the small per-ref side [[ExtractJob.SaltBuckets]] ways
   * so no single ref lands on one task — with AQE skew-join as the
   * runtime backstop. All relational stages stay in whole-stage
   * codegen; the only row-at-a-time code is the kernel itself and the
@@ -39,29 +36,32 @@ final case class RefOcr(media_ref: String, ocr_text: String, ocr_conf: Double)
   */
 object ExtractJob {
 
-  /** quality knob (v2, `app2.py:854-863`): low | medium | high.
-    * inputPartitions: optional explicit repartition width at ingest
-    * (0 = none — the default: an input-wide shuffle buys nothing the
-    * downstream needs, since the media branch re-shuffles by
-    * content_hash at pinned width and the assembly groupBy shuffles by
-    * doc_id anyway; scan-split granularity governs map-side
-    * parallelism). Set > 0 only for pathological inputs (e.g. one
-    * giant unsplittable file).
+  /** Pipeline knobs.
+    *  - quality (v2, `app2.py:854-863`): low | medium | high, or v1 for
+    *    the reference-v1 chain; selects the preprocess chain, the OCR
+    *    engine mode and the resize cap. Any other value is rejected at
+    *    plan time.
+    *  - outputBuckets: the commit units of [[runResumable]] (doc_id
+    *    hash buckets).
+    *  - maxMediaBytes: the S3 size cap (MAX_CONTENT_LENGTH = 16 MB,
+    *    `app.py:230`); a larger item yields an empty span, confidence 0.
+    *  - language: the decode tables (`-l {language}`, `app.py:579`).
+    *  - preStages: OPT-IN raster pre-stages from
+    *    [[graft.ocr.OcrEngine.PreStages]] ("deskew", "denoise"), applied
+    *    in order before the quality chain. The north_star prose names
+    *    both; the reference CODE has neither (SURVEY discrepancy note),
+    *    so the default is OFF — span-equality fixtures are unchanged
+    *    unless a deployment opts in for crooked/speckled scans.
     */
   final case class Config(
       quality: String = "medium",
-      saltBuckets: Int = 8,
       outputBuckets: Int = 64,
-      inputPartitions: Int = 0,
       maxMediaBytes: Long = 16L * 1024 * 1024,
       language: String = "eng",
-      // OPT-IN raster pre-stages, applied in order before the quality
-      // chain: "deskew" (Hough-vote angle estimate + rotate-out) and
-      // "denoise" (3x3 median). The north_star prose names both; the
-      // reference CODE has neither (SURVEY discrepancy note), so the
-      // default is OFF — span-equality fixtures are unchanged unless a
-      // deployment opts in for crooked/speckled scans.
       preStages: Seq[String] = Nil)
+
+  /** Fan-out of the salted media join-back in [[extractSpans]]. */
+  final val SaltBuckets = 8
 
   def preprocessModeFor(quality: String): String = quality match {
     // v2 quality -> preprocess chain (`app2.py:556-558`, `app2.py:1016-1017`):
@@ -72,7 +72,8 @@ object ExtractJob {
     case "high" => "quality"
     case "medium" => "balanced"
     case "v1" => "default"
-    case _ => "balanced"
+    case q => throw new IllegalArgumentException(
+      s"unknown quality '$q' (supported: low, medium, high, v1)")
   }
 
   /** quality -> OCR engine mode (the v2 tesseract-config table,
@@ -104,6 +105,38 @@ object ExtractJob {
       val d = engine.decode(bytes, quality, ocrMode, preStages)
       (d.text, d.avgConfidence)
     }
+
+  /** Plan-time check of a [[Config]], shared by the batch and streaming
+    * forms: at 10^12 docs a bad config must fail on the driver, not as
+    * per-task failures (x retries x tasks) deep into the job. An
+    * unknown quality or pre-stage is a typo, not a request for the
+    * default; an unknown language throws `fontFor`'s tesseract-style
+    * missing-traineddata error.
+    */
+  private[graft] def checkConfig(cfg: Config): Unit = {
+    preprocessModeFor(cfg.quality): Unit
+    graft.codec.Glyphs.fontFor(cfg.language): Unit
+    cfg.preStages.foreach { s =>
+      require(OcrEngine.PreStages.contains(s),
+        s"unknown preStage '$s' (supported: ${OcrEngine.PreStages.keys.toSeq.sorted.mkString(", ")})")
+    }
+  }
+
+  /** The OCR kernel both forms run inside `mapPartitions`; call it once
+    * per task. It resolves quality -> (chain, engine mode), fetches the
+    * executor's engine from [[EnginePool]] (the reference threads
+    * `language` into every OCR call, `-l {language}`, app.py:579; here
+    * it selects the engine's decode tables), and returns the task's
+    * decode function: (content hash, bytes) -> (text, confidence),
+    * memoized per content hash.
+    */
+  private[graft] def ocrKernel(cfg: Config): (String, Array[Byte]) => (String, Double) = {
+    val ocrMode = ocrModeFor(cfg.quality)
+    val engine = EnginePool.get(preprocessModeFor(cfg.quality), cfg.language)
+    val memo = scala.collection.mutable.HashMap.empty[String, (String, Double)]
+    (hash, bytes) => memo.getOrElseUpdate(hash,
+      decodeMedia(engine, bytes, cfg.quality, ocrMode, cfg.preStages))
+  }
 
   /** (doc_id, kind, text, media_ref, offset) span rows — explode_outer
     * so a doc with an empty/null spans array still emits a (null-kind)
@@ -151,26 +184,13 @@ object ExtractJob {
   def extractSpans(spark: SparkSession, docs: DataFrame, media: DataFrame,
                    cfg: Config = Config()): DataFrame = {
     import spark.implicits._
-    // fail fast on an unknown language AT PLAN TIME: at 10^12 docs a bad
-    // config must not surface as per-task failures (x retries x tasks)
-    // deep into the job — fontFor throws the tesseract-style
-    // missing-traineddata error on the driver instead. Same invariant
-    // for preStages: a typo'd stage name must fail here, not in every
-    // task's first decode.
-    graft.codec.Glyphs.fontFor(cfg.language): Unit
-    cfg.preStages.foreach { s =>
-      require(Set("deskew", "denoise", "median").contains(s),
-        s"unknown preStage '$s' (supported: deskew, denoise, median)")
-    }
+    checkConfig(cfg)
 
     val nParts = spark.sparkContext.defaultParallelism * 2
     // explode_outer: a doc with an empty/null spans array still emits a
     // (null-kind) row — "one output row per input document" must hold
     // on adversarial input, not just the fixture corpus.
-    val maybeRepartitioned =
-      if (cfg.inputPartitions > 0) docs.repartition(cfg.inputPartitions, $"doc_id")
-      else docs
-    val exploded = explodedSpans(maybeRepartitioned)
+    val exploded = explodedSpans(docs)
     val textOut = textBranch(exploded)
 
     // --- media branch
@@ -194,14 +214,6 @@ object ExtractJob {
     // SortAggregate over the binary column and a second media scan for
     // the ref->hash side).
     val neededRefs = mediaSpans.select($"media_ref").distinct()
-    val mode = preprocessModeFor(cfg.quality)
-    val ocrMode = ocrModeFor(cfg.quality)
-    val quality = cfg.quality
-    // the reference threads `language` into every OCR call
-    // (`-l {language}`, app.py:579); here it selects the per-executor
-    // engine's decode tables (mode x language grid in EnginePool)
-    val language = cfg.language
-    val preStages = cfg.preStages
     val refOcr = media
       .filter(length($"bytes") <= cfg.maxMediaBytes)
       .join(neededRefs, Seq("media_ref"), "left_semi")
@@ -209,31 +221,26 @@ object ExtractJob {
       .repartition(nParts, $"content_hash")
       .as[(String, Array[Byte], String)]
       .mapPartitions { it =>
-        val engine = EnginePool.get(mode, language) // lazy per-executor engine pool
-        val memo = scala.collection.mutable.HashMap.empty[String, OcrRow]
+        val ocr = ocrKernel(cfg)
         it.map { case (ref, bytes, h) =>
-          val r = memo.getOrElseUpdate(h, {
-            val (text, conf) = decodeMedia(engine, bytes, quality, ocrMode, preStages)
-            OcrRow(h, text, conf)
-          })
-          RefOcr(ref, r.ocr_text, r.ocr_conf)
+          val (text, conf) = ocr(h, bytes)
+          RefOcr(ref, text, conf)
         }
       }
       .toDF()
 
     // salted join back: explode the small (one row per distinct ref)
-    // side saltBuckets ways, key the span side by a uniform salt —
-    // Zipf-hot refs spread across saltBuckets tasks. AQE skew-join
+    // side SaltBuckets ways, key the span side by a uniform salt —
+    // Zipf-hot refs spread across SaltBuckets tasks. AQE skew-join
     // remains enabled on top.
-    val s = math.max(1, cfg.saltBuckets)
     val saltedOcr = refOcr
-      .withColumn("salt", explode(lit((0 until s).toArray)))
+      .withColumn("salt", explode(lit((0 until SaltBuckets).toArray)))
     // LEFT join: a dangling or size-capped media_ref must surface as
     // an empty span with confidence 0 (the reference's OCR-failure
     // shape, app.py:602), never silently drop the span from the
     // sequence — the north rule checks order completeness.
     val mediaOut = mediaSpans
-      .withColumn("salt", pmod(xxhash64($"doc_id", $"offset"), lit(s)).cast("int"))
+      .withColumn("salt", pmod(xxhash64($"doc_id", $"offset"), lit(SaltBuckets)).cast("int"))
       .join(saltedOcr, Seq("media_ref", "salt"), "left")
       .select($"doc_id", $"kind",
         coalesce($"ocr_text", lit("")).as("text"),

@@ -38,16 +38,26 @@ object Health {
     // pdf path probe (the poppler check analog)
     val pdfOk = graft.ops.Multimodal.pdfPages(
       graft.ops.Multimodal.synthPdf(Seq("p0", "p1"), 7L)).length == 2
-    val (buckets, docs) =
-      if (manifestPath.isEmpty) (0L, 0L)
-      else
-        try {
-          val m = spark.read.parquet(manifestPath)
-          (m.count(), m.agg(sum($"doc_count")).head().getLong(0))
-        } catch { case _: Throwable => (0L, 0L) }
+    // live counters: an absent manifest is a fresh deployment (zero
+    // counters); one that exists but cannot be read is unhealthy, never
+    // "0 committed docs, success"
+    val manifest: Either[String, (Long, Long)] =
+      if (manifestPath.isEmpty) Right((0L, 0L))
+      else {
+        val p = new org.apache.hadoop.fs.Path(manifestPath)
+        if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) Right((0L, 0L))
+        else
+          try {
+            val m = spark.read.parquet(manifestPath)
+            Right((m.count(), m.agg(coalesce(sum($"doc_count"), lit(0L))).head().getLong(0)))
+          } catch { case e: Exception => Left(s"manifest unreadable: ${e.getMessage}") }
+      }
+    val (buckets, docs) = manifest.getOrElse((0L, 0L))
+    val problem =
+      if (!engineOk || !pdfOk) Some("engine probe failed") else manifest.left.toOption
     Seq((
-      if (engineOk && pdfOk) "success" else "error",
-      if (engineOk && pdfOk) "OCR engine is healthy" else "engine probe failed",
+      if (problem.isEmpty) "success" else "error",
+      problem.getOrElse("OCR engine is healthy"),
       s"graft-glyph-matrix/${graft.codec.Glyphs.alphabet.length}", // tesseract_version
       langs.mkString(","), // the traineddata list
       pdfOk, // poppler analog

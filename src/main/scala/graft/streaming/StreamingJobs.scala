@@ -60,8 +60,9 @@ object StreamingJobs {
     * lookup side, the documents flow). Fully append-mode stateless:
     * explode + text branch are the same shared stages as the batch job
     * ([[graft.pipe.ExtractJob.explodedSpans]]/`textBranch`); the media
-    * branch joins bytes and OCRs in `mapPartitions` with the
-    * per-executor engine pool and a per-task content-hash memo (the
+    * branch joins bytes and OCRs in `mapPartitions` with the batch
+    * form's kernel ([[graft.pipe.ExtractJob.ocrKernel]]: per-executor
+    * engine pool, per-task content-hash memo — the
     * streaming analog of the reference's TTL OCR cache: repeated
     * content inside a micro-batch decodes once per task; batch mode
     * keeps the stronger global decode-once via its content-hash
@@ -78,40 +79,29 @@ object StreamingJobs {
                               graft.pipe.ExtractJob.Config()): DataFrame = {
     import spark.implicits._
     import graft.pipe.ExtractJob
-    // same plan-time fail-fast as the batch twin (ExtractJob
-    // .extractSpans): an unknown language must throw on the driver,
-    // not as per-task failures in every micro-batch
-    graft.codec.Glyphs.fontFor(cfg.language): Unit
+    // the batch form's plan-time check: a bad config throws on the
+    // driver, not as per-task failures in every micro-batch
+    ExtractJob.checkConfig(cfg)
     val docs = spark.readStream.schema(docsSchema).parquet(docsDir)
     val exploded = ExtractJob.explodedSpans(docs)
     val textOut = ExtractJob.textBranch(exploded)
 
-    val mode = ExtractJob.preprocessModeFor(cfg.quality)
-    val ocrMode = ExtractJob.ocrModeFor(cfg.quality)
-    val quality = cfg.quality
-    val language = cfg.language
-    val preStages = cfg.preStages
     val mediaOut = exploded
       .filter($"kind" === "media")
       .select($"doc_id", $"kind", $"media_ref", $"offset")
       .join(media.filter(length($"bytes") <= cfg.maxMediaBytes), Seq("media_ref"), "left")
-      .select($"doc_id", $"media_ref", $"offset", $"bytes")
+      .select($"doc_id", $"media_ref", $"offset", $"bytes",
+        sha2($"bytes", 256).as("content_hash"))
       // Option[Int], not Int: a null span offset (nullable in parquet)
       // must flow through like the batch path does, not kill the
       // micro-batch in the deserializer
-      .as[(String, String, Option[Int], Array[Byte])]
+      .as[(String, String, Option[Int], Array[Byte], String)]
       .mapPartitions { it =>
-        val engine = graft.ocr.EnginePool.get(mode, language)
-        val memo = scala.collection.mutable.HashMap.empty[String, (String, Double)]
-        it.map { case (docId, ref, offset, bytes) =>
+        val ocr = ExtractJob.ocrKernel(cfg)
+        it.map { case (docId, ref, offset, bytes, h) =>
           val (text, conf) =
             if (bytes == null) ("", 0.0) // dangling ref: empty span, conf 0
-            else {
-              val h = java.security.MessageDigest.getInstance("SHA-256")
-                .digest(bytes).map(b => f"$b%02x").mkString
-              memo.getOrElseUpdate(h,
-                ExtractJob.decodeMedia(engine, bytes, quality, ocrMode, preStages))
-            }
+            else ocr(h, bytes)
           (docId, "media", text, ref, offset, conf)
         }
       }

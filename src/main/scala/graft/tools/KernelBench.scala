@@ -36,7 +36,7 @@ object KernelBench {
       var r = 0
       while (r < reps) {
         val t0 = System.nanoTime()
-        sink ^= body
+        sink = body // the last rep's value: a ref and its kernel must print the same
         val dt = (System.nanoTime() - t0) / 1e9
         if (dt < best) best = dt
         r += 1
@@ -76,8 +76,14 @@ object KernelBench {
       val pieces = SENT.split(u.toString, -1)
       var acc = 0L; var i = 0
       while (i < pieces.length) {
-        val p = pieces(i).trim // close enough for timing; ref is the regex split cost
-        if (p.nonEmpty) acc += p.length
+        // strip 0x20 only, like the shipped splitter's SQL trim, so the
+        // two sinks printed below must agree
+        val p = pieces(i)
+        var a = 0
+        var e = p.length
+        while (a < e && p.charAt(a) == ' ') a += 1
+        while (e > a && p.charAt(e - 1) == ' ') e -= 1
+        acc += e - a
         i += 1
       }
       acc
@@ -113,39 +119,6 @@ object KernelBench {
     time("sentSplit regex (ref)") { utf8.foldLeft(0L)((a, u) => a + refSent(u)) }
     time("sentSplit byte-scan") { utf8.foldLeft(0L)((a, u) => a + sumArr(graft.functions.TextKernels.sentenceSplitSql(u))) }
 
-    // image-kernel section: the OCR preprocess chain over rasters
-    // rendered from the first docs (the flagship's real image shapes)
-    {
-      val px = texts.take(200).zipWithIndex.map { case (t, i) =>
-        val bytes = graft.codec.SynthRaster.render(t, i.toLong)
-        val (w, h, g) = graft.img.ImageCodec.decode(bytes)
-        (g, w, h)
-      }
-      val totalPx = px.map { case (_, w, h) => w.toLong * h }.sum
-      def timeImg(name: String)(body: => Long): Unit = {
-        var best = Double.MaxValue
-        var sink = 0L
-        var r = 0
-        while (r < reps) {
-          val t0 = System.nanoTime()
-          sink ^= body
-          val dt = (System.nanoTime() - t0) / 1e9
-          if (dt < best) best = dt
-          r += 1
-        }
-        println(f"[kernelbench] $name%-28s best ${best * 1000}%8.2f ms  ${totalPx / best / 1e6}%8.1f Mpx/s  (sink $sink)")
-      }
-      timeImg("blur3+otsu unfused (ref)") {
-        px.foldLeft(0L) { case (a, (g, w, h)) =>
-          a + graft.img.ImageOps.thresholdOtsu(graft.img.ImageOps.gaussianBlur(g, w, h, 3))(0)
-        }
-      }
-      timeImg("blurOtsu fused") {
-        px.foldLeft(0L) { case (a, (g, w, h)) =>
-          a + graft.img.ImageOps.blurOtsu(g, w, h, 3)(0)
-        }
-      }
-    }
     spark.stop()
   }
 }

@@ -405,17 +405,43 @@ object GraftProps extends Properties("graft") {
     }
   }
 
-  property("blurOtsu == thresholdOtsu(gaussianBlur) bit-for-bit, incl. degenerates") =
-    forAll(Gen.choose(1, 40), Gen.choose(1, 40), Gen.oneOf(3, 5), Gen.oneOf(true, false),
-      Gen.choose(0L, Long.MaxValue)) { (w, h, k, inv, seed) =>
+  // random images mixing low-contrast (all-near-128) and full-range
+  // pixels so both the guard branch and the otsu branch are exercised
+  private val images: Gen[(Int, Int, Array[Int])] =
+    for (w <- Gen.choose(1, 40); h <- Gen.choose(1, 40); seed <- Gen.choose(0L, Long.MaxValue))
+    yield {
       val rnd = new scala.util.Random(seed)
-      // mix low-contrast (all-near-128) and full-range images so both
-      // the guard branch and the otsu branch are exercised
-      val px = if (seed % 3 == 0) Array.fill(w * h)(120 + rnd.nextInt(8))
-               else Array.fill(w * h)(rnd.nextInt(256))
-      val want = ImageOps.thresholdOtsu(ImageOps.gaussianBlur(px, w, h, k), inv)
-      val got = ImageOps.blurOtsu(px, w, h, k, inv)
-      got.toSeq == want.toSeq
+      (w, h, if (seed % 3 == 0) Array.fill(w * h)(120 + rnd.nextInt(8))
+             else Array.fill(w * h)(rnd.nextInt(256)))
+    }
+
+  property("blurOtsu == thresholdOtsu(gaussianBlur) bit-for-bit, incl. degenerates") =
+    forAll(images, Gen.oneOf(3, 5)) { case ((w, h, px), k) =>
+      val bl = ImageOps.gaussianBlur(px, w, h, k)
+      val (got, t) = ImageOps.blurOtsu(px, w, h, k)
+      got.toSeq == ImageOps.thresholdOtsu(bl).toSeq &&
+        t == (if (ImageOps.lowContrast(bl)) -1 else ImageOps.otsuThreshold(bl))
+    }
+
+  /** The unfused reference composition of each preprocess chain
+    * (`app.py:521-548`) with the global threshold it used.
+    */
+  private def preprocessRef(px: Array[Int], w: Int, h: Int, mode: String): (Array[Int], Int) =
+    mode match {
+      case "fast" => (ImageOps.thresholdGlobal(px, 128), 128)
+      case "balanced" =>
+        (ImageOps.adaptiveGaussian(ImageOps.gaussianBlur(px, w, h, 3), w, h, 11, 2.0), -1)
+      case m =>
+        val bl = ImageOps.gaussianBlur(px, w, h, if (m == "quality") 5 else 3)
+        val t = if (ImageOps.lowContrast(bl)) -1 else ImageOps.otsuThreshold(bl)
+        (ImageOps.morphClose(ImageOps.thresholdOtsu(bl), w, h, 1, 1), t)
+    }
+
+  property("preprocess == the unfused reference chain in every mode") =
+    forAll(images, Gen.oneOf("fast", "balanced", "quality", "default")) { case ((w, h, px), mode) =>
+      val (got, t) = graft.ocr.OcrEngine.preprocess(px, w, h, mode)
+      val (want, wantT) = preprocessRef(px, w, h, mode)
+      got.toSeq == want.toSeq && t == wantT
     }
 
   property("splitSentencesRaw char scan == lookbehind regex split on any string") = {

@@ -188,6 +188,33 @@ class PipelineSpec extends AnyFunSuite {
     assert(live.getLong(live.fieldIndex("committed_buckets")) >= 1L)
   }
 
+  test("health reports an unreadable manifest as error, an absent one as empty") {
+    val absent = graft.pipe.Health.check(spark, "/nonexistent/graft-health/manifest").collect()(0)
+    assert(absent.getString(0) == "success")
+    assert(absent.getLong(absent.fieldIndex("committed_docs")) == 0L)
+
+    val manifestDir = java.nio.file.Files.createTempDirectory("graft-health-corrupt")
+    java.nio.file.Files.write(manifestDir.resolve("part-corrupt.parquet"), "not parquet".getBytes)
+    val bad = graft.pipe.Health.check(spark, manifestDir.toString).collect()(0)
+    assert(bad.getString(0) == "error")
+    assert(bad.getString(bad.fieldIndex("message")).contains("manifest unreadable"))
+  }
+
+  test("batch extraction fails fast on an unknown language, quality or preStage at plan time") {
+    import spark.implicits._
+    val docs = spark.createDataset(Seq(
+      graft.gen.InDoc("ff-0", Seq(graft.gen.InSpan("text", "doc", "", 0))))).toDF()
+    val media = Seq.empty[(String, Array[Byte])].toDF("media_ref", "bytes")
+    val cfg = ExtractJob.Config()
+    Seq(cfg.copy(language = "xyz") -> "unknown language",
+        cfg.copy(quality = "hgih") -> "unknown quality",
+        cfg.copy(preStages = Seq("deskew", "median")) -> "unknown preStage").foreach {
+      case (bad, msg) =>
+        val ex = intercept[IllegalArgumentException](ExtractJob.extractSpans(spark, docs, media, bad))
+        assert(ex.getMessage.contains(msg), ex.getMessage)
+    }
+  }
+
   test("resumable run never re-reads the output path (single-pass manifest via observe)") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec

@@ -58,7 +58,7 @@ class PlanSpec extends AnyFunSuite {
   test("extract pipeline: distinct-content OCR join is salted, spans splice has no extra shuffle") {
     val docs = Corpus.documents(spark, sfDir).toDF()
     val media = Corpus.media(spark, sfDir).toDF()
-    val spans = ExtractJob.extractSpans(spark, docs, media, ExtractJob.Config(saltBuckets = 8))
+    val spans = ExtractJob.extractSpans(spark, docs, media)
     val plan = spans.queryExecution.optimizedPlan.toString
     assert(plan.contains("salt"), s"salt key missing from media join:\n$plan")
     // text branch must not touch media/bytes at all

@@ -158,12 +158,17 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming extraction fails fast on an unknown language at plan time (batch parity)") {
     import spark.implicits._
     val media = Seq.empty[(String, Array[Byte])].toDF("media_ref", "bytes")
-    val ex = intercept[IllegalArgumentException] {
-      StreamingJobs.extractSpansStreaming(spark, "/tmp/nonexistent-dir",
-        org.apache.spark.sql.types.StructType(Seq.empty), media,
-        graft.pipe.ExtractJob.Config(language = "xyz"))
+    val cfg = graft.pipe.ExtractJob.Config()
+    Seq(cfg.copy(language = "xyz") -> "unknown language",
+        cfg.copy(quality = "hgih") -> "unknown quality",
+        cfg.copy(preStages = Seq("deskew", "median")) -> "unknown preStage").foreach {
+      case (bad, msg) =>
+        val ex = intercept[IllegalArgumentException] {
+          StreamingJobs.extractSpansStreaming(spark, "/tmp/nonexistent-dir",
+            org.apache.spark.sql.types.StructType(Seq.empty), media, bad)
+        }
+        assert(ex.getMessage.contains(msg), ex.getMessage)
     }
-    assert(ex.getMessage.contains("unknown language"))
   }
 
   test("streaming dedup: one survivor per fingerprint, set equals batch exact dedup") {
