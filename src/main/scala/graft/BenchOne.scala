@@ -1,19 +1,21 @@
 package graft
 
-import graft.pipe.ExtractJob
-import org.apache.spark.sql.SparkSession
+import graft.tools.Dev
 
 /** One bench level as a persistent server JVM.
   *
   * `BenchOne <cores> <docsPath> <mediaPath>` starts a local[cores]
-  * session, runs ONE warmup (JIT + glyph-calibration + scan warmup),
-  * prints `[benchone] ready`, then serves commands on stdin:
+  * session ([[Dev.session]]), runs TWO warmups (JIT + glyph-calibration
+  * + scan warmup), prints `[benchone] ready`, then serves commands on
+  * stdin:
   *
   *   run   -> one full `ExtractJob.runResumable` (the manifest-committed
   *            pipeline — the north_rule headline) into a fresh output
-  *            dir; prints `[benchone] cores=C docs=D sec=S` (seconds =
-  *            the pipeline only; output-dir cleanup is outside the
-  *            timed region)
+  *            dir; prints `[benchone] cores=C docs=D sec=S cpu=P`
+  *            (seconds = the pipeline only; output-dir cleanup is
+  *            outside the timed region)
+  *   calib -> pure whole-stage-codegen compute; prints
+  *            `[benchone] calib cores=C sec=S`
   *   quit  -> stop the session and exit
   *
   * The parent interleaves `run`s between an N-core and a 4N-core server
@@ -22,93 +24,14 @@ import org.apache.spark.sql.SparkSession
   */
 object BenchOne {
 
-  private def deleteRec(f: java.io.File): Unit = {
-    val fs = f.listFiles()
-    if (fs != null) fs.foreach(deleteRec)
-    f.delete(): Unit
-  }
-
   def main(args: Array[String]): Unit = {
     val cores = args(0).toInt
-    val docsPath = args(1)
-    val mediaPath = args(2)
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_SHUFFLE_PARTS", (cores * 2).toString))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("GRAFT_MAX_PART_BYTES", (1024 * 1024).toString))
-      // the corpus is tiny in BYTES relative to per-row cost; AQE's
-      // 64 MB default advisory size coalesces shuffle stages to ~11
-      // partitions (ragged 1.4-wave packing on 8 cores). 1 MB keeps
-      // stage width at shuffle.partitions — clean waves. A real
-      // cluster at full scale never hits this (partitions >> cores).
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("GRAFT_ADVISORY_BYTES", (1024 * 1024).toString))
-      // task-commit renames on task completion (v2) instead of a
-      // SERIAL driver-side rename pass at job commit (v1): the v1
-      // pass over 64 bucket dirs is a fixed driver fraction that the
-      // 4N leg pays at 4x relative weight (it cannot parallelize with
-      // cores). BENCH-ONLY setting (round-5 ADVICE): v2's task-side
-      // commit is NOT atomic under task failure/speculation and can
-      // leave partial or duplicated files — acceptable in this
-      // throwaway-output bench JVM, but do NOT copy it into
-      // ExtractJob/production writer configs, where output integrity
-      // depends on the v1 job-commit protocol (or a real table
-      // format's commit)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    if (sys.env.contains("GRAFT_STAGE_LOG")) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val i = sc.stageInfo
-          val dur = for {a <- i.completionTime; b <- i.submissionTime} yield a - b
-          val m = i.taskMetrics
-          System.err.println(f"[stage] id=${i.stageId}%4d tasks=${i.numTasks}%4d " +
-            f"dur=${dur.getOrElse(-1L)}%6d ms run=${m.executorRunTime}%6d " +
-            f"cpu=${m.executorCpuTime / 1000000}%6d gc=${m.jvmGCTime}%5d " +
-            f"spill=${(m.memoryBytesSpilled + m.diskBytesSpilled) / (1 << 20)}%4d MB " +
-            f"${i.name.takeWhile(_ != '\n').take(60)}")
-        }
-      })
-    }
-
-    val base = java.nio.file.Files.createTempDirectory(s"graft_benchone_$cores").toFile
-    var runId = 0
-
-    /** Process CPU seconds — the wall-vs-CPU gap exposes host-level
-      * descheduling that this guest's /proc/stat steal field does NOT
-      * report (vCPU jiffies freeze while the host runs someone else).
-      */
-    def cpuSec(): Double =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-        case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime / 1e9
-        case _ => -1.0
-      }
-
+    val spark = Dev.session(cores, s"graft-bench-$cores")
     // read once: schema inference (a footer job) is not part of the
     // per-run pipeline; the DataFrames are immutable plans, re-executed
     // fresh by every run
-    val docs = spark.read.parquet(docsPath)
-    val media = spark.read.parquet(mediaPath)
-
-    def once(): (Long, Double, Double) = {
-      runId += 1
-      val outDir = new java.io.File(base, s"run_$runId")
-      val c0 = cpuSec()
-      val t0 = System.nanoTime()
-      val summary = ExtractJob.runResumable(spark, docs, media, outDir.getAbsolutePath)
-      val dt = (System.nanoTime() - t0) / 1e9
-      val dc = cpuSec() - c0
-      deleteRec(outDir) // outside the timed region
-      (summary.docCount, dt, dc)
-    }
+    val runs = new Dev.Runs(spark, spark.read.parquet(args(1)), spark.read.parquet(args(2)),
+      s"graft_benchone_$cores")
 
     // TWO warmup runs: the first pays scan/codegen/glyph-calibration
     // setup, but C2 is still compiling the kernel hot loops through
@@ -117,14 +40,14 @@ object BenchOne {
     // quiet window — pure JIT tail, which a pair-based efficiency
     // metric then misreads as scaling). The second run executes the
     // compiled code and leaves the first measured pair unbiased.
-    once(); once()
+    runs.once(); runs.once()
     println("[benchone] ready"); System.out.flush()
     val in = new java.io.BufferedReader(new java.io.InputStreamReader(System.in))
     var line = in.readLine()
     while (line != null && line.trim != "quit") {
       if (line.trim == "run") {
-        val (docs, sec, cpu) = once()
-        println(f"[benchone] cores=$cores docs=$docs sec=$sec%.3f cpu=$cpu%.3f")
+        val t = runs.once()
+        println(f"[benchone] cores=$cores docs=${t.docs} sec=${t.sec}%.3f cpu=${t.cpu}%.3f")
         System.out.flush()
       } else if (line.trim == "calib") {
         // pure whole-stage-codegen compute (no kernel, no shuffle, no
@@ -141,7 +64,7 @@ object BenchOne {
       }
       line = in.readLine()
     }
-    deleteRec(base)
+    runs.close()
     spark.stop()
   }
 }

@@ -83,15 +83,25 @@ object Multimodal {
     out.toByteArray
   }
 
-  /** Pages of a 'GPDF' container (raster bytes, in order). */
+  /** Pages of a 'GPDF' container (raster bytes, in order). The page
+    * count and lengths are input, not trusted: a count or length that
+    * does not fit the container throws IllegalArgumentException
+    * instead of over-reading or looping in place.
+    */
   def pdfPages(bytes: Array[Byte]): Vector[Array[Byte]] = {
-    require(kindOf(bytes) == "pdf", "not a pdf container")
+    require(kindOf(bytes) == "pdf" && bytes.length >= 8, "not a pdf container")
     val n = i32(bytes, 4)
+    // each page record holds at least its 4-byte length
+    require(n >= 0 && n <= (bytes.length - 8) / 4,
+      s"pdf page count $n does not fit a ${bytes.length}-byte container")
     var off = 8
     val out = Vector.newBuilder[Array[Byte]]
     var p = 0
     while (p < n) {
+      require(bytes.length - off >= 4, s"pdf container truncated at page $p")
       val len = i32(bytes, off)
+      require(len >= 0 && len <= bytes.length - off - 4,
+        s"pdf page $p length $len overruns the ${bytes.length}-byte container")
       out += bytes.slice(off + 4, off + 4 + len)
       off += 4 + len
       p += 1

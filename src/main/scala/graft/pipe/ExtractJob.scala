@@ -3,6 +3,7 @@ package graft.pipe
 import graft.ocr.{EnginePool, OcrEngine}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Per-ref kernel output (one row per needed media_ref). Top-level (not
   * nested in the object): a nested case class carries an outer pointer
@@ -62,6 +63,8 @@ object ExtractJob {
 
   /** Fan-out of the salted media join-back in [[extractSpans]]. */
   final val SaltBuckets = 8
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.pipe.ExtractJob")
 
   def preprocessModeFor(quality: String): String = quality match {
     // v2 quality -> preprocess chain (`app2.py:556-558`, `app2.py:1016-1017`):
@@ -128,14 +131,22 @@ object ExtractJob {
     * `language` into every OCR call, `-l {language}`, app.py:579; here
     * it selects the engine's decode tables), and returns the task's
     * decode function: (content hash, bytes) -> (text, confidence),
-    * memoized per content hash.
+    * memoized per content hash. An item that fails to decode (corrupt
+    * or truncated bytes, a malformed container) yields ("", 0.0), the
+    * reference's OCR-failure shape (app.py:602), with one WARN line:
+    * one poison item must not fail the task, and with it the job.
     */
   private[graft] def ocrKernel(cfg: Config): (String, Array[Byte]) => (String, Double) = {
     val ocrMode = ocrModeFor(cfg.quality)
     val engine = EnginePool.get(preprocessModeFor(cfg.quality), cfg.language)
     val memo = scala.collection.mutable.HashMap.empty[String, (String, Double)]
     (hash, bytes) => memo.getOrElseUpdate(hash,
-      decodeMedia(engine, bytes, cfg.quality, ocrMode, cfg.preStages))
+      try decodeMedia(engine, bytes, cfg.quality, ocrMode, cfg.preStages)
+      catch {
+        case NonFatal(e) =>
+          log.warn(s"media decode failed: content_hash=$hash ${e.getClass.getName}")
+          ("", 0.0)
+      })
   }
 
   /** (doc_id, kind, text, media_ref, offset) span rows — explode_outer

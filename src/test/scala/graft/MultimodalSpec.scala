@@ -116,6 +116,24 @@ class MultimodalSpec extends AnyFunSuite {
     val expected = perPage.filter(_ > 0)
     assert(math.abs(conf - expected.sum / expected.size) < 1e-9)
     assert(perPage.last == 0.0)
+
+    // valid containers round-trip page by page
+    Seq(Nil, Seq("one"), texts).foreach { ts =>
+      val pages = Multimodal.pdfPages(Multimodal.synthPdf(ts, seed = 5L))
+      assert(pages.map(_.toSeq) == ts.zipWithIndex.map { case (t, i) =>
+        SynthRaster.render(t, graft.util.Det.at(5L, i.toLong)).toSeq })
+    }
+    // malformed containers throw IllegalArgumentException promptly:
+    // every strict prefix (truncated header, count, length or page),
+    // a page count that cannot fit, and a negative page length
+    def header(n: Int, len: Int) = Array[Byte]('G', 'P', 'D', 'F') ++
+      Seq(n, len).flatMap(v => Seq(v >>> 24, v >>> 16, v >>> 8, v).map(_.toByte))
+    val malformed = (4 until pdf.length).map(pdf.take) ++ Seq(
+      header(Int.MaxValue, -4) ++ new Array[Byte](4),
+      header(1, -4) ++ new Array[Byte](4))
+    val t0 = System.nanoTime()
+    malformed.foreach(b => intercept[IllegalArgumentException](Multimodal.pdfPages(b)))
+    assert((System.nanoTime() - t0) / 1e9 < 5.0, "malformed containers rejected promptly")
   }
 
   test("extract pipeline reads pdf media spans end-to-end") {

@@ -253,20 +253,50 @@ class PipelineSpec extends AnyFunSuite {
   test("doc preservation: empty spans / all-unknown kinds still yield one output row each") {
     import spark.implicits._
     import graft.gen.{InDoc, InSpan, MediaRow}
-    val docs = Seq(
+    // poison media: each one throws in decode or in the container parse
+    val pdf = graft.ops.Multimodal.synthPdf(Seq("alpha page", "beta page"), 5L)
+    val poison = Seq(
+      "bad-jpeg4" -> Array(0xFF, 0xD8, 0xFF, 0xE0).map(_.toByte), // JPEG SOI + APP0 marker, no body
+      "bad-empty" -> Array.empty[Byte],
+      "bad-pdf-truncated" -> pdf.dropRight(1),
+      "bad-pdf-neglen" -> (Array[Byte]('G', 'P', 'D', 'F', 0x7F, -1, -1, -1, -1, -1, -1, -4) ++
+        new Array[Byte](4))) // page count Int.MaxValue, first page length -4
+    val cleanBytes = graft.codec.SynthRaster.render(Corpus.mediaTextFor(3), 33L)
+    val media = (("clean", cleanBytes) +: poison)
+      .map { case (r, b) => MediaRow(r, b) }.toDS().toDF()
+    val poisonDocs = poison.map { case (r, _) =>
+      InDoc(s"d-$r", Seq(InSpan("text", "before  it", "", 0), InSpan("media", "", r, 1),
+        InSpan("media", "", "clean", 2), InSpan("text", "after it", "", 3)))
+    }
+    val docs = (Seq(
       InDoc("d-empty", Seq.empty),
       InDoc("d-unknown", Seq(InSpan("blob", "xx", "", 0), InSpan("blob2", "yy", "", 1))),
       InDoc("d-mixed", Seq(InSpan("text", "hello  world", "", 0), InSpan("blob", "", "", 1)))
-    ).toDS().toDF()
-    val media = Seq.empty[MediaRow].toDS().toDF()
-    val out = ExtractJob.run(spark, docs, media)
-      .select(col("doc_id"), size(col("spans")).as("n"), col("text"), col("confidence"))
-      .collect().map(r => r.getString(0) -> ((r.getInt(1), r.getString(2), r.getDouble(3)))).toMap
-    assert(out.size == 3, "one output row per input document, even with no surviving spans")
+    ) ++ poisonDocs).toDS().toDF()
+    val rows = ExtractJob.run(spark, docs, media)
+      .select(col("doc_id"), col("spans"), col("text"), col("confidence")).collect()
+    val out = rows.map(r => r.getString(0) -> ((r.getSeq[Any](1).size, r.getString(2), r.getDouble(3)))).toMap
+    assert(rows.length == 3 + poison.size && out.size == rows.length,
+      "one output row per input document, even with no surviving spans or undecodable media")
     assert(out("d-empty") == ((0, "", 0.0)))
     assert(out("d-unknown") == ((0, "", 0.0)))
     assert(out("d-mixed") == ((1, "hello world", 90.0)) ||
       out("d-mixed") == ((1, "hello world", 70.0)))
+    // a poison item becomes ("", 0.0) in place; the clean spans of the
+    // same doc keep their order, and the clean media span is what the
+    // kernel decodes for that item alone
+    val (cleanText, cleanConf) = ExtractJob.decodeMedia(
+      graft.ocr.EnginePool.get("balanced"), cleanBytes, "medium", "standard")
+    assert(cleanConf > 0.0)
+    val spans = rows.map(r => r.getString(0) -> r.getSeq[org.apache.spark.sql.Row](1)
+      .map(s => (s.getString(0), s.getString(1), s.getString(2), s.getInt(3), s.getDouble(4)))).toMap
+    poisonDocs.foreach { d =>
+      assert(spans(d.doc_id) == Seq(
+        ("text", "before it", "", 0, 70.0),
+        ("media", "", d.spans(1).media_ref, 1, 0.0),
+        ("media", cleanText, "clean", 2, cleanConf),
+        ("text", "after it", "", 3, 70.0)), d.doc_id)
+    }
   }
 
   test("corpus generation is deterministic and partitioning-independent") {

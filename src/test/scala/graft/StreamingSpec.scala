@@ -131,9 +131,13 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming extraction (stream-static media join) row-equals batch extractSpans") {
     import spark.implicits._
     spark.sparkContext.setLogLevel("WARN")
+    import graft.gen.{InDoc, InSpan, MediaRow}
+    // plus one poison media row: a 4-byte JPEG header that fails to decode
     val docs = graft.gen.Corpus.documents(spark, "/root/testdata/sf0.001").toDF()
       .filter(xxhash64(col("doc_id")) % 10 === 0) // ~10% slice keeps the test fast
+      .unionByName(Seq(InDoc("d-poison", Seq(InSpan("media", "", "poison", 0)))).toDS().toDF())
     val media = graft.gen.Corpus.media(spark, "/root/testdata/sf0.001").toDF()
+      .unionByName(Seq(MediaRow("poison", Array(0xFF, 0xD8, 0xFF, 0xE0).map(_.toByte))).toDS().toDF())
     val dir = java.nio.file.Files.createTempDirectory("graft-sx")
     docs.write.mode("overwrite").parquet(s"$dir/in")
 
@@ -153,6 +157,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.length == batch.length && streamed.length > 0,
       s"rows: streamed=${streamed.length} batch=${batch.length}")
     streamed.zip(batch).foreach { case (a, b) => assert(a == b) }
+    assert(streamed.filter(_.getString(0) == "d-poison").map(_.toSeq) ===
+      Array(Seq("d-poison", 0, "media", "poison", "", 0.0)))
   }
 
   test("streaming extraction fails fast on an unknown language at plan time (batch parity)") {
