@@ -1,16 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** One-pass kernel behind [[ShingleHashes]]: tokenize -> word n-gram
+/** `graft_shingle_hashes(text, n)` in one pass: tokenize -> word n-gram
   * shingles -> distinct -> 31-bit hash, replicating the declarative
-  * chain `shingleHashes(shingles(text, n))` in [[graft.ops.Dedup]]
-  * step for step (the twin stays as the law-checked reference):
+  * chain `shingleHashes(Dedup.shingles(text, n))` (two nested
+  * higher-order transforms; the twin is law-checked in FunctionsSpec)
+  * step for step:
   *
   *  - tokens: `filter(split(lower(text), "\\W+"), _ != "")` — Spark's
   *    `lower` is `UTF8String.toLowerCase`, its `split` is the Java
@@ -23,8 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    Spark's `xxhash64` uses.
   */
 object ShingleKernel {
-  private val PRIME = 2147483647L // 2^31 - 1, Dedup.MINHASH_PRIME
-  private val SPLIT = java.util.regex.Pattern.compile("\\W+")
+  private val PRIME = 2147483647L // 2^31 - 1, the MinHash prime
 
   def eval(text: UTF8String, n: Int): ArrayData = {
     val bytes = text.getBytes
@@ -45,23 +43,11 @@ object ShingleKernel {
     * LinkedHashSet-of-strings twin does.
     */
   private def evalAscii(b: Array[Byte], n: Int): ArrayData = {
-    val len = b.length
-    val nTok = AsciiScan.countTokens(b)
-    val starts = new Array[Int](nTok)
-    val ends = new Array[Int](nTok)
-    val lb = new Array[Byte](len)
-    var i = 0
-    while (i < len) { lb(i) = AsciiScan.lower(b(i)); i += 1 }
-    var j = 0
-    i = 0
-    while (i < len) {
-      if (AsciiScan.isWord(lb(i))) {
-        starts(j) = i
-        while (i < len && AsciiScan.isWord(lb(i))) i += 1
-        ends(j) = i
-        j += 1
-      } else i += 1
-    }
+    val lb = AsciiScan.lowered(b)
+    val r = AsciiScan.runs(lb)
+    val nTok = r.length / 2
+    @inline def starts(t: Int): Int = r(2 * t)
+    @inline def ends(t: Int): Int = r(2 * t + 1)
     val shingleCount = if (nTok >= n) nTok - n + 1 else 1
     val width = if (nTok >= n) n else nTok
     // max shingle byte length bounds the scratch buffer
@@ -140,17 +126,8 @@ object ShingleKernel {
   }
 
   private def evalRegex(text: UTF8String, n: Int): ArrayData = {
-    val toks0 = SPLIT.split(text.toLowerCase.toString)
-    var nTok = 0
-    var i = 0
-    while (i < toks0.length) { if (toks0(i).nonEmpty) nTok += 1; i += 1 }
-    val toks = new Array[String](nTok)
-    var j = 0
-    i = 0
-    while (i < toks0.length) {
-      if (toks0(i).nonEmpty) { toks(j) = toks0(i); j += 1 }
-      i += 1
-    }
+    val toks = AsciiScan.lowerWords(text)
+    val nTok = toks.length
     val shingleCount = if (nTok >= n) nTok - n + 1 else 1
     val seen = new java.util.LinkedHashSet[String](shingleCount * 2)
     if (nTok >= n) {
@@ -180,32 +157,4 @@ object ShingleKernel {
     }
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
   }
-}
-
-/** `shingle_hashes(text)` — 31-bit hashes of the distinct lowercase
-  * word n-gram shingles of a document; the fused native form of
-  * `Dedup.shingleHashes(Dedup.shingles(text, n))` (two nested
-  * higher-order transforms = interpreted per-row tree walks — the
-  * round-2 x04 residual cost). Feeds [[MinHashSig]].
-  */
-case class ShingleHashes(child: Expression, n: Int) extends UnaryExpression {
-  require(n > 0, "shingle width must be positive")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType | NullType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(s"graft_shingle_hashes expects STRING, got ${other.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleKernel.eval(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ShingleKernel.eval($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
-    copy(child = newChild)
 }

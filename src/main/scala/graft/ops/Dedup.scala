@@ -20,10 +20,9 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** THE normalized-text form shared by every "same document" key
-    * (md5 fingerprint here, rolling fingerprint in TextAnalysis):
-    * lowercase + whitespace collapse + trim. One definition — the two
-    * fingerprints must never disagree about what "the same text" is.
+  /** THE normalized-text form shared by every "same document" key:
+    * lowercase + whitespace collapse + trim. One definition — keys
+    * must never disagree about what "the same text" is.
     */
   def normalizedText(text: Column): Column =
     // native one-pass collapse+trim (round-6) — byte-for-byte the old
@@ -48,8 +47,8 @@ object Dedup {
       .agg(count(lit(1)).as("n"), min(col(idCol)).as("keeper"))
 
   /** Word n-gram shingles of a document, lowercase, distinct.
-    * Gram windows are the native codegen [[graft.functions.NgramJoin]]
-    * kernel (the interpreted `transform(sequence(...))` twin is
+    * Gram windows are the native codegen [[graft.functions.NgramKernel]]
+    * (the interpreted `transform(sequence(...))` twin is
     * law-checked in FunctionsSpec); the degenerate short-doc branch
     * (fewer than n tokens -> ONE whole-doc shingle, dedup recall for
     * short docs) stays declarative.
@@ -59,33 +58,6 @@ object Dedup {
     array_distinct(
       when(size(toks) >= n, graft.functions.GraftFunctions.ngramJoin(toks, n))
         .otherwise(array(array_join(toks, " "))))
-  }
-
-  /** MinHash signature of a shingle set: k independent permutations
-    * approximated by k affine transforms of a 64-bit shingle hash.
-    * Pure column expressions — stays in codegen.
-    */
-  private val MINHASH_PRIME = 2147483647L // 2^31 - 1 (Mersenne)
-
-  /** Shingle strings -> 31-bit hash array (hash each shingle ONCE;
-    * the k permutations below reuse it — k times cheaper than hashing
-    * per permutation, and 31-bit keeps a*h+b < 2^62 under ANSI mode).
-    */
-  def shingleHashes(shingleCol: Column): Column =
-    transform(shingleCol, s => pmod(xxhash64(s), lit(MINHASH_PRIME)))
-
-  /** Declarative MinHash signature over a pre-hashed shingle array —
-    * the law-checked reference twin of the native codegen expression
-    * [[graft.functions.MinHashSig]] (which fuses the k mins into one
-    * generated loop and is what the LSH pipeline uses).
-    */
-  def minhashSignature(hashedCol: Column, k: Int = 32): Column = {
-    val sig = (0 until k).map { i =>
-      val a = (graft.util.Det.at(0x5eedL, i.toLong * 2) & 0x7fffffffL) | 1L
-      val b = graft.util.Det.at(0x5eedL, i.toLong * 2 + 1) & 0x7fffffffL
-      array_min(transform(hashedCol, h => pmod(h * lit(a) + lit(b), lit(MINHASH_PRIME))))
-    }
-    array(sig: _*)
   }
 
   /** MinHash signatures over one representative per distinct normalized
@@ -130,7 +102,7 @@ object Dedup {
       .select(col("id"), col("sig"))
 
   /** (id, sig, band, bucket) band memberships of the signatures —
-    * bucket keys by the native [[graft.functions.SigBandKeys]] fold
+    * bucket keys by the native [[graft.functions.SigKernels.bandKeys]] fold
     * (one loop per row; docs pair iff a band slice matches exactly, so
     * the key derivation only needs determinism, not a specific hash).
     */
@@ -218,7 +190,7 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       // estimate + threshold BEFORE the pair dedup: the dedup shuffle
       // then moves (id, id, double) rows, not two k-long signatures.
-      // Agreement count is the native SigAgreement loop (the zip_with
+      // Agreement count is the native agreement loop (the zip_with
       // form would be an interpreted tree walk per candidate pair).
       .withColumn("est_jaccard",
         graft.functions.GraftFunctions.sigAgreement(col("sig_a"), col("sig_b"))
@@ -230,29 +202,13 @@ object Dedup {
 
   /** 64-bit SimHash over tokens (each token hashed once; per-bit vote
     * +-1; bit set where the vote is positive). The hot path is the
-    * native codegen expression [[graft.functions.SimHash64]] — one
-    * generated loop per row; [[simhashFromHashes]] keeps the
-    * declarative higher-order-function form as the law-checked twin.
+    * native kernel [[graft.functions.SigKernels.simhash64]] — one
+    * loop per row inside whole-stage codegen; its declarative
+    * higher-order-function twin is law-checked in FunctionsSpec.
     */
   def simhash(text: Column): Column =
     graft.functions.GraftFunctions.simhash64(
       graft.functions.GraftFunctions.tokenXxhash64(text))
-
-  private val BIT_MASKS: Column =
-    array((0 until 64).map(i => lit(1L << i)): _*)
-
-  /** Declarative reference implementation of the simhash vote —
-    * semantically identical to [[graft.functions.SimHash64]]
-    * (GraftProps checks the law); the native expression is ~an order
-    * of magnitude cheaper per row.
-    */
-  def simhashFromHashes(hashedCol: Column): Column = {
-    val votes = aggregate(hashedCol, array_repeat(lit(0L), 64),
-      (acc, h) => zip_with(acc, BIT_MASKS,
-        (a, m) => a + when(h.bitwiseAND(m) =!= 0L, 1L).otherwise(-1L)))
-    aggregate(zip_with(votes, BIT_MASKS, (v, m) => when(v > 0, m).otherwise(0L)),
-      lit(0L), (a, x) => a.bitwiseOR(x))
-  }
 
   /** SimHash near-dup pairs over (id, sh) rows with GUARANTEED recall
     * at `hamming <= maxDist`: pigeonhole multi-index blocking. The 64

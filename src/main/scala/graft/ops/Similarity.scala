@@ -17,32 +17,15 @@ import graft.functions.GraftFunctions
   *    trained scale path: vectors route to their nearest centroid,
   *    queries probe nProbe centroid buckets.
   *
-  * Hot-path vector math is native codegen ([[graft.functions.CosineSim]],
-  * [[graft.functions.IvfProbes]], [[graft.functions.PlaneDots]],
-  * [[graft.functions.RhpBucket]] — one fused loop per row). The
-  * `aggregate(zip_with(...))` higher-order forms below are kept as
-  * law-checked twins: HOFs are CodegenFallback (interpreted tree walk
+  * Hot-path vector math is native codegen ([[GraftFunctions.cosineSim]],
+  * [[GraftFunctions.ivfProbes]], [[GraftFunctions.planeDots]],
+  * [[GraftFunctions.rhpBucket]] — one fused loop per row). Their
+  * `aggregate(zip_with(...))` higher-order twins are law-checked in
+  * FunctionsSpec only: HOFs are CodegenFallback (interpreted tree walk
   * per row — measured 151 s for 2,000 dim-64 IVF assignments in round
   * 2), so they must never sit on a per-row or per-candidate path.
   */
 object Similarity {
-
-  /** Law-checked HOF twin of the native kernels' dot loop — NOT for
-    * hot paths (interpreted; see class doc).
-    */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** Law-checked HOF twin of [[GraftFunctions.cosineSim]] — incl. the
-    * zero-norm contract (similarity 0, never NaN: Spark orders NaN
-    * above every number, so a NaN would win every top-k).
-    */
-  def cosine(a: Column, b: Column): Column =
-    when(norm(a) * norm(b) === 0.0, lit(0.0))
-      .otherwise(dot(a, b) / (norm(a) * norm(b)))
 
   /** Exact top-k most-similar vectors to one query vector (brute
     * force). The query is a plan literal -> broadcast by construction;
@@ -68,28 +51,9 @@ object Similarity {
   // reproducible.
   // ------------------------------------------------------------------
 
-  /** Squared-distance rank term to a centroid literal: |v-c|^2 =
-    * |v|^2 - 2 v.c + |c|^2; |v|^2 is constant per row, dropped. HOF
-    * twin of the native kernel's distance loop (same accumulation
-    * order -> bit-identical ranks).
-    */
-  private def distRank(vec: Column, c: Array[Double]): Column = {
-    val cLit = array(c.map(lit(_)): _*)
-    val c2 = c.map(x => x * x).sum
-    lit(c2) - lit(2.0) * dot(vec, cLit)
-  }
-
-  /** Law-checked HOF twin of the native [[nearestCentroid]] (first
-    * minimum wins — ties break to the lower centroid id).
-    */
-  def nearestCentroidHof(vec: Column, codebook: Array[Array[Double]]): Column = {
-    val dists = array(codebook.map(c => distRank(vec, c)): _*)
-    (array_position(dists, array_min(dists)) - 1).cast("int")
-  }
-
   /** Nearest-centroid id for a vector column — native fused loop
-    * ([[graft.functions.IvfProbes]] with nProbe=1); ties to the lower
-    * centroid id, matching [[nearestCentroidHof]] exactly.
+    * ([[GraftFunctions.ivfProbes]] with nProbe=1); ties
+    * to the lower centroid id, matching its HOF twin exactly.
     */
   def nearestCentroid(vec: Column, codebook: Array[Array[Double]]): Column =
     element_at(GraftFunctions.ivfProbes(vec, codebook, 1), 1)
@@ -181,7 +145,7 @@ object Similarity {
     *
     * One sample pass per (subspace, round); the corpus itself is
     * encoded exactly once, by [[ivfPqTopK]], through the native
-    * [[graft.functions.PqEncode]] fused loop.
+    * [[GraftFunctions.pqEncode]] fused loop.
     */
   def trainPq(embeddings: DataFrame, dim: Int, m: Int = 8, codes: Int = 16,
               iters: Int = 2, idCol: String = "vec_id", vecCol: String = "embedding",
@@ -221,7 +185,7 @@ object Similarity {
       var books: Array[Array[Array[Double]]] =
         Array.tabulate(m)(s => initFull.map(_.slice(s * subDim, (s + 1) * subDim)))
       // each Lloyd round is ONE distributed aggregation covering every
-      // subspace: the native PqCodes assignment emits all m cluster
+      // subspace: the native pqCodes assignment emits all m cluster
       // ids per row, posexplode splits the vector into (subspace,
       // dim-within-subspace) cells, and the (s, cluster, d) mean is a
       // single hash agg — m x iters per-subspace jobs collapse to
@@ -270,7 +234,7 @@ object Similarity {
     * at 10^12 vectors the candidate shuffle IS the cost). Queries
     * probe `nProbe` coarse cells, rank candidates by asymmetric
     * distance (exact query subvectors vs the candidate's quantized
-    * centroids, [[graft.functions.PqAdc]] — one fused loop), keep the
+    * centroids, [[GraftFunctions.pqAdc]] — one fused loop), keep the
     * best `rerank` per query, and only THOSE re-fetch their exact
     * vectors (a semi-join back to the corpus, |Q| x rerank rows) for
     * exact-cosine re-ranking. `residual = true` quantizes each
@@ -356,8 +320,8 @@ object Similarity {
 
   /** Deterministic pseudo-random hyperplanes (components in
     * [-0.5, 0.5), Det-keyed) as a driver-side matrix — the constant
-    * side of the native [[graft.functions.PlaneDots]] /
-    * [[graft.functions.RhpBucket]] expressions.
+    * side of the native [[GraftFunctions.planeDots]] /
+    * [[GraftFunctions.rhpBucket]] expressions.
     */
   private[graft] def planeMatrix(dim: Int, planes: Int): Array[Array[Double]] =
     Array.tabulate(planes) { p =>
@@ -365,15 +329,6 @@ object Similarity {
         graft.util.Det.double01(graft.util.Det.at(0xb00cL + p, d.toLong)) - 0.5
       }
     }
-
-  /** Law-checked HOF twin of [[lshBucket]] (same Det planes). */
-  def lshBucketHof(vec: Column, dim: Int, planes: Int = 12): Column = {
-    val m = planeMatrix(dim, planes)
-    (0 until planes).map { p =>
-      val pl = array(m(p).map(lit(_)): _*)
-      when(dot(vec, pl) >= 0, shiftleft(lit(1L), p)).otherwise(0L)
-    }.reduce((a, b) => a.bitwiseOR(b))
-  }
 
   /** Sign-random-projection bucket id: `planes` deterministic
     * hyperplanes; bit i = sign of dot(v, plane_i). Native fused loop.
@@ -387,8 +342,8 @@ object Similarity {
     * candidates iff they share a full band bucket (all signs of one
     * band agree), candidates are verified by exact cosine >= threshold
     * and deduped. All per-row math is native codegen: ONE fused
-    * [[graft.functions.PlaneDots]] loop computes every band's
-    * projections; the verify is [[graft.functions.CosineSim]].
+    * [[GraftFunctions.planeDots]] loop computes every band's
+    * projections; the verify is [[GraftFunctions.cosineSim]].
     *
     * Collision probability per band is (1 - theta/pi)^planesPerBand
     * (theta = angle between the vectors), so bands x planesPerBand
@@ -433,7 +388,7 @@ object Similarity {
       .agg(count(lit(1)).as("n_members"))
       .filter(col("n_members") > maxBucket)
 
-  /** (id, v, band, bucket) band memberships: one PlaneDots evaluation
+  /** (id, v, band, bucket) band memberships: one planeDots evaluation
     * per row covers all bands; each band's bucket packs its slice of
     * the sign bits.
     */
@@ -468,8 +423,8 @@ object Similarity {
     *
     * Projections, bucket bits, and margin-ranked flip buckets are all
     * computed by ONE fused native loop per query row
-    * ([[graft.functions.RhpProbes]]); the corpus side is the sibling
-    * [[graft.functions.RhpBucket]] loop — no interpreted expression
+    * ([[GraftFunctions.rhpProbes]]); the corpus side is the sibling
+    * [[GraftFunctions.rhpBucket]] loop — no interpreted expression
     * anywhere in the operator.
     */
   def annTopK(embeddings: DataFrame, queries: DataFrame, dim: Int, k: Int = 10,
@@ -497,9 +452,9 @@ object Similarity {
     * [[embeddingNearDups]]'s random-hyperplane banding. Train a
     * deterministic codebook ([[trainIvf]]: hash-ordered sample, never
     * a full-corpus pass), assign every vector to its nearest centroid
-    * (ONE native [[graft.functions.IvfProbes]] loop per row), then
+    * (ONE native [[GraftFunctions.ivfProbes]] loop per row), then
     * self-join WITHIN clusters only and verify candidates by exact
-    * cosine >= threshold (native [[graft.functions.CosineSim]],
+    * cosine >= threshold (native [[GraftFunctions.cosineSim]],
     * rounded to 4 before the threshold so the pair set reproduces
     * across libms).
     *

@@ -4,50 +4,18 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for training-data curation: language ID,
-  * quality scoring, token counting, fingerprinting. All pure column
+  * quality scoring, cleaning, diversity and script audits. All pure column
   * expressions (codegen) so they run at corpus scale as map-side work
   * with zero shuffle.
   */
 object TextAnalysis {
 
   /** Tokenization used by every operator here — the native
-    * [[graft.functions.TokenizeWords]] kernel (one fused pass;
-    * law-checked in FunctionsSpec against [[toksHof]], which stays as
-    * the declarative reference twin).
+    * [[graft.functions.GraftFunctions.tokenizeWords]] kernel (one fused
+    * pass; law-checked in FunctionsSpec against its declarative twin).
     */
   private def toks(text: Column): Column =
     graft.functions.GraftFunctions.tokenizeWords(text)
-
-  /** Declarative HOF twin of [[toks]] — NOT for hot paths
-    * (higher-order functions are CodegenFallback).
-    */
-  def toksHof(text: Column): Column =
-    filter(split(lower(text), "\\W+"), t => t =!= "")
-
-  /** Whitespace token count (the cheap pre-tokenizer count). */
-  def tokenCountWs(text: Column): Column =
-    size(filter(split(text, "\\s+"), t => t =!= ""))
-
-  /** BPE-ish subword count: word-internal splits BEFORE each digit run
-    * and before each non-alphanumeric (the literal regex below — a
-    * digit->letter transition does NOT split: "x86to64" counts as
-    * x|86to|64), plus length/4 long-word pieces — a deterministic
-    * stand-in for a real tokenizer's token count. Native codegen
-    * kernel ([[graft.functions.TokenCountBpe]]); the declarative twin
-    * [[tokenCountBpeHof]] stays law-checked in FunctionsSpec.
-    */
-  def tokenCountBpe(text: Column): Column =
-    org.apache.spark.sql.GraftBridge.toColumn(
-      graft.functions.TokenCountBpe(
-        org.apache.spark.sql.GraftBridge.toExpression(text)))
-
-  /** Interpreted declarative twin of [[tokenCountBpe]] — per-row HOF
-    * `aggregate`, law-check reference only (never on a shipped path).
-    */
-  def tokenCountBpeHof(text: Column): Column =
-    size(filter(split(text, "(?=[0-9])(?<=[^0-9])|(?=[^0-9a-zA-Z])|\\s+"), t => t =!= "")) +
-      aggregate(toks(text), lit(0),
-        (acc, t) => acc + (length(t) / 4).cast("int"))
 
   /** Marker-word language scores (n-gram-heuristic family): counts of
     * language-indicative stopwords. Deterministic, SQL-expressible.
@@ -243,7 +211,7 @@ object TextAnalysis {
   /** Canonical text cleanup — the ftfy-ish "fix the bytes" stage every
     * corpus pipeline runs before fingerprinting or quality gates:
     *
-    *   1. Unicode NFC (native [[graft.functions.NfcNormalize]] kernel
+    *   1. Unicode NFC (native [[graft.functions.NfcKernel]]
     *      with an already-normalized fast path — canonically-equal
     *      byte variants must collapse before any dedup key);
     *   2. CR/CRLF -> LF;
@@ -326,7 +294,7 @@ object TextAnalysis {
                      groupCol: String = "source"): DataFrame = {
     require(ns.nonEmpty && ns.forall(_ >= 1), "ns must be >= 1")
     // one scan for all n: an array of native per-n gram arrays (the
-    // codegen NgramJoin kernel — short docs yield empty arrays inside
+    // codegen NgramKernel — short docs yield empty arrays inside
     // the kernel), posexplode recovers WHICH n each array carries via
     // its position, then a second explode flattens the grams. Two
     // generators, zero interpreted lambdas (the former
@@ -348,29 +316,6 @@ object TextAnalysis {
         greatest(col("n_total"), lit(1L)).cast("double"), 6))
       .select(col(groupCol), col("n"), col("n_total"), col("n_distinct"), col("ratio"))
   }
-
-  /** Rolling polynomial fingerprint (Rabin-Karp family) of the
-    * normalized text — cheap locality-free doc identity; md5 variant in
-    * [[Dedup.fingerprint]] for the SQL-oracle-friendly form. Native
-    * codegen kernel ([[graft.functions.RollingFp31]] over the
-    * normalized string's codepoints); the per-char `aggregate` twin
-    * [[rollingFingerprintHof]] stays law-checked in FunctionsSpec.
-    */
-  def rollingFingerprint(text: Column): Column =
-    org.apache.spark.sql.GraftBridge.toColumn(
-      graft.functions.RollingFp31(
-        org.apache.spark.sql.GraftBridge.toExpression(Dedup.normalizedText(text))))
-
-  /** Interpreted declarative twin of [[rollingFingerprint]] — law-check
-    * reference only (never on a shipped path).
-    */
-  def rollingFingerprintHof(text: Column): Column =
-    aggregate(
-      split(Dedup.normalizedText(text), ""),
-      lit(0L),
-      // mod 2^31-1 each step: bounded (no ANSI overflow), same rolling form
-      (acc, ch) => pmod(acc * 1000003L + coalesce(ascii(ch).cast("long"), lit(0L)),
-        lit(2147483647L)))
 
   /** Per-script character counts: number of characters of `text` in
     * the given Unicode script (Java regex script class, e.g.

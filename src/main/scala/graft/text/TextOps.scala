@@ -116,8 +116,6 @@ object TextOps {
     */
   def directTextConfidence(text: String): Double =
     if (text != null && text.trim.length > 50) 90.0 else 70.0
-
-  def wordCount(text: String): Int = tokenize(text).size
 }
 
 /** The hard-coded stopword set of the reference's summarizer fallback

@@ -1,7 +1,7 @@
 package graft
 
-import graft.functions.{Fingerprint64, GraftFunctions}
-import org.apache.spark.sql.SparkSession
+import graft.functions.GraftFunctions
+import org.apache.spark.sql.{AnalysisException, Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -44,6 +44,52 @@ class FunctionsSpec extends AnyFunSuite {
     assert(df.select(countDistinct(col("h"))).head().getLong(0) > 99000L)
   }
 
+  /** Every GraftFunctions helper with well-typed inputs over
+    * `helperInputs`: (name, inputs, helper applied to inputs).
+    */
+  private def helperCalls: Seq[(String, Seq[Column], Seq[Column] => Column)] = {
+    val (i, s) = (col("i"), col("s"))
+    val vec = array(lit(1.0f), lit(0.0f))
+    val strs = array(lit("a"), lit("b"), lit("c"))
+    val longs = array(lit(1L), lit(2L))
+    val bin = lit(Array[Byte](0, 1))
+    val m = Array(Array(1.0, 0.0), Array(0.0, 1.0))
+    val cb = Array.tabulate(2, 2, 1)((a, b, c) => (a + b + c).toDouble)
+    val coarse = Array(Array(0.0, 0.0))
+    Seq(
+      ("fingerprint64", Seq(s), a => GraftFunctions.fingerprint64(a(0))),
+      ("simhash64", Seq(longs), a => GraftFunctions.simhash64(a(0))),
+      ("minhashSig", Seq(longs), a => GraftFunctions.minhashSig(a(0), 4)),
+      ("cosineSim", Seq(vec, vec), a => GraftFunctions.cosineSim(a(0), a(1))),
+      ("ivfProbes", Seq(vec), a => GraftFunctions.ivfProbes(a(0), m, 2)),
+      ("planeDots", Seq(vec), a => GraftFunctions.planeDots(a(0), m)),
+      ("shingleHashes", Seq(s), a => GraftFunctions.shingleHashes(a(0), 2)),
+      ("rhpBucket", Seq(vec), a => GraftFunctions.rhpBucket(a(0), m)),
+      ("rhpProbes", Seq(vec), a => GraftFunctions.rhpProbes(a(0), m, 1)),
+      ("tokenizeWords", Seq(s), a => GraftFunctions.tokenizeWords(a(0))),
+      ("tokenizeRaw", Seq(s), a => GraftFunctions.tokenizeRaw(a(0))),
+      ("countInSet", Seq(strs), a => GraftFunctions.countInSet(a(0), Seq("a"))),
+      ("collapseWs", Seq(s), a => GraftFunctions.collapseWs(a(0))),
+      ("sentencesSql", Seq(s), a => GraftFunctions.sentencesSql(a(0))),
+      ("tokenXxhash64", Seq(s), a => GraftFunctions.tokenXxhash64(a(0))),
+      ("ngramJoin", Seq(strs), a => GraftFunctions.ngramJoin(a(0), 2)),
+      ("nfcNormalize", Seq(s), a => GraftFunctions.nfcNormalize(a(0))),
+      ("pqEncode", Seq(vec), a => GraftFunctions.pqEncode(a(0), cb)),
+      ("pqCodes", Seq(vec), a => GraftFunctions.pqCodes(a(0), cb)),
+      ("pqAdc", Seq(vec, bin), a => GraftFunctions.pqAdc(a(0), a(1), cb)),
+      ("pqCodesRes", Seq(vec, i), a => GraftFunctions.pqCodesRes(a(0), a(1), coarse, cb)),
+      ("pqEncodeRes", Seq(vec, i), a => GraftFunctions.pqEncodeRes(a(0), a(1), coarse, cb)),
+      ("pqAdcRes", Seq(vec, i, bin),
+        a => GraftFunctions.pqAdcRes(a(0), a(1), a(2), coarse, cb)),
+      ("sigBandKeys", Seq(longs), a => GraftFunctions.sigBandKeys(a(0), 2)),
+      ("sigAgreement", Seq(longs, longs), a => GraftFunctions.sigAgreement(a(0), a(1))))
+  }
+
+  private lazy val helperInputs = {
+    import spark.implicits._
+    Seq((0, "One two, three.")).toDF("i", "s")
+  }
+
   test("registered SQL function graft_fingerprint64 works and null-propagates") {
     GraftFunctions.register(spark)
     import spark.implicits._
@@ -52,6 +98,51 @@ class FunctionsSpec extends AnyFunSuite {
       .collect()(0)
     assert(r.getLong(0) == fpRef("a"))
     assert(r.isNullAt(1))
+    // every registered name: a value for well-typed input, NULL when any
+    // input is an untyped or a typed NULL
+    val str = ("'one two three'", "STRING")
+    val longs = ("array(1L, 2L)", "ARRAY<BIGINT>")
+    val vec = ("array(1.0f, 0.0f)", "ARRAY<FLOAT>")
+    val toks = ("array('a', 'b', 'c')", "ARRAY<STRING>")
+    Seq(
+      ("graft_fingerprint64", Seq(str), Nil),
+      ("graft_simhash64", Seq(longs), Nil),
+      ("graft_cosine", Seq(vec, vec), Nil),
+      ("graft_shingle_hashes", Seq(str), Seq("2")),
+      ("graft_minhash", Seq(longs), Seq("4")),
+      ("graft_sig_agreement", Seq(longs, longs), Nil),
+      ("graft_tokenize", Seq(str), Nil),
+      ("graft_ngrams", Seq(toks), Seq("2")),
+      ("graft_nfc", Seq(str), Nil)).foreach { case (name, ins, consts) =>
+      def run(args: Seq[String]) =
+        spark.sql(s"SELECT $name(${(args ++ consts).mkString(", ")})").head()
+      assert(!run(ins.map(_._1)).isNullAt(0), name)
+      ins.indices.foreach { k =>
+        Seq("NULL", s"CAST(NULL AS ${ins(k)._2})").foreach { nul =>
+          assert(run(ins.map(_._1).updated(k, nul)).isNullAt(0), s"$name, input $k = $nul")
+        }
+      }
+    }
+    // and every Column helper the same way
+    helperCalls.foreach { case (name, good, f) =>
+      assert(!helperInputs.select(f(good)).head().isNullAt(0), name)
+      good.indices.foreach { k =>
+        Seq(lit(null), lit(null).cast(helperInputs.select(good(k)).schema.head.dataType))
+          .foreach { nul =>
+            assert(helperInputs.select(f(good.updated(k, nul))).head().isNullAt(0),
+              s"$name, input $k = $nul")
+          }
+      }
+    }
+    // a wrong argument count fails with the function's name and arity
+    Seq(
+      ("graft_ngrams(array('a', 'b', 'c'), 2, '_')", "graft_ngrams", 2),
+      ("graft_fingerprint64('a', 'zzz')", "graft_fingerprint64", 1),
+      ("graft_fingerprint64()", "graft_fingerprint64", 1)).foreach { case (q, name, n) =>
+      val ex = intercept[AnalysisException](spark.sql(s"SELECT $q").collect())
+      assert(ex.getMessage.contains(name) && ex.getMessage.contains(s"requires $n parameters"),
+        s"$q: ${ex.getMessage}")
+    }
   }
 
   test("SQL registration: full dedup chain runs as pure SQL through the native kernels") {
@@ -83,6 +174,17 @@ class FunctionsSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.toLowerCase.contains("string") ||
       ex.getMessage.contains("DATATYPE_MISMATCH"))
+    // every helper, each input in turn given a wrong type (INT, or
+    // STRING where INT is expected): analysis rejects it — never an
+    // implicit cast, never a run-time INTERNAL_ERROR
+    helperCalls.foreach { case (name, good, f) =>
+      good.indices.foreach { k =>
+        val wrong = if (helperInputs.select(good(k)).schema.head.dataType ==
+          org.apache.spark.sql.types.IntegerType) col("s") else col("i")
+        val ex = intercept[AnalysisException](helperInputs.select(f(good.updated(k, wrong))))
+        assert(ex.getCondition.startsWith("DATATYPE_MISMATCH"), s"$name, input $k: ${ex.getMessage}")
+      }
+    }
   }
 
   // ---- SimHash64 ----
@@ -103,7 +205,7 @@ class FunctionsSpec extends AnyFunSuite {
     val df = data.toDF("hs").select(
       col("hs"),
       GraftFunctions.simhash64(col("hs")).as("native"),
-      graft.ops.Dedup.simhashFromHashes(col("hs")).as("twin"))
+      Twins.simhashFromHashes(col("hs")).as("twin"))
     df.collect().foreach { r =>
       val hs = r.getSeq[Long](0)
       assert(r.getLong(1) == shRef(hs), s"native vs ref for $hs")
@@ -116,7 +218,7 @@ class FunctionsSpec extends AnyFunSuite {
     val data = Seq(Seq.empty[Long], Seq(7L), (1L to 50L).map(i => (i * 2654435761L) & 0x7fffffffL))
     val df = data.toDF("hs").select(
       GraftFunctions.minhashSig(col("hs"), 16).as("native"),
-      graft.ops.Dedup.minhashSignature(col("hs"), 16).as("twin"))
+      Twins.minhashSignature(col("hs"), 16).as("twin"))
     df.collect().foreach { r =>
       assert(r.getSeq[Any](0) == r.getSeq[Any](1), s"native ${r.getSeq[Any](0)} != twin ${r.getSeq[Any](1)}")
     }
@@ -141,7 +243,7 @@ class FunctionsSpec extends AnyFunSuite {
     val b = df0.select((col("id") + 100).as("id"), col("v").as("b"))
     val df = a.join(b, "id").select(
       GraftFunctions.cosineSim(col("a"), col("b")).as("native"),
-      graft.ops.Similarity.cosine(col("a"), col("b")).as("twin"))
+      Twins.cosine(col("a"), col("b")).as("twin"))
     val rows = df.collect()
     assert(rows.length == 100)
     rows.foreach(r => assert(r.getDouble(0) == r.getDouble(1),
@@ -155,7 +257,7 @@ class FunctionsSpec extends AnyFunSuite {
       graft.util.Det.double01(graft.util.Det.at(0xcb00L + c, d.toLong)) * 2 - 1))
     val df = vecDf(300, 16).select(
       graft.ops.Similarity.nearestCentroid(col("v"), cb).as("native"),
-      graft.ops.Similarity.nearestCentroidHof(col("v"), cb).as("twin"),
+      Twins.nearestCentroidHof(col("v"), cb).as("twin"),
       GraftFunctions.ivfProbes(col("v"), cb, 7).as("allProbes"),
       col("v"))
     df.collect().foreach { r =>
@@ -176,10 +278,10 @@ class FunctionsSpec extends AnyFunSuite {
     val m = graft.ops.Similarity.planeMatrix(dim, 8)
     val df = vecDf(200, dim).select(
       graft.ops.Similarity.lshBucket(col("v"), dim, 8).as("native"),
-      graft.ops.Similarity.lshBucketHof(col("v"), dim, 8).as("twin"),
+      Twins.lshBucketHof(col("v"), dim, 8).as("twin"),
       GraftFunctions.planeDots(col("v"), m).as("dots"),
       array((0 until 8).map(p =>
-        graft.ops.Similarity.dot(col("v"), array(m(p).map(lit(_)): _*))): _*).as("dotsTwin"))
+        Twins.dot(col("v"), array(m(p).map(lit(_)): _*))): _*).as("dotsTwin"))
     df.collect().foreach { r =>
       assert(r.getLong(0) == r.getLong(1), "bucket: native != HOF twin")
       assert(r.getSeq[Double](2) == r.getSeq[Double](3), "plane dots: native != HOF twin")
@@ -279,7 +381,7 @@ class FunctionsSpec extends AnyFunSuite {
       (Seq(0f, 0f, 0f), Seq(0f, 0f, 0f))).toDF("a", "b")
     val rows = df.select(
       GraftFunctions.cosineSim(col("a"), col("b")).as("native"),
-      graft.ops.Similarity.cosine(col("a"), col("b")).as("twin")).collect()
+      Twins.cosine(col("a"), col("b")).as("twin")).collect()
     rows.foreach { r =>
       assert(r.getDouble(0) == 0.0, s"native ${r.getDouble(0)}")
       assert(r.getDouble(1) == 0.0, s"twin ${r.getDouble(1)}")
@@ -301,7 +403,7 @@ class FunctionsSpec extends AnyFunSuite {
       "digits 123 mix3d und_er_score", "a#b#c", "\ttabs\nnewlines\r")
     val df = data.toDF("t").select(col("t"),
       GraftFunctions.tokenizeWords(col("t")).as("native"),
-      graft.ops.TextAnalysis.toksHof(col("t")).as("twin"))
+      Twins.toksHof(col("t")).as("twin"))
     df.collect().foreach { r =>
       assert(r.getSeq[String](1) == r.getSeq[String](2),
         s"tokens diverge for '${r.getString(0)}': " +
@@ -344,39 +446,6 @@ class FunctionsSpec extends AnyFunSuite {
     val z = Seq("x").toDF("t")
       .select(graft.functions.GraftFunctions.collapseWs(lit(null).cast("string"))).collect()(0)
     assert(z.isNullAt(0))
-  }
-
-  test("RollingFp31 / TokenCountBpe natives == their interpreted aggregate twins") {
-    import spark.implicits._
-    val data = Seq(
-      "", "   ", "a", "hello world", "Hello,  World!\n\ttabs",
-      "x86to64 splits x|86to|64", "digits123 and 456mix",
-      "Ünïcödé étude ÖK", "supercalifragilisticexpialidocious word",
-      "punct...runs!!!and??? more;;; tokens", "éİ edgecase")
-    val df = data.toDF("t").select(col("t"),
-      graft.ops.TextAnalysis.rollingFingerprint(col("t")).as("fpN"),
-      graft.ops.TextAnalysis.rollingFingerprintHof(col("t")).as("fpT"),
-      graft.ops.TextAnalysis.tokenCountBpe(col("t")).as("bpeN"),
-      graft.ops.TextAnalysis.tokenCountBpeHof(col("t")).as("bpeT"))
-    df.collect().foreach { r =>
-      assert(r.getLong(1) == r.getLong(2),
-        s"rolling fp diverges for '${r.getString(0)}': ${r.getLong(1)} vs ${r.getLong(2)}")
-      assert(r.getInt(3) == r.getInt(4),
-        s"bpe count diverges for '${r.getString(0)}': ${r.getInt(3)} vs ${r.getInt(4)}")
-    }
-    // codegen participation, null propagation
-    val big = spark.range(0, 20000, 1, 4)
-      .select(concat(lit("Doc "), col("id"), lit(" has WordsAndMore123 tail")).as("t"))
-      .select(graft.ops.TextAnalysis.rollingFingerprint(col("t")).as("fp"),
-        graft.ops.TextAnalysis.tokenCountBpe(col("t")).as("n"))
-    big.collect()
-    val plan = big.queryExecution.executedPlan.toString
-    assert(plan.contains("*("), s"expected codegen:\n$plan")
-    assert(!plan.contains("lambdafunction"), s"interpreted HOF survived:\n$plan")
-    val z = Seq("x").toDF("t").select(
-      graft.ops.TextAnalysis.rollingFingerprint(lit(null).cast("string")),
-      graft.ops.TextAnalysis.tokenCountBpe(lit(null).cast("string"))).collect()(0)
-    assert(z.isNullAt(0) && z.isNullAt(1))
   }
 
   test("CountInSet native == size(filter(isin)) HOF twin, counts occurrences") {
@@ -529,7 +598,7 @@ class FunctionsSpec extends AnyFunSuite {
     val df = data.toDF("t").select(
       col("t"),
       GraftFunctions.shingleHashes(col("t"), 3).as("native"),
-      graft.ops.Dedup.shingleHashes(graft.ops.Dedup.shingles(col("t"), 3)).as("twin"))
+      Twins.shingleHashes(graft.ops.Dedup.shingles(col("t"), 3)).as("twin"))
     df.collect().foreach { r =>
       assert(r.getSeq[Long](1) == r.getSeq[Long](2),
         s"shingle hashes diverge for '${r.getString(0)}': " +
@@ -539,8 +608,8 @@ class FunctionsSpec extends AnyFunSuite {
     // the all-declarative signature
     val sig = data.toDF("t").select(
       GraftFunctions.minhashSig(GraftFunctions.shingleHashes(col("t"), 3), 16).as("native"),
-      graft.ops.Dedup.minhashSignature(
-        graft.ops.Dedup.shingleHashes(graft.ops.Dedup.shingles(col("t"), 3)), 16).as("twin"))
+      Twins.minhashSignature(
+        Twins.shingleHashes(graft.ops.Dedup.shingles(col("t"), 3)), 16).as("twin"))
     sig.collect().foreach(r => assert(r.getSeq[Any](0) == r.getSeq[Any](1)))
   }
 

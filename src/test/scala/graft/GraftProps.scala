@@ -191,12 +191,12 @@ object GraftProps extends Properties("graft") {
         }.sum
         val argOk = (0 until m).forall(s =>
           (code(s) & 0xff) == (0 until codes).minBy(c => (sd2(s, c), c)))
-        val adc = graft.functions.PqKernels.adc(fad(v), true, code, flat, m, codes, subDim)
+        val adc = graft.functions.PqKernels.adc(fad(v), code, true, flat, m, codes, subDim)
         val twin = (0 until m).map(s => sd2(s, code(s) & 0xff)).sum
         // self-codebook: each subspace's code 0 IS the subvector
         val self = Array.tabulate(m, 1, subDim)((s, _, d) => v(s * subDim + d).toDouble).flatten.flatten
         val selfCode = graft.functions.PqKernels.encode(fad(v), true, self, m, 1, subDim)
-        val selfAdc = graft.functions.PqKernels.adc(fad(v), true, selfCode, self, m, 1, subDim)
+        val selfAdc = graft.functions.PqKernels.adc(fad(v), selfCode, true, self, m, 1, subDim)
         argOk && math.abs(adc - twin) < 1e-9 && selfAdc == 0.0
       }
     }
@@ -215,9 +215,9 @@ object GraftProps extends Properties("graft") {
         // (a) zero coarse centroids: residual encode/adc == raw
         val zero = new Array[Double](nCells * dim)
         val raw = graft.functions.PqKernels.encode(fad(v), true, flat, m, codes, subDim)
-        val res0 = graft.functions.PqKernels.encodeRes(fad(v), true, flat, m, codes, subDim, zero, cell)
-        val adcRaw = graft.functions.PqKernels.adc(fad(v), true, raw, flat, m, codes, subDim)
-        val adc0 = graft.functions.PqKernels.adcRes(fad(v), true, raw, flat, m, codes, subDim, zero, cell)
+        val res0 = graft.functions.PqKernels.encodeRes(fad(v), cell, true, flat, m, codes, subDim, zero)
+        val adcRaw = graft.functions.PqKernels.adc(fad(v), raw, true, flat, m, codes, subDim)
+        val adc0 = graft.functions.PqKernels.adcRes(fad(v), cell, raw, true, flat, m, codes, subDim, zero)
         // (b) shift law: encoding v against coarse c == encoding the
         // DOUBLE residual (v - c) raw (doubles, matching the kernel's
         // internal arithmetic exactly — a float round-trip would not)
@@ -226,14 +226,14 @@ object GraftProps extends Properties("graft") {
         val shifted = Array.tabulate(dim)(i => v(i).toDouble - coarse(cell * dim + i))
         val dad = new org.apache.spark.sql.catalyst.util.GenericArrayData(
           shifted.map(x => Double.box(x): Any))
-        val resC = graft.functions.PqKernels.encodeRes(fad(v), true, flat, m, codes, subDim, coarse, cell)
+        val resC = graft.functions.PqKernels.encodeRes(fad(v), cell, true, flat, m, codes, subDim, coarse)
         val rawShift = graft.functions.PqKernels.encode(dad, false, flat, m, codes, subDim)
         // (c) the corrupt-input contract: a ragged vector (shorter than
         // m*subDim) and an out-of-range cell id must degrade
         // deterministically, not read out of bounds
         val ragged = fad(v.take(math.max(1, dim / 2)))
-        val r1 = graft.functions.PqKernels.encodeRes(ragged, true, flat, m, codes, subDim, coarse, -5)
-        val r2 = graft.functions.PqKernels.adcRes(ragged, true, raw, flat, m, codes, subDim, coarse, 99)
+        val r1 = graft.functions.PqKernels.encodeRes(ragged, -5, true, flat, m, codes, subDim, coarse)
+        val r2 = graft.functions.PqKernels.adcRes(ragged, 99, raw, true, flat, m, codes, subDim, coarse)
         raw.sameElements(res0) && adcRaw == adc0 &&
           resC.sameElements(rawShift) &&
           r1.length == m && !r2.isNaN
@@ -270,7 +270,7 @@ object GraftProps extends Properties("graft") {
       import org.apache.spark.unsafe.types.UTF8String
       val toks = graft.functions.TokenizeKernel.evalRaw(UTF8String.fromString(s))
       val tokSeq = (0 until toks.numElements()).map(i => toks.getUTF8String(i).toString)
-      val got = graft.functions.NgramKernel.eval(toks, n, UTF8String.fromString(" "))
+      val got = graft.functions.NgramKernel.eval(toks, n)
       val gotSeq = (0 until got.numElements()).map(i => got.getUTF8String(i).toString)
       val want =
         if (tokSeq.length < n) Seq.empty
@@ -285,19 +285,6 @@ object GraftProps extends Properties("graft") {
       val rawSeq = (0 until raw.numElements()).map(i => raw.getUTF8String(i).toString)
       val want = s.split("\\W+").filter(_.nonEmpty).toSeq
       rawSeq == want
-    }
-
-  property("RollingFp31 == codepoint fold mod 2^31-1") =
-    forAll(textGen) { s =>
-      import org.apache.spark.unsafe.types.UTF8String
-      var h = 0L
-      var i = 0
-      while (i < s.length) {
-        val cp = s.codePointAt(i)
-        h = java.lang.Math.floorMod(h * 1000003L + cp, 2147483647L)
-        i += Character.charCount(cp)
-      }
-      graft.functions.TextKernels.rollingFp(UTF8String.fromString(s)) == h
     }
 
   property("TextOps.tokenize ASCII fast path == UNICODE \\w+ regex on any string") = {
@@ -370,17 +357,6 @@ object GraftProps extends Properties("graft") {
         XxHash64Function.hash(UTF8String.fromString(t), StringType, 42L))
       val got = graft.functions.TextKernels.tokenXxhash64(u)
       Vector.tabulate(got.numElements())(i => got.getLong(i)) == want
-    }
-
-  property("tokenCountBpe ASCII fast path == full regex form on any string") =
-    forAll(wsplitTextGen) { s =>
-      import org.apache.spark.unsafe.types.UTF8String
-      val u = UTF8String.fromString(s)
-      val bpeSplit = java.util.regex.Pattern.compile(
-        "(?=[0-9])(?<=[^0-9])|(?=[^0-9a-zA-Z])|\\s+")
-      val ref = bpeSplit.split(s, -1).count(_.nonEmpty) +
-        refWSplit(u.toLowerCase.toString).map(_.length / 4).sum
-      graft.functions.TextKernels.tokenCountBpe(u) == ref
     }
 
   property("sentenceSplitSql byte scan == [.!?]\\s+ regex split + trim on any string") = {

@@ -3,6 +3,9 @@ package graft
 import graft.gen.Corpus
 import graft.pipe.ExtractJob
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -66,6 +69,24 @@ class PlanSpec extends AnyFunSuite {
       docs.select(col("doc_id"),
         filter(col("spans"), s => s("kind") === "text").as("spans")), media)
     assert(textOnly.filter(col("kind") === "media").count() == 0)
+    // the text branch's native collapse call sits inside a whole-stage
+    // codegen stage (a codegen fallback would run it interpreted)
+    textOnly.collect()
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    def stage(p: SparkPlan): Seq[SparkPlan] =
+      p +: (p match { case _: InputAdapter => Nil; case _ => p.children.flatMap(stage) })
+    val all = nodes(textOnly.queryExecution.executedPlan)
+    val collapsing = all.filter(_.expressions.exists(_.exists {
+      case s: StaticInvoke => s.functionName == "collapseWs"
+      case _ => false
+    }))
+    val codegen = all.collect { case w: WholeStageCodegenExec => stage(w.child) }.flatten
+    assert(collapsing.nonEmpty && collapsing.forall(n => codegen.exists(_ eq n)),
+      s"text-branch collapse outside whole-stage codegen:\n${textOnly.queryExecution.executedPlan}")
   }
 
   test("media branch plan: ONE media scan, kernel width pinned against AQE coalescing") {
@@ -143,8 +164,8 @@ class PlanSpec extends AnyFunSuite {
     // the round-4 verdict's remaining interpreted-HOF family: the
     // gram/sentence/token windows under the dedup-text battery, the
     // q07 token counts, and the extraction pipeline's span assembly.
-    // Native kernels (NgramJoin, SentenceSplitSql, TokenXxhash64,
-    // CountInSet, TokenizeWords raw/lower) + lambda-free rewrites must
+    // Native kernels (ngramJoin, sentencesSql, tokenXxhash64,
+    // countInSet, tokenizeWords/tokenizeRaw) + lambda-free rewrites must
     // STAY on these paths — the OPTIMIZED plan is checked (cheap, no
     // execution) because several of these queries are corpus-sized.
     val names = Seq(
