@@ -64,6 +64,14 @@ object ExtractJob {
   /** Fan-out of the salted media join-back in [[extractSpans]]. */
   final val SaltBuckets = 8
 
+  /** Width of the pipeline's explicit exchanges: the kernel's
+    * content_hash repartition and the output's range exchange. Sized to
+    * the cluster (two tasks per core), not to the data or the bucket
+    * count. An explicit width is REPARTITION_BY_NUM, which AQE never
+    * coalesces.
+    */
+  def exchangeWidth(spark: SparkSession): Int = spark.sparkContext.defaultParallelism * 2
+
   private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.pipe.ExtractJob")
 
   def preprocessModeFor(quality: String): String = quality match {
@@ -197,7 +205,6 @@ object ExtractJob {
     import spark.implicits._
     checkConfig(cfg)
 
-    val nParts = spark.sparkContext.defaultParallelism * 2
     // explode_outer: a doc with an empty/null spans array still emits a
     // (null-kind) row — "one output row per input document" must hold
     // on adversarial input, not just the fixture corpus.
@@ -229,7 +236,7 @@ object ExtractJob {
       .filter(length($"bytes") <= cfg.maxMediaBytes)
       .join(neededRefs, Seq("media_ref"), "left_semi")
       .select($"media_ref", $"bytes", sha2($"bytes", 256).as("content_hash"))
-      .repartition(nParts, $"content_hash")
+      .repartition(exchangeWidth(spark), $"content_hash")
       .as[(String, Array[Byte], String)]
       .mapPartitions { it =>
         val ocr = ocrKernel(cfg)
@@ -362,6 +369,26 @@ object ExtractJob {
     }
   }
 
+  /** The documents [[runResumable]] writes, with their `bucket` column:
+    * extract, assembly aggregate, bucket, range exchange, finishing
+    * projection. north_rule: an explicit repartitionByRange on doc_id.
+    * It runs at [[exchangeWidth]] partitions over (bucket, doc_id), so
+    * each task holds a contiguous run of buckets and a job writes at
+    * most populated buckets + width - 1 files. Files are clustered by
+    * doc range but not sorted inside: the writer sorts each task by
+    * bucket only. The exchange sits BETWEEN the aggregate and the
+    * projection: range partitioning samples its child, and the child
+    * here is the cheap (doc_id, sp, bucket) aggregate — the summarizer
+    * UDF runs strictly after the exchange, exactly once per document.
+    */
+  def bucketedDocs(spark: SparkSession, docs: DataFrame, media: DataFrame,
+                   cfg: Config): DataFrame = {
+    val assembled = assembleSpans(spark, extractSpans(spark, docs, media, cfg))
+      .withColumn("bucket", bucketCol(cfg.outputBuckets))
+      .repartitionByRange(exchangeWidth(spark), col("bucket"), col("doc_id"))
+    finishDocs(spark, assembled)
+  }
+
   /** Run the job writing per-bucket, committing a manifest row per
     * bucket. On restart only buckets absent from the manifest are
     * recomputed; dynamic partition overwrite makes a retried bucket
@@ -422,25 +449,20 @@ object ExtractJob {
 
     val obs = new org.apache.spark.sql.Observation()
     val stats = udaf(new BucketManifestAgg(cfg.outputBuckets))
-    // north_rule: explicit repartitionByRange on doc_id — clusters each
-    // bucket's files by doc range (ordered output, prunable). The range
-    // exchange sits BETWEEN the assembly aggregate and the finishing
-    // projection: range partitioning samples its child, and the child
-    // here is the cheap (doc_id, sp, bucket) aggregate — the summarizer
-    // UDF runs strictly after the exchange, exactly once per document.
-    val assembled = assembleSpans(spark,
-        extractSpans(spark, pending.drop("bucket"), media, cfg))
-      .withColumn("bucket", bucketCol(cfg.outputBuckets))
-      .repartitionByRange(cfg.outputBuckets, col("bucket"), col("doc_id"))
     // span_count is fed to the aggregate as an expression, NOT
     // materialized as a column: the written parquet schema must stay
     // identical to run()'s output (round-2 ADVICE — a derived metric
     // column silently leaked into the committed output format).
-    val out = finishDocs(spark, assembled)
+    val out = bucketedDocs(spark, pending.drop("bucket"), media, cfg)
       .observe(obs, stats($"bucket", size($"spans"), $"media_count", $"confidence")
         .as("bucket_stats"))
 
+    // both writes go through NioLocalFileSystem: without Hadoop's native
+    // library every file, .crc file and directory a write creates forks
+    // a `chmod`; the cache switch inside writerOptions keeps the
+    // scheme-keyed FileSystem cache from handing back the forking one
     out.write
+      .options(NioLocalFileSystem.writerOptions)
       .partitionBy("bucket")
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite")
@@ -455,7 +477,7 @@ object ExtractJob {
       .withColumn("input_snapshot_id", lit(snapshotId))
       .withColumn("committed_at", current_timestamp())
       .coalesce(1)
-      .write.mode("append").parquet(manifestPath)
+      .write.options(NioLocalFileSystem.writerOptions).mode("append").parquet(manifestPath)
 
     RunSummary(rows.map(_.doc_count).sum, rows.map(_.span_count).sum,
       rows.map(_.media_count).sum, rows.size, snapshotId)

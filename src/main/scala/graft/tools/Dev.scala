@@ -8,6 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** The dev entry point (optimization tooling, outside the
   * `Bench`/`Verify` contract; [[graft.Bench]] stays the artifact of
@@ -73,12 +75,41 @@ object Dev {
       case _ => -1.0
     }
 
-  /** One timed run: docs committed, wall seconds, process CPU seconds. */
-  final case class Timed(docs: Long, sec: Double, cpu: Double)
+  /** Host-wide count of processes forked since boot (`processes` in
+    * /proc/stat), or -1 where there is no /proc. Its delta around a job
+    * counts that job's child processes plus any other process's forks.
+    */
+  private def hostForks(): Long = try {
+    val src = scala.io.Source.fromFile("/proc/stat")
+    try src.getLines().find(_.startsWith("processes ")).map(_.drop(10).trim.toLong).getOrElse(-1L)
+    finally src.close()
+  } catch { case NonFatal(_) => -1L }
+
+  /** What one run left on disk: data parquet files under `extracted/`,
+    * `.crc` side files and directories (the output root included).
+    */
+  final case class Written(parquet: Int, crc: Int, dirs: Int)
+
+  private def written(outDir: java.io.File): Written = {
+    val s = java.nio.file.Files.walk(outDir.toPath)
+    val paths = try s.iterator().asScala.toVector finally s.close()
+    val data = outDir.toPath.resolve("extracted")
+    def name(p: java.nio.file.Path) = p.getFileName.toString
+    Written(
+      paths.count(p => p.startsWith(data) && name(p).endsWith(".parquet") && !name(p).startsWith(".")),
+      paths.count(p => name(p).endsWith(".crc")),
+      paths.count(p => java.nio.file.Files.isDirectory(p)))
+  }
+
+  /** One timed run: docs committed, wall seconds, process CPU seconds,
+    * host-wide forks during the run and the files it wrote.
+    */
+  final case class Timed(docs: Long, sec: Double, cpu: Double, forks: Long, files: Written)
 
   /** Timed `ExtractJob.runResumable` runs, each into a fresh dir under
-    * one temp base. A run's dir is deleted after its clock stops, so
-    * cleanup is never timed and repeated runs do not fill the disk.
+    * one temp base. A run's dir is counted and then deleted after its
+    * clock stops, so neither is timed and repeated runs do not fill the
+    * disk.
     */
   final class Runs(spark: SparkSession, docs: DataFrame, media: DataFrame, prefix: String) {
     private val base = java.nio.file.Files.createTempDirectory(prefix).toFile
@@ -87,10 +118,14 @@ object Dev {
     def once(): Timed = {
       n += 1
       val outDir = new java.io.File(base, s"run_$n")
+      val f0 = hostForks()
       val c0 = cpuSec()
       val t0 = System.nanoTime()
       val summary = ExtractJob.runResumable(spark, docs, media, outDir.getAbsolutePath)
-      val t = Timed(summary.docCount, (System.nanoTime() - t0) / 1e9, cpuSec() - c0)
+      val sec = (System.nanoTime() - t0) / 1e9
+      val cpu = cpuSec() - c0
+      val forks = if (f0 < 0) -1L else hostForks() - f0
+      val t = Timed(summary.docCount, sec, cpu, forks, written(outDir))
       deleteRec(outDir) // outside the timed region
       t
     }
@@ -277,6 +312,9 @@ object Dev {
   /** Runs the flagship on a prepared bench corpus with an in-JVM stack
     * sampler (20 ms tick over executor task threads) and prints the
     * hottest frames — the "where is the time actually going" probe.
+    * Each profiled run also prints what the job cost outside the JVM:
+    * host-wide forks during the run and the data parquet, `.crc` and
+    * directory counts of its output.
     *
     * args: <docsPath> <mediaPath> [runs]
     */
@@ -318,12 +356,16 @@ object Dev {
     })
     sampler.setDaemon(true)
     sampler.start()
-    val wall = (1 to n).map(_ => runs.once().sec).sum
+    val timed = (1 to n).map(_ => runs.once())
     sampling = false
     sampler.join(500)
     runs.close()
-    println(f"[pipeprofile] $n run(s) in $wall%.1f s at local[$cores]")
-    import scala.jdk.CollectionConverters._
+    println(f"[pipeprofile] $n run(s) in ${timed.map(_.sec).sum}%.1f s at local[$cores]")
+    timed.zipWithIndex.foreach { case (t, i) =>
+      println(f"[pipeprofile] run ${i + 1}: docs=${t.docs} sec=${t.sec}%.2f cpu_s=${t.cpu}%.2f " +
+        s"forks_host_wide=${t.forks} data_parquet=${t.files.parquet} " +
+        s"crc=${t.files.crc} dirs=${t.files.dirs}")
+    }
     def top(m: java.util.concurrent.ConcurrentHashMap[String, Integer], label: String): Unit = {
       val total = m.values.asScala.map(_.toInt).sum.max(1)
       println(s"== $label (total $total samples) ==")

@@ -250,6 +250,73 @@ class PipelineSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  /** Permission bits (0 to 07777) of a local path. */
+  private def modeOf(p: java.nio.file.Path): Int =
+    java.nio.file.Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+
+  private def oct(s: String): Int = Integer.parseInt(s, 8)
+
+  test("NioLocalFileSystem sets the stock file system's modes in-process; sticky bits take the stock path") {
+    import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+    import org.apache.hadoop.fs.permission.FsPermission
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val root = java.net.URI.create("file:///")
+    val stock = new RawLocalFileSystem()
+    stock.initialize(root, conf)
+    val nio = new graft.pipe.NioLocalFileSystem.Raw()
+    nio.initialize(root, conf)
+    val dir = java.nio.file.Files.createTempDirectory("graft-perm")
+    Seq("600", "640", "700", "755").foreach { m =>
+      val a = java.nio.file.Files.createFile(dir.resolve(s"stock-$m"))
+      val b = java.nio.file.Files.createFile(dir.resolve(s"nio-$m"))
+      stock.setPermission(new Path(a.toUri), new FsPermission(oct(m).toShort))
+      nio.setPermission(new Path(b.toUri), new FsPermission(oct(m).toShort))
+      assert(modeOf(a) == oct(m), s"stock sets $m")
+      assert(modeOf(b) == modeOf(a), s"nio reads back what stock sets for $m")
+    }
+    // the POSIX permission set cannot carry the sticky bit: only the
+    // stock (chmod) path can have set it
+    val sticky = java.nio.file.Files.createDirectory(dir.resolve("sticky"))
+    nio.setPermission(new Path(sticky.toUri), new FsPermission(oct("1755").toShort))
+    assert(modeOf(sticky) == oct("1755"))
+    // the writer options resolve `file:` to it, by reflection and uncached
+    val wconf = new org.apache.hadoop.conf.Configuration()
+    graft.pipe.NioLocalFileSystem.writerOptions.foreach { case (k, v) => wconf.set(k, v) }
+    val fs = new Path(dir.toUri).getFileSystem(wconf)
+    assert(fs.isInstanceOf[graft.pipe.NioLocalFileSystem])
+    assert(fs.asInstanceOf[graft.pipe.NioLocalFileSystem].getRawFileSystem
+      .isInstanceOf[graft.pipe.NioLocalFileSystem.Raw])
+  }
+
+  test("resumable run writes at most populated buckets + width - 1 data files, with the stock modes") {
+    import org.apache.hadoop.fs.{LocalFileSystem, Path}
+    val outDir = java.nio.file.Files.createTempDirectory("graft-files")
+    val docs = Corpus.documents(spark, sfDir).toDF()
+    val media = Corpus.media(spark, sfDir).toDF()
+    val summary = ExtractJob.runResumable(spark, docs, media, outDir.toString,
+      ExtractJob.Config(outputBuckets = 64))
+    val walk = java.nio.file.Files.walk(outDir)
+    val paths = try walk.toArray.map(_.asInstanceOf[java.nio.file.Path]).toSeq finally walk.close()
+    val data = paths.filter(p => p.startsWith(outDir.resolve("extracted")) &&
+      p.getFileName.toString.endsWith(".parquet") && !p.getFileName.toString.startsWith("."))
+    val width = ExtractJob.exchangeWidth(spark)
+    assert(summary.newBuckets > width, "the corpus populates more buckets than the exchange has tasks")
+    assert(data.size <= summary.newBuckets + width - 1,
+      s"${data.size} data files for ${summary.newBuckets} populated buckets at width $width")
+
+    // every written file and directory has the mode the stock (forking)
+    // local file system gives a fresh file and directory
+    val probe = java.nio.file.Files.createTempDirectory("graft-files-stock")
+    val stock = new LocalFileSystem()
+    stock.initialize(java.net.URI.create("file:///"), new org.apache.hadoop.conf.Configuration())
+    stock.create(new Path(probe.resolve("f").toUri)).close()
+    stock.mkdirs(new Path(probe.resolve("d").toUri)): Unit
+    val (dirs, files) = paths.filter(_ != outDir).partition(java.nio.file.Files.isDirectory(_))
+    assert(files.exists(_.getFileName.toString.endsWith(".crc")), "the .crc side files stay")
+    files.foreach(p => assert(modeOf(p) == modeOf(probe.resolve("f")), s"file mode of $p"))
+    dirs.foreach(p => assert(modeOf(p) == modeOf(probe.resolve("d")), s"directory mode of $p"))
+  }
+
   test("doc preservation: empty spans / all-unknown kinds still yield one output row each") {
     import spark.implicits._
     import graft.gen.{InDoc, InSpan, MediaRow}

@@ -108,16 +108,12 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("resumable plan: summarizer UDF sits ABOVE the range exchange (sampling never re-runs it)") {
-    // mirror runResumable's plan construction (aggregate -> bucket ->
-    // range exchange -> finishing projection with the UDF)
+    // the plan runResumable writes (before its observe)
     val docs = Corpus.documents(spark, sfDir).toDF()
     val media = Corpus.media(spark, sfDir).toDF()
-    val assembled = ExtractJob.assembleSpans(spark,
-        ExtractJob.extractSpans(spark, docs, media))
-      .withColumn("bucket", ExtractJob.bucketCol(8))
-      .repartitionByRange(8, col("bucket"), col("doc_id"))
-    val out = ExtractJob.finishDocs(spark, assembled)
-    val plan = out.queryExecution.optimizedPlan.toString
+    val out = ExtractJob.bucketedDocs(spark, docs, media, ExtractJob.Config())
+    val optimized = out.queryExecution.optimizedPlan
+    val plan = optimized.toString
     val udfAt = plan.indexOf("UDF")
     val exchangeAt = plan.indexOf("RepartitionByExpression")
     assert(udfAt >= 0, s"summarizer UDF missing from plan:\n$plan")
@@ -127,6 +123,19 @@ class PlanSpec extends AnyFunSuite {
     // range sampling only ever evaluates the cheap aggregate below
     assert(udfAt < exchangeAt,
       s"summarizer must sit above the range exchange (UDF@$udfAt vs exchange@$exchangeAt):\n$plan")
+
+    // the range exchange is as wide as the kernel's content_hash
+    // repartition: sized to the cluster, not to the 64 output buckets
+    import org.apache.spark.sql.catalyst.expressions.SortOrder
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+    val repartitions = optimized.collect { case r: RepartitionByExpression => r }
+    val (range, hash) = repartitions.partition(_.partitionExpressions.exists(_.isInstanceOf[SortOrder]))
+    assert(range.size == 1 && hash.size == 1, s"one range and one hash repartition:\n$plan")
+    assert(hash.head.partitionExpressions.exists(_.references.exists(_.name == "content_hash")),
+      s"the hash repartition is the kernel's content_hash one:\n$plan")
+    assert(range.head.numPartitions == hash.head.numPartitions,
+      s"range width ${range.head.numPartitions} != kernel width ${hash.head.numPartitions}")
+    assert(range.head.numPartitions == ExtractJob.exchangeWidth(spark))
   }
 
   test("similarity/dedup hot paths carry no interpreted HOF trees (native kernels only)") {
