@@ -202,13 +202,4 @@ object Corpus {
       (ref, w, h, mean2)
     }.toDF("media_ref", "width", "height", "mean_intensity")
   }
-
-  /** Write the corpus under workDir (parquet; Iceberg-layout stand-in). */
-  def writeCorpus(spark: SparkSession, sfDir: String, workDir: String): (String, String) = {
-    val docsPath = s"$workDir/documents"
-    val mediaPath = s"$workDir/media"
-    documents(spark, sfDir).write.mode("overwrite").parquet(docsPath)
-    media(spark, sfDir).write.mode("overwrite").parquet(mediaPath)
-    (docsPath, mediaPath)
-  }
 }

@@ -39,6 +39,13 @@ final case class DocStructure(paragraphs: Seq[Paragraph], columns: Seq[ColumnGro
   */
 object StructureAnalyzer {
 
+  private val ReadFull = SuggestedAction("read_full", "Read full text")
+
+  /** The structure of a page with no paragraphs (a blank page): no
+    * paragraphs, no columns, only the read-full action.
+    */
+  val Blank: DocStructure = DocStructure(Vector.empty, Vector.empty, 0, 0, Vector(ReadFull))
+
   def analyze(bytes: Array[Byte], ocrRoi: (Array[Int], Int, Int) => String): DocStructure = {
     // ImageCodec.decode, not SynthRaster.parse: the structure path must
     // accept every media format the OCR path does (PNG/JPEG included) —
@@ -105,7 +112,7 @@ object StructureAnalyzer {
       actions += SuggestedAction("read_by_column", "Read column by column")
     if (withColumns.iterator.map(_.sentences.size).sum > 5)
       actions += SuggestedAction("summarize", "Read summary of text")
-    actions += SuggestedAction("read_full", "Read full text")
+    actions += ReadFull
 
     DocStructure(withColumns, columns, withColumns.length, columns.length, actions.toVector)
   }

@@ -219,21 +219,14 @@ final class OcrEngine(val mode: String, val language: String = "eng") {
     * tesseract configs (`fast` `--oem 0 --psm 6` / `standard` /
     * `accurate`, `app2.py:345-353`). Glyph CHOICE always uses the exact
     * per-page tables — the mode must never change the text (the north
-    * rule pins span text) — while confidence SCORING differs
-    * observably, the way OEM modes score differently over identical
-    * page segmentation:
+    * rule pins span text) — while confidence SCORING differs:
     *
-    *  - fast: scores against ONE fixed table set derived at the
-    *    nominal calibration threshold (128) — zero per-page table
-    *    derivation, the legacy-engine shared-model analog; confidence
-    *    <= standard wherever the page's own threshold differs;
-    *  - standard: exact per-threshold scoring (the default);
+    *  - standard (and fast, which scores the same): exact
+    *    per-threshold scoring;
     *  - accurate: scores the chosen glyph at the best of the 9 +-1px
     *    placements — 9x the scoring work, confidence >= standard (the
     *    jittered-scan tolerance a slow pass buys).
     */
-  final val NominalThreshold = 128
-
   /** Decode one raster. Deterministic: same bytes -> same Result. */
   def decode(bytes: Array[Byte], quality: String = "medium",
              ocrMode: String = "standard",
@@ -262,11 +255,6 @@ final class OcrEngine(val mode: String, val language: String = "eng") {
     // decode tables reflect exactly this page's binarization
     val (bin, pageT) = preprocess(px, w, h, mode)
     val templates = if (pageT >= 0) templatesAt(pageT) else chainTemplates
-    // fast engine mode scores against the fixed nominal tables; glyph
-    // choice stays on the exact ones
-    val confTemplates: Array[Long] =
-      if (ocrMode == "fast" && pageT >= 0) templatesAt(NominalThreshold)
-      else templates
 
     val cols = (w - 2 * SynthRaster.MARGIN) / SynthRaster.CELL_W
     val rows = (h - 2 * SynthRaster.MARGIN) / SynthRaster.CELL_H
@@ -294,8 +282,6 @@ final class OcrEngine(val mode: String, val language: String = "eng") {
           }
           // confidence SCORING: mode-dependent (see OcrEngine doc)
           val scoreD = ocrMode match {
-            case "fast" =>
-              Glyphs.popcount(mask ^ confTemplates(best))
             case "accurate" =>
               val x0 = SynthRaster.MARGIN + c * SynthRaster.CELL_W
               val y0 = SynthRaster.MARGIN + r * SynthRaster.CELL_H

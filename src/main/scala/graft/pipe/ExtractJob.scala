@@ -1,7 +1,7 @@
 package graft.pipe
 
 import graft.ocr.{EnginePool, OcrEngine}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
 
@@ -89,6 +89,10 @@ object ExtractJob {
 
   /** quality -> OCR engine mode (the v2 tesseract-config table,
     * `app2.py:345-353`): low -> fast, high -> accurate, else standard.
+    * The engine scores fast exactly like standard: low's chain
+    * binarizes every page at the fixed threshold 128, so its exact
+    * per-page tables already are the one fixed table set a separate
+    * fast scorer would use.
     */
   def ocrModeFor(quality: String): String = quality match {
     case "low" => "fast"
@@ -133,28 +137,61 @@ object ExtractJob {
     }
   }
 
+  /** The content hash every decode-once media kernel keys on: the
+    * sha-256 of the item's `bytes`, as column `content_hash`.
+    */
+  private[graft] def contentHash: Column = sha2(col("bytes"), 256).as("content_hash")
+
+  /** (media_ref, bytes, content_hash) rows hash-partitioned by content
+    * at [[exchangeWidth]]: every copy of the same bytes lands in one
+    * task, so a [[decodeOnce]] memo inside that task is GLOBALLY
+    * decode-once — the cache-hit semantics of the reference's OCR cache
+    * (C5/P1, `app2.py:329-379`) at one bytes shuffle. The explicit width
+    * is REPARTITION_BY_NUM, exempt from AQE partition coalescing, which
+    * otherwise merges the tiny-by-bytes but decode-heavy kernel input
+    * into a single task (measured: the whole OCR stage as one 1 s task
+    * at 8 cores).
+    */
+  private[graft] def byContent(spark: SparkSession,
+                               media: DataFrame): Dataset[(String, Array[Byte], String)] = {
+    import spark.implicits._
+    media
+      .select(col("media_ref"), col("bytes"), contentHash)
+      .repartition(exchangeWidth(spark), col("content_hash"))
+      .as[(String, Array[Byte], String)]
+  }
+
+  /** The per-task memo and poison guard of every media kernel; build it
+    * once per task. Wraps `kernel` into (content hash, bytes) => U,
+    * run once per distinct hash. An item the kernel throws on (corrupt
+    * or truncated bytes, a malformed container) yields `fallback` with
+    * one WARN line naming the hash and the exception class: one poison
+    * item must not fail the task, and with it the job.
+    */
+  private[graft] def decodeOnce[U](fallback: U)(kernel: Array[Byte] => U): (String, Array[Byte]) => U = {
+    val memo = scala.collection.mutable.HashMap.empty[String, U]
+    (hash, bytes) => memo.getOrElseUpdate(hash,
+      try kernel(bytes)
+      catch {
+        case NonFatal(e) =>
+          log.warn(s"media decode failed: content_hash=$hash ${e.getClass.getName}")
+          fallback
+      })
+  }
+
   /** The OCR kernel both forms run inside `mapPartitions`; call it once
     * per task. It resolves quality -> (chain, engine mode), fetches the
     * executor's engine from [[EnginePool]] (the reference threads
     * `language` into every OCR call, `-l {language}`, app.py:579; here
     * it selects the engine's decode tables), and returns the task's
-    * decode function: (content hash, bytes) -> (text, confidence),
-    * memoized per content hash. An item that fails to decode (corrupt
-    * or truncated bytes, a malformed container) yields ("", 0.0), the
-    * reference's OCR-failure shape (app.py:602), with one WARN line:
-    * one poison item must not fail the task, and with it the job.
+    * [[decodeOnce]] decode function: (content hash, bytes) -> (text,
+    * confidence). A poison item yields ("", 0.0), the reference's
+    * OCR-failure shape (app.py:602).
     */
   private[graft] def ocrKernel(cfg: Config): (String, Array[Byte]) => (String, Double) = {
     val ocrMode = ocrModeFor(cfg.quality)
     val engine = EnginePool.get(preprocessModeFor(cfg.quality), cfg.language)
-    val memo = scala.collection.mutable.HashMap.empty[String, (String, Double)]
-    (hash, bytes) => memo.getOrElseUpdate(hash,
-      try decodeMedia(engine, bytes, cfg.quality, ocrMode, cfg.preStages)
-      catch {
-        case NonFatal(e) =>
-          log.warn(s"media decode failed: content_hash=$hash ${e.getClass.getName}")
-          ("", 0.0)
-      })
+    decodeOnce(("", 0.0))(decodeMedia(engine, _, cfg.quality, ocrMode, cfg.preStages))
   }
 
   /** (doc_id, kind, text, media_ref, offset) span rows — explode_outer
@@ -219,25 +256,13 @@ object ExtractJob {
     // only media actually referenced is read/decoded (semi-join prune);
     // S3 size cap mirrors MAX_CONTENT_LENGTH = 16 MB (app.py:230).
     //
-    // ONE media scan, ONE shuffle of the bytes: rows are hash-
-    // partitioned by content_hash at an explicitly pinned width —
-    // REPARTITION_BY_NUM is exempt from AQE partition coalescing, which
-    // otherwise merges the tiny-by-bytes but decode-heavy kernel input
-    // into a single task (measured: the whole OCR stage as one 1s task
-    // at 8 cores). The kernel memoizes per content_hash inside the
-    // task; the hash partitioning makes that memo GLOBAL decode-once
-    // (every row of a hash lands in exactly one task) — the cache-hit
-    // semantics of the reference's OCR cache (C5/P1, app2.py:329-379)
-    // without a dropDuplicates aggregate (which compiled to a
-    // SortAggregate over the binary column and a second media scan for
-    // the ref->hash side).
+    // ONE media scan, ONE shuffle of the bytes ([[byContent]]), no
+    // dropDuplicates aggregate (which compiled to a SortAggregate over
+    // the binary column and a second media scan for the ref->hash side).
     val neededRefs = mediaSpans.select($"media_ref").distinct()
-    val refOcr = media
+    val refOcr = byContent(spark, media
       .filter(length($"bytes") <= cfg.maxMediaBytes)
-      .join(neededRefs, Seq("media_ref"), "left_semi")
-      .select($"media_ref", $"bytes", sha2($"bytes", 256).as("content_hash"))
-      .repartition(exchangeWidth(spark), $"content_hash")
-      .as[(String, Array[Byte], String)]
+      .join(neededRefs, Seq("media_ref"), "left_semi"))
       .mapPartitions { it =>
         val ocr = ocrKernel(cfg)
         it.map { case (ref, bytes, h) =>

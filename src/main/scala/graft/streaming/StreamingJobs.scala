@@ -90,8 +90,7 @@ object StreamingJobs {
       .filter($"kind" === "media")
       .select($"doc_id", $"kind", $"media_ref", $"offset")
       .join(media.filter(length($"bytes") <= cfg.maxMediaBytes), Seq("media_ref"), "left")
-      .select($"doc_id", $"media_ref", $"offset", $"bytes",
-        sha2($"bytes", 256).as("content_hash"))
+      .select($"doc_id", $"media_ref", $"offset", $"bytes", ExtractJob.contentHash)
       // Option[Int], not Int: a null span offset (nullable in parquet)
       // must flow through like the batch path does, not kill the
       // micro-batch in the deserializer

@@ -366,6 +366,48 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("structure jobs: a poison item yields its fallback row, never a failed job") {
+    import spark.implicits._
+    import graft.gen.MediaRow
+    import graft.layout.StructureAnalyzer
+    import graft.pipe.StructureJob
+    val clean = Seq(
+      "clean-a" -> graft.codec.SynthRaster.render(Corpus.mediaTextFor(3), 33L),
+      "clean-b" -> graft.codec.SynthRaster.render(Corpus.mediaTextFor(7), 34L))
+    // each one throws in the analyzer: a multi-page container, a JPEG
+    // with no body, no bytes at all
+    val poison = Seq(
+      "bad-pdf" -> graft.ops.Multimodal.synthPdf(Seq("alpha page", "beta page"), 5L),
+      "bad-jpeg4" -> Array(0xFF, 0xD8, 0xFF, 0xE0).map(_.toByte),
+      "bad-empty" -> Array.empty[Byte])
+    // a second ref to the same bytes: the memo hit still yields its own row
+    val cleanRefs = clean :+ ("clean-a-copy" -> clean.head._2)
+    val items = cleanRefs ++ poison
+    val media = items.map { case (r, b) => MediaRow(r, b) }.toDS().toDF()
+    val roi = (g: Array[Int], w: Int, h: Int) => graft.ocr.OcrEngine.decodeRoi(g, w, h)
+    poison.foreach { case (r, b) =>
+      assert(scala.util.Try(StructureAnalyzer.analyze(b, roi)).isFailure, s"$r must throw alone")
+    }
+
+    val structures = StructureJob.run(spark, media).as[StructureJob.StructureRow].collect()
+    assert(structures.map(_.media_ref).sorted.toSeq == items.map(_._1).sorted,
+      "one structure row per media_ref")
+    val structureOf = structures.map(r => r.media_ref -> r.structure).toMap
+    poison.foreach { case (r, _) => assert(structureOf(r) == StructureAnalyzer.Blank, r) }
+    cleanRefs.foreach { case (r, b) =>
+      assert(structureOf(r) == StructureAnalyzer.analyze(b, roi), r)
+    }
+
+    val viz = StructureJob.visualizations(spark, media).as[StructureJob.VizRow].collect()
+    assert(viz.map(_.media_ref).sorted.toSeq == items.map(_._1).sorted,
+      "one visualization row per media_ref")
+    val vizOf = viz.map(r => r.media_ref -> r.viz_jpeg.toSeq).toMap
+    poison.foreach { case (r, _) => assert(vizOf(r).isEmpty, r) }
+    cleanRefs.foreach { case (r, b) =>
+      assert(vizOf(r) == StructureAnalyzer.visualize(b, StructureAnalyzer.analyze(b, roi)).toSeq, r)
+    }
+  }
+
   test("corpus generation is deterministic and partitioning-independent") {
     val a = Corpus.documents(spark, sfDir).toDF().orderBy("doc_id")
       .select(to_json(struct(col("*")))).collect().map(_.getString(0))

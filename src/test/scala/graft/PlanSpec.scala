@@ -105,6 +105,18 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("RepartitionByExpression [content_hash"),
       s"kernel input must be pinned-width repartitioned by content_hash " +
         s"(AQE byte-coalescing otherwise collapses the decode stage to one task):\n$plan")
+
+    // the structure kernels run on the same decode-once exchange
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+    for (structure <- Seq(graft.pipe.StructureJob.run(spark, media),
+                          graft.pipe.StructureJob.visualizations(spark, media))) {
+      val optimized = structure.queryExecution.optimizedPlan
+      val repartitions = optimized.collect { case r: RepartitionByExpression => r }
+      assert(repartitions.size == 1 &&
+        repartitions.head.partitionExpressions.exists(_.references.exists(_.name == "content_hash")) &&
+        repartitions.head.numPartitions == ExtractJob.exchangeWidth(spark),
+        s"structure kernel input must be one content_hash repartition at the kernel width:\n$optimized")
+    }
   }
 
   test("resumable plan: summarizer UDF sits ABOVE the range exchange (sampling never re-runs it)") {
