@@ -72,6 +72,24 @@ object ExtractJob {
     */
   def exchangeWidth(spark: SparkSession): Int = spark.sparkContext.defaultParallelism * 2
 
+  /** DataFrameWriter options of both [[runResumable]] commit writes
+    * (the bucketed data and the manifest append):
+    *  - [[NioLocalFileSystem.writerOptions]]: `file:` paths set their
+    *    permissions in-process instead of forking `chmod`;
+    *  - zstd at Parquet's default level, the codec Iceberg writes by
+    *    default; readers take the codec from each file, so files
+    *    written under another codec still read and resume;
+    *  - min/max statistics truncated to 64 bytes (parquet's own
+    *    column-index default). Unbounded, parquet-mr stores whole
+    *    document texts (`text`, `summary`, `spans.text`) in every
+    *    footer; truncated, it keeps a lower bound and an incremented
+    *    upper bound, still valid for pruning. Every `doc_id` is shorter
+    *    than 64 bytes, so its bounds stay exact.
+    */
+  val commitOptions: Map[String, String] = NioLocalFileSystem.writerOptions ++ Map(
+    "compression" -> "zstd",
+    "parquet.statistics.truncate.length" -> "64")
+
   private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.pipe.ExtractJob")
 
   def preprocessModeFor(quality: String): String = quality match {
@@ -482,12 +500,8 @@ object ExtractJob {
       .observe(obs, stats($"bucket", size($"spans"), $"media_count", $"confidence")
         .as("bucket_stats"))
 
-    // both writes go through NioLocalFileSystem: without Hadoop's native
-    // library every file, .crc file and directory a write creates forks
-    // a `chmod`; the cache switch inside writerOptions keeps the
-    // scheme-keyed FileSystem cache from handing back the forking one
     out.write
-      .options(NioLocalFileSystem.writerOptions)
+      .options(commitOptions)
       .partitionBy("bucket")
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite")
@@ -502,7 +516,7 @@ object ExtractJob {
       .withColumn("input_snapshot_id", lit(snapshotId))
       .withColumn("committed_at", current_timestamp())
       .coalesce(1)
-      .write.options(NioLocalFileSystem.writerOptions).mode("append").parquet(manifestPath)
+      .write.options(commitOptions).mode("append").parquet(manifestPath)
 
     RunSummary(rows.map(_.doc_count).sum, rows.map(_.span_count).sum,
       rows.map(_.media_count).sum, rows.size, snapshotId)

@@ -75,41 +75,118 @@ object Dev {
       case _ => -1.0
     }
 
-  /** Host-wide count of processes forked since boot (`processes` in
-    * /proc/stat), or -1 where there is no /proc. Its delta around a job
-    * counts that job's child processes plus any other process's forks.
+  /** Host-wide count of `clone()` calls since boot (`processes` in
+    * /proc/stat), or -1 where there is no /proc. It counts thread starts
+    * as well as process forks, of this JVM and of every other process.
     */
-  private def hostForks(): Long = try {
+  private def hostClones(): Long = try {
     val src = scala.io.Source.fromFile("/proc/stat")
     try src.getLines().find(_.startsWith("processes ")).map(_.drop(10).trim.toLong).getOrElse(-1L)
     finally src.close()
   } catch { case NonFatal(_) => -1L }
 
-  /** What one run left on disk: data parquet files under `extracted/`,
-    * `.crc` side files and directories (the output root included).
+  private def threadsStarted(): Long =
+    java.lang.management.ManagementFactory.getThreadMXBean.getTotalStartedThreadCount
+
+  /** Janino compiles of generated code so far (`CodegenMetrics`). */
+  private def janinoCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** One reading of this process's CPU clock ticks (USER_HZ = 100 per
+    * second): utime + stime of every live thread keyed by (tid, start
+    * time) with its native name, of the whole process (exited threads
+    * included), and of its waited-for children (cutime + cstime).
     */
-  final case class Written(parquet: Int, crc: Int, dirs: Int)
+  private final case class ProcCpu(threads: Map[(String, Long), (String, Long)], self: Long, child: Long)
+
+  private def procCpu(): ProcCpu = {
+    // the name sits in parentheses and may hold spaces; of the numeric
+    // fields after the state letter, 10/11 are utime/stime, 12/13
+    // cutime/cstime and 18 the start time (later fields can exceed a Long)
+    def stat(f: java.io.File): (String, Array[Long]) = {
+      val st = new String(java.nio.file.Files.readAllBytes(f.toPath))
+      val close = st.lastIndexOf(')')
+      (st.substring(st.indexOf('(') + 1, close),
+        st.substring(close + 2).split(" ").slice(1, 20).map(_.toLong))
+    }
+    val threads = Option(new java.io.File("/proc/self/task").listFiles()).toSeq.flatten.flatMap { t =>
+      try {
+        val (name, f) = stat(new java.io.File(t, "stat"))
+        Some((t.getName, f(18)) -> (name, f(10) + f(11)))
+      } catch { case NonFatal(_) => None } // the thread exited between list and read
+    }.toMap
+    try {
+      val (_, self) = stat(new java.io.File("/proc/self/stat"))
+      ProcCpu(threads, self(10) + self(11), self(12) + self(13))
+    } catch { case NonFatal(_) => ProcCpu(threads, 0L, 0L) } // no /proc
+  }
+
+  /** The thread group of a native thread name (Linux keeps its first
+    * 15 characters): the executor's task threads, the JIT compilers,
+    * GC and VM service threads, the driver (main thread, DAG scheduler,
+    * exchange and query-stage pools), or other.
+    */
+  private def threadGroup(name: String): String =
+    if (name.startsWith("Executor task")) "task"
+    else if (name.startsWith("C1 Compiler") || name.startsWith("C2 Compiler")) "jit"
+    else if (Seq("GC ", "G1 ", "VM ", "Sweeper", "Service Thread", "Monitor Deflat").exists(name.startsWith)) "gc_vm"
+    else if (name == "main" || name == "java" ||
+      Seq("dag-scheduler", "shuffle-exchang", "broadcast-excha", "QueryStageCreat", "ResultQueryStag")
+        .exists(name.startsWith)) "driver"
+    else "other"
+
+  /** CPU seconds between two readings by [[threadGroup]], plus `exited`
+    * (threads that ended in between: the process delta minus the live
+    * threads' deltas) and `child` (waited-for child processes, outside
+    * the process's own CPU).
+    */
+  final case class CpuSplit(groups: Map[String, Double], exited: Double, child: Double) {
+    def total: Double = groups.values.sum + exited
+    override def toString: String =
+      (Seq("task", "jit", "gc_vm", "driver", "other").map(g => g -> groups.getOrElse(g, 0.0)) ++
+        Seq("exited" -> exited, "child" -> child)).map { case (k, v) => f"$k=$v%.2f" }.mkString(" ")
+  }
+
+  private def cpuSplit(a: ProcCpu, b: ProcCpu): CpuSplit = {
+    val live = b.threads.toSeq.map { case (k, (name, ticks)) =>
+      threadGroup(name) -> (ticks - a.threads.get(k).fold(0L)(_._2))
+    }
+    val groups = live.groupMapReduce(_._1)(_._2)(_ + _)
+    CpuSplit(groups.map { case (g, t) => g -> t / 100.0 },
+      (b.self - a.self - live.map(_._2).sum) / 100.0, (b.child - a.child) / 100.0)
+  }
+
+  /** What one run left on disk: data parquet files under `extracted/`,
+    * `.crc` side files, directories (the output root included) and the
+    * bytes of every parquet file, data and manifest.
+    */
+  final case class Written(parquet: Int, crc: Int, dirs: Int, parquetBytes: Long)
 
   private def written(outDir: java.io.File): Written = {
     val s = java.nio.file.Files.walk(outDir.toPath)
     val paths = try s.iterator().asScala.toVector finally s.close()
     val data = outDir.toPath.resolve("extracted")
     def name(p: java.nio.file.Path) = p.getFileName.toString
+    def isParquet(p: java.nio.file.Path) = name(p).endsWith(".parquet") && !name(p).startsWith(".")
     Written(
-      paths.count(p => p.startsWith(data) && name(p).endsWith(".parquet") && !name(p).startsWith(".")),
+      paths.count(p => p.startsWith(data) && isParquet(p)),
       paths.count(p => name(p).endsWith(".crc")),
-      paths.count(p => java.nio.file.Files.isDirectory(p)))
+      paths.count(p => java.nio.file.Files.isDirectory(p)),
+      paths.filter(isParquet).map(java.nio.file.Files.size).sum)
   }
 
   /** One timed run: docs committed, wall seconds, process CPU seconds,
-    * host-wide forks during the run and the files it wrote.
+    * host-wide `clone()` calls and JVM thread starts during the run, its
+    * CPU split by thread group, its Janino compiles and the files it
+    * wrote.
     */
-  final case class Timed(docs: Long, sec: Double, cpu: Double, forks: Long, files: Written)
+  final case class Timed(docs: Long, sec: Double, cpu: Double, clones: Long, threads: Long,
+                         split: CpuSplit, compiles: Long, files: Written)
 
   /** Timed `ExtractJob.runResumable` runs, each into a fresh dir under
     * one temp base. A run's dir is counted and then deleted after its
     * clock stops, so neither is timed and repeated runs do not fill the
-    * disk.
+    * disk. The /proc readings sit outside the clock too.
     */
   final class Runs(spark: SparkSession, docs: DataFrame, media: DataFrame, prefix: String) {
     private val base = java.nio.file.Files.createTempDirectory(prefix).toFile
@@ -118,14 +195,20 @@ object Dev {
     def once(): Timed = {
       n += 1
       val outDir = new java.io.File(base, s"run_$n")
-      val f0 = hostForks()
+      val p0 = procCpu()
+      val j0 = janinoCompiles()
+      val th0 = threadsStarted()
+      val f0 = hostClones()
       val c0 = cpuSec()
       val t0 = System.nanoTime()
       val summary = ExtractJob.runResumable(spark, docs, media, outDir.getAbsolutePath)
       val sec = (System.nanoTime() - t0) / 1e9
       val cpu = cpuSec() - c0
-      val forks = if (f0 < 0) -1L else hostForks() - f0
-      val t = Timed(summary.docCount, sec, cpu, forks, written(outDir))
+      val clones = if (f0 < 0) -1L else hostClones() - f0
+      val threads = threadsStarted() - th0
+      val compiles = janinoCompiles() - j0
+      val split = cpuSplit(p0, procCpu())
+      val t = Timed(summary.docCount, sec, cpu, clones, threads, split, compiles, written(outDir))
       deleteRec(outDir) // outside the timed region
       t
     }
@@ -312,9 +395,12 @@ object Dev {
   /** Runs the flagship on a prepared bench corpus with an in-JVM stack
     * sampler (20 ms tick over executor task threads) and prints the
     * hottest frames — the "where is the time actually going" probe.
-    * Each profiled run also prints what the job cost outside the JVM:
-    * host-wide forks during the run and the data parquet, `.crc` and
-    * directory counts of its output.
+    * Each profiled run also prints host-wide `clone()` calls beside the
+    * JVM's thread starts (the two match when the JVM forks nothing),
+    * the data parquet, `.crc` and directory counts of its output, the
+    * committed parquet bytes (data and manifest) per doc, and a CPU
+    * split by thread group next to the process CPU it must add up to,
+    * with the run's Janino compiles.
     *
     * args: <docsPath> <mediaPath> [runs]
     */
@@ -363,8 +449,11 @@ object Dev {
     println(f"[pipeprofile] $n run(s) in ${timed.map(_.sec).sum}%.1f s at local[$cores]")
     timed.zipWithIndex.foreach { case (t, i) =>
       println(f"[pipeprofile] run ${i + 1}: docs=${t.docs} sec=${t.sec}%.2f cpu_s=${t.cpu}%.2f " +
-        s"forks_host_wide=${t.forks} data_parquet=${t.files.parquet} " +
-        s"crc=${t.files.crc} dirs=${t.files.dirs}")
+        s"clones_host_wide=${t.clones} jvm_threads_started=${t.threads} " +
+        s"data_parquet=${t.files.parquet} crc=${t.files.crc} dirs=${t.files.dirs} " +
+        f"committed_bytes_per_doc=${t.files.parquetBytes.toDouble / t.docs.max(1L)}%.1f")
+      println(f"[pipeprofile] run ${i + 1} cpu_split_s: ${t.split} sum=${t.split.total}%.2f " +
+        f"process=${t.cpu}%.2f janino_compiles=${t.compiles}")
     }
     def top(m: java.util.concurrent.ConcurrentHashMap[String, Integer], label: String): Unit = {
       val total = m.values.asScala.map(_.toInt).sum.max(1)

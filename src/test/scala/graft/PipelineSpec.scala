@@ -2,6 +2,8 @@ package graft
 
 import graft.gen.Corpus
 import graft.pipe.ExtractJob
+import org.apache.parquet.hadoop.metadata.{ColumnChunkMetaData, CompressionCodecName}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -101,11 +103,26 @@ class PipelineSpec extends AnyFunSuite {
     val firstBuckets = committed.select("bucket").collect().map(_.getInt(0)).toSet
     assert(firstBuckets.nonEmpty && firstBuckets.subsetOf((0 until 4).toSet))
 
+    // a manifest written before the commit writes used zstd: rewrite the
+    // committed manifest files with snappy, Spark's default codec
+    val manifestDir = java.nio.file.Paths.get(outDir, "manifest")
+    val snappy = java.nio.file.Files.createTempDirectory("graft-resume-snappy").resolve("manifest")
+    committed.write.option("compression", "snappy").parquet(snappy.toString)
+    org.apache.commons.io.FileUtils.deleteDirectory(manifestDir.toFile)
+    java.nio.file.Files.move(snappy, manifestDir)
+    assert(columnChunks(manifestDir).map(_._2.getCodec).toSet == Set(CompressionCodecName.SNAPPY))
+
     // resume with the full input: only the uncommitted buckets run
-    ExtractJob.runResumable(spark, docs, media, outDir, cfg)
+    val resumedRun = ExtractJob.runResumable(spark, docs, media, outDir, cfg)
     val manifest2 = spark.read.parquet(s"$outDir/manifest")
     assert(manifest2.select("bucket").distinct().count() ==
       manifest2.count(), "each bucket committed exactly once")
+    assert(resumedRun.newBuckets == manifest2.count() - firstBuckets.size)
+    assert(columnChunks(manifestDir).map(_._2.getCodec).toSet ==
+      Set(CompressionCodecName.SNAPPY, CompressionCodecName.ZSTD), "a mixed-codec manifest")
+    val health = graft.pipe.Health.check(spark, s"$outDir/manifest").collect()(0)
+    assert(health.getString(0) == "success")
+    assert(health.getLong(health.fieldIndex("committed_docs")) == docs.count())
 
     val resumed = spark.read.parquet(s"$outDir/extracted")
       .select(col("doc_id"), col("text")).orderBy("doc_id").collect()
@@ -250,6 +267,26 @@ class PipelineSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  /** Every column chunk in the footers of the `.parquet` files under
+    * `dir`, with its file, read with parquet-hadoop.
+    */
+  private def columnChunks(dir: java.nio.file.Path): Seq[(java.nio.file.Path, ColumnChunkMetaData)] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(dir)
+    val files = try walk.toArray.map(_.asInstanceOf[java.nio.file.Path]).toSeq finally walk.close()
+    files.filter { p =>
+      val n = p.getFileName.toString
+      n.endsWith(".parquet") && !n.startsWith(".")
+    }.flatMap { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toUri), new org.apache.hadoop.conf.Configuration()))
+      try r.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala.map(f -> _))
+      finally r.close()
+    }
+  }
+
   /** Permission bits (0 to 07777) of a local path. */
   private def modeOf(p: java.nio.file.Path): Int =
     java.nio.file.Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
@@ -303,6 +340,28 @@ class PipelineSpec extends AnyFunSuite {
     assert(summary.newBuckets > width, "the corpus populates more buckets than the exchange has tasks")
     assert(data.size <= summary.newBuckets + width - 1,
       s"${data.size} data files for ${summary.newBuckets} populated buckets at width $width")
+
+    // both commit writes: zstd pages, binary min/max statistics of at
+    // most 64 bytes (whole document texts otherwise), exact doc_id bounds
+    val chunks = columnChunks(outDir.resolve("extracted")) ++ columnChunks(outDir.resolve("manifest"))
+    assert(chunks.map(_._1).toSet.size > data.size, "every data file and a manifest file")
+    chunks.foreach { case (f, c) =>
+      assert(c.getCodec == CompressionCodecName.ZSTD, s"codec of ${c.getPath} in $f")
+      val st: org.apache.parquet.column.statistics.Statistics[_] = c.getStatistics
+      if (c.getPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.BINARY && st.hasNonNullValue)
+        assert(st.getMinBytes.length <= 64 && st.getMaxBytes.length <= 64,
+          s"min/max of ${c.getPath} in $f hold ${st.getMinBytes.length}/${st.getMaxBytes.length} bytes")
+    }
+    val docIdBounds = spark.read.parquet(outDir.resolve("extracted").toString)
+      .groupBy(input_file_name()).agg(min("doc_id"), max("doc_id")).collect()
+      .map(r => java.nio.file.Paths.get(java.net.URI.create(r.getString(0))) -> ((r.getString(1), r.getString(2))))
+      .toMap
+    assert(docIdBounds.keySet == data.toSet)
+    chunks.filter(_._2.getPath.toDotString == "doc_id").groupBy(_._1).foreach { case (f, cs) =>
+      def str(b: Array[Byte]) = new String(b, java.nio.charset.StandardCharsets.UTF_8)
+      assert((cs.map(c => str(c._2.getStatistics.getMinBytes)).min,
+        cs.map(c => str(c._2.getStatistics.getMaxBytes)).max) == docIdBounds(f), s"doc_id bounds of $f")
+    }
 
     // every written file and directory has the mode the stock (forking)
     // local file system gives a fresh file and directory
