@@ -1472,7 +1472,6 @@ object SparkEntry {
       // so JVM == DuckDB bit-for-bit) — the relational form of the
       // same rule cost 6 shuffles and ~12 s of plan/codegen for a
       // per-row decision.
-      val sumUdf = udf { (t: String) => graft.text.Summarizer.summarize(t, 0.3) }
       val eligUdf = tieEligUdf
       val sentsArr = transform(
         sequence(lit(0), floor((size(col("toks")) - 1) / lit(8)).cast("int")),
@@ -1486,7 +1485,8 @@ object SparkEntry {
         .filter(eligUdf(col("sents")))
         .select(col("doc_id"),
           trim(regexp_replace(regexp_replace(
-            sumUdf(concat(array_join(col("sents"), ". "), lit("."))),
+            graft.functions.GraftFunctions.summarize(
+              concat(array_join(col("sents"), ". "), lit("."))),
             "[.!?]", ""), "\\s+", " ")).as("summary"))
       // no trailing orderBy: a global sort range-samples its child,
       // evaluating the kernel-summarizer chain TWICE; the driver's

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{AnalysisException, Column, GraftBridge, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Coalesce, Expression, KnownNullable, Literal}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -99,6 +99,15 @@ object GraftFunctions {
   /** `filter(transform(split(text, "[.!?]\\s+"), trim), _ != "")`. */
   def sentencesSql(c: Column): Column =
     call("graft_sentences_sql", TextKernels, "sentenceSplitSql", arr(StringType), c -> Str)()
+
+  /** The extractive summary, `Summarizer.summarize(text, 0.3)`; a NULL
+    * text gives "". Typed nullable whatever the input's nullability, so
+    * the committed extraction schema keeps `summary` an OPTIONAL field.
+    */
+  def summarize(text: Column): Column =
+    GraftBridge.toColumn(KnownNullable(Coalesce(Seq(GraftBridge.toExpression(
+      call("graft_summarize", TextKernels, "summarize", StringType, text -> Str)()),
+      Literal("")))))
 
   /** Seed-42 xxhash64 of each lowercase word token. */
   def tokenXxhash64(c: Column): Column =

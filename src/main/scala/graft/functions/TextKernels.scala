@@ -16,10 +16,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * input. The only step that can escape ASCII is `toLowerCase` (e.g.
   * Kelvin sign U+212A lowercases INTO 'k'), so the lowercasing kernels
   * take the byte scan only under [[allAscii]] and otherwise the regex
-  * form [[lowerWords]] — the same guard recipe as `TextOps.tokenize`
-  * and `collapseWs`. Law-checked against the regex in GraftProps.
+  * form [[lowerWords]]. `TextOps.tokenize` (the summarizer's Unicode
+  * `\w+` tokenizer) takes the same byte scan under the same guard.
+  * Law-checked against the regex in GraftProps.
   */
-private[functions] object AsciiScan {
+private[graft] object AsciiScan {
   private val NON_WORD = java.util.regex.Pattern.compile("\\W+")
 
   @inline def isWord(c: Byte): Boolean =
@@ -175,6 +176,12 @@ object NfcKernel {
   * expression chain (law-checked against it in FunctionsSpec/GraftProps).
   */
 object TextKernels {
+
+  /** [[graft.text.Summarizer.summarize]] at ratio 0.3, the extraction
+    * output's summary.
+    */
+  def summarize(s: UTF8String): UTF8String =
+    UTF8String.fromString(graft.text.Summarizer.summarize(s.toString, 0.3))
 
   /** 64-bit polynomial rolling fingerprint (Rabin-Karp family, base
     * 1000003, wrap-around arithmetic) of the string's UTF-8 bytes.

@@ -238,17 +238,23 @@ object ExtractJob {
     val isText = col("kind") === "text"
     exploded
       .filter(!(col("kind") <=> "media"))
+      // native collapse+trim kernel (round-6): byte-identical to
+      // trim(regexp_replace(text, "\s+", " ")), one pass, no regex
+      .withColumn("__clean", graft.functions.GraftFunctions.collapseWs(col("text")))
       .select(
         col("doc_id"),
         when(isText, col("kind")).otherwise(lit(null).cast("string")).as("kind"),
-        // native collapse+trim kernel (round-6): byte-identical to
-        // trim(regexp_replace(text, "\s+", " ")), one pass, no regex
-        when(isText, graft.functions.GraftFunctions.collapseWs(col("text")))
-          .otherwise(lit("")).as("text"),
+        when(isText, col("__clean")).otherwise(lit("")).as("text"),
         when(isText, col("media_ref")).otherwise(lit("")).as("media_ref"),
         when(isText, col("offset")).otherwise(lit(null).cast("int")).as("offset"),
+        // stripped length > 50, stripping all ASCII whitespace like the
+        // reference's `strip()` (Spark's `trim` strips spaces only). The
+        // collapsed text is never longer than the stripped one, so the
+        // costlier btrim runs only for spans whose collapsed text is short.
         when(isText,
-          when(length(trim(col("text"))) > 50, lit(90.0)).otherwise(lit(70.0)))
+          when(length(col("__clean")) > 50 ||
+            length(btrim(col("text"), lit(" \t\n\u000B\f\r"))) > 50, lit(90.0))
+            .otherwise(lit(70.0)))
           .otherwise(lit(0.0)).as("confidence"))
   }
 
@@ -352,7 +358,6 @@ object ExtractJob {
     */
   def finishDocs(spark: SparkSession, assembled: DataFrame): DataFrame = {
     import spark.implicits._
-    val summarizeUdf = udf { (text: String) => graft.text.Summarizer.summarize(text, 0.3) }
     assembled
       // back to input_hint field order, offset kept per span:
       // arrays_zip over GetArrayStructFields extracts — a positional
@@ -364,7 +369,7 @@ object ExtractJob {
       .withColumn("confidence", coalesce($"__conf", lit(0.0)))
       .withColumn("media_count", $"__media_count")
       .drop("sp", "__conf", "__media_count")
-      .withColumn("summary", summarizeUdf($"text"))
+      .withColumn("summary", graft.functions.GraftFunctions.summarize($"text"))
       .withColumn("compression_ratio",
         when(length($"text") > 0, length($"summary").cast("double") / length($"text"))
           .otherwise(lit(0.0)))
@@ -422,7 +427,7 @@ object ExtractJob {
     * bucket only. The exchange sits BETWEEN the aggregate and the
     * projection: range partitioning samples its child, and the child
     * here is the cheap (doc_id, sp, bucket) aggregate — the summarizer
-    * UDF runs strictly after the exchange, exactly once per document.
+    * kernel runs strictly after the exchange, exactly once per document.
     */
   def bucketedDocs(spark: SparkSession, docs: DataFrame, media: DataFrame,
                    cfg: Config): DataFrame = {

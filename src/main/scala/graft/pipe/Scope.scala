@@ -1,6 +1,7 @@
 package graft.pipe
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.GraftFunctions
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scope text assembly + summarize — the T9 family
@@ -13,49 +14,26 @@ import org.apache.spark.sql.functions._
   *   column    = that column's paragraphs' texts joined "\n\n"
   *               (`app.py:1996-2005`)
   *
-  * Batch form: scope assembly over the extracted/structure tables as
-  * pure column programs; the summarizer is the reference-exact kernel.
+  * The full scope is the extraction output itself: its `text`,
+  * `summary` and `compression_ratio` columns ([[ExtractJob.finishDocs]]).
+  * Page and column scopes are pure column programs over the
+  * extracted/structure tables, summarized by the one summarizer kernel
+  * ([[GraftFunctions.summarize]]).
   */
 object Scope {
 
-  private val summarizeUdf = udf { (t: String, ratio: Double) =>
-    graft.text.Summarizer.summarize(t, ratio)
-  }
-
-  /** Full-scope: per document, all span texts joined "\n\n" (this is
-    * the `text` column the extract job already carries) + summary +
-    * compression ratio (`app.py:2026-2034`).
-    */
-  def fullScope(extracted: DataFrame, ratio: Double = 0.3): DataFrame =
-    extracted.select(
-      col("doc_id"),
-      col("text").as("scope_text"),
-      summarizeUdf(col("text"), lit(ratio)).as("summary"))
-      .withColumn("compression_ratio",
-        when(length(col("scope_text")) > 0,
-          round(length(col("summary")).cast("double") / length(col("scope_text")), 4))
-          .otherwise(0.0))
-
   /** Page-scope: one row per span ("page"), summarized individually. */
-  def pageScope(extracted: DataFrame, ratio: Double = 0.3): DataFrame =
+  def pageScope(extracted: DataFrame): DataFrame =
     extracted
       .select(col("doc_id"), explode(col("spans")).as("s"))
       .select(col("doc_id"), col("s.offset").as("page"), col("s.text").as("scope_text"))
-      .withColumn("summary", summarizeUdf(col("scope_text"), lit(ratio)))
-
-  /** Paragraph-scope over structure rows: one row per paragraph. */
-  def paragraphScope(structures: DataFrame, ratio: Double = 0.3): DataFrame =
-    structures
-      .select(col("media_ref"), explode(col("structure.paragraphs")).as("p"))
-      .select(col("media_ref"), col("p.id").as("paragraph_id"),
-        col("p.text").as("scope_text"))
-      .withColumn("summary", summarizeUdf(col("scope_text"), lit(ratio)))
+      .withColumn("summary", GraftFunctions.summarize(col("scope_text")))
 
   /** Column-scope: the column's paragraphs' texts joined "\n\n" in
     * paragraph-id order (`app.py:1996-2005` iterates the column's id
     * list, which is built in paragraph order).
     */
-  def columnScope(structures: DataFrame, ratio: Double = 0.3): DataFrame =
+  def columnScope(structures: DataFrame): DataFrame =
     structures
       .select(col("media_ref"), col("structure.paragraphs").as("paras"),
         explode(col("structure.columns")).as("c"))
@@ -65,5 +43,5 @@ object Scope {
             filter(col("paras"), p => array_contains(col("c.paragraphs"), p("id"))),
             p => p("text")),
           "\n\n").as("scope_text"))
-      .withColumn("summary", summarizeUdf(col("scope_text"), lit(ratio)))
+      .withColumn("summary", GraftFunctions.summarize(col("scope_text")))
 }

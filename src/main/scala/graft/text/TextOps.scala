@@ -1,6 +1,9 @@
 package graft.text
 
+import java.nio.charset.StandardCharsets
 import java.util.regex.Pattern
+
+import graft.functions.AsciiScan
 
 /** Text primitives shared by the summarizer, the structure analyzer and
   * the extraction pipeline. Each mirrors one reference behavior, cited
@@ -67,40 +70,27 @@ object TextOps {
     */
   private val wordPat = Pattern.compile("\\w+", Pattern.UNICODE_CHARACTER_CLASS)
 
-  @inline private def asciiWord(c: Char): Boolean =
-    (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
-      (c >= '0' && c <= '9') || c == '_'
-
   def tokenize(s: String): Vector[String] = {
     // ASCII fast path (round-6; the regex matcher showed up at ~2% of
     // flagship task samples through the summarizer): on a pure-ASCII
     // string, UNICODE_CHARACTER_CLASS \w is exactly [a-zA-Z0-9_]
-    // (documented Java semantics), so a hand scan over the lowercased
-    // chars produces the identical token list (law-checked against
-    // the regex in GraftProps). Any char >= 0x80 falls back to the
-    // regex path untouched.
+    // (documented Java semantics), so the byte scan [[AsciiScan.runs]]
+    // over the lowercased string produces the identical token list, its
+    // byte offsets being char offsets (law-checked against the regex in
+    // GraftProps). Any char >= 0x80 takes the regex path, except a lone
+    // surrogate: it encodes as '?', a separator to both scan and regex.
     val lower = s.toLowerCase
-    var ascii = true
-    var i = 0
-    val n = lower.length
-    while (ascii && i < n) { if (lower.charAt(i) >= 0x80) ascii = false; i += 1 }
-    if (!ascii) {
-      val m = wordPat.matcher(lower)
-      val out = Vector.newBuilder[String]
-      while (m.find()) out += m.group()
-      out.result()
+    val b = lower.getBytes(StandardCharsets.UTF_8)
+    val out = Vector.newBuilder[String]
+    if (AsciiScan.allAscii(b)) {
+      val r = AsciiScan.runs(b)
+      var j = 0
+      while (j < r.length) { out += lower.substring(r(j), r(j + 1)); j += 2 }
     } else {
-      val out = Vector.newBuilder[String]
-      i = 0
-      while (i < n) {
-        if (asciiWord(lower.charAt(i))) {
-          val start = i
-          while (i < n && asciiWord(lower.charAt(i))) i += 1
-          out += lower.substring(start, i)
-        } else i += 1
-      }
-      out.result()
+      val m = wordPat.matcher(lower)
+      while (m.find()) out += m.group()
     }
+    out.result()
   }
 
   /** Whitespace collapse + trim — the normalization stage applied to
@@ -152,7 +142,8 @@ object Stopwords {
   *
   *  - guards: empty / stripped length < 100 -> identity; <= 3 sentences
   *    -> identity;
-  *  - k = max(1, int(n * ratio)) or min(max_sentences, n);
+  *  - k = max(1, int(n * ratio)) (v2's `max_sentences` override is not
+  *    reproduced: nothing here sets it);
   *  - word freq over non-stopword tokens of all sentences, max-normalized;
   *  - sentence score = (sum of normalized freq of its non-stopword
   *    tokens) / token count (stopword tokens count in the denominator
@@ -186,22 +177,15 @@ object Summarizer {
     }
   }
 
-  def summarize(text: String, ratio: Double = 0.3, maxSentences: Option[Int] = None): String = {
+  def summarize(text: String, ratio: Double = 0.3): String = {
     if (text == null || text.trim.length < 100) return if (text == null) "" else text
     val sentences = TextOps.splitSentences(text)
     val n = sentences.length
     if (n <= 3) return text
-    val k = maxSentences match {
-      case Some(m) if m > 0 => math.min(m, n)
-      case _ => math.max(1, (n * ratio).toInt)
-    }
+    val k = math.max(1, (n * ratio).toInt)
     val scores = scoreSentences(sentences)
     // stable sort by score desc == sort by (-score, index) since indices unique
     val ranked = (0 until n).sortBy(i => (-scores(i), i)).take(k).sorted
     ranked.map(sentences).mkString(" ")
   }
-
-  def compressionRatio(original: String, summary: String): Double =
-    if (original == null || original.isEmpty) 0.0
-    else summary.length.toDouble / original.length
 }

@@ -119,6 +119,9 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  /** How the summarizer kernel's call renders in an optimized plan. */
+  private val SummarizerCall = "TextKernels.summarize("
+
   test("resumable plan: summarizer UDF sits ABOVE the range exchange (sampling never re-runs it)") {
     // the plan runResumable writes (before its observe)
     val docs = Corpus.documents(spark, sfDir).toDF()
@@ -126,15 +129,15 @@ class PlanSpec extends AnyFunSuite {
     val out = ExtractJob.bucketedDocs(spark, docs, media, ExtractJob.Config())
     val optimized = out.queryExecution.optimizedPlan
     val plan = optimized.toString
-    val udfAt = plan.indexOf("UDF")
+    val kernelAt = plan.indexOf(SummarizerCall)
     val exchangeAt = plan.indexOf("RepartitionByExpression")
-    assert(udfAt >= 0, s"summarizer UDF missing from plan:\n$plan")
+    assert(kernelAt >= 0, s"summarizer kernel missing from plan:\n$plan")
     assert(exchangeAt >= 0, s"range exchange missing from plan:\n$plan")
-    // tree strings print parents first: the UDF projection must appear
+    // tree strings print parents first: the kernel projection must appear
     // BEFORE (above) the exchange, i.e. it runs after the shuffle and
     // range sampling only ever evaluates the cheap aggregate below
-    assert(udfAt < exchangeAt,
-      s"summarizer must sit above the range exchange (UDF@$udfAt vs exchange@$exchangeAt):\n$plan")
+    assert(kernelAt < exchangeAt,
+      s"summarizer must sit above the range exchange (kernel@$kernelAt vs exchange@$exchangeAt):\n$plan")
 
     // the range exchange is as wide as the kernel's content_hash
     // repartition: sized to the cluster, not to the 64 output buckets
@@ -200,6 +203,9 @@ class PlanSpec extends AnyFunSuite {
       "q85_ols_gram", "q102_shingle_containment", "x05_simhash",
       "x01_extract_spans", "x02_extract_docs", "x13_scope_page",
       "x16_pdf_extract", "x18_extract_text_spans")
+    // the extraction pipeline also carries no Scala UDF: its summarizer
+    // is a native kernel (x07/x14 keep their oracle-eligibility UDF)
+    val udfFree = Set("x01_extract_spans", "x02_extract_docs")
     names.foreach { name =>
       val plan = graft.SparkEntry.queries(name)(spark, sfDir)
         .queryExecution.optimizedPlan.toString.toLowerCase
@@ -207,6 +213,8 @@ class PlanSpec extends AnyFunSuite {
         assert(!plan.contains(marker),
           s"$name optimized plan contains interpreted HOF '$marker'")
       }
+      if (udfFree(name))
+        assert(!plan.contains("udf("), s"$name optimized plan contains a Scala UDF:\n$plan")
     }
   }
 

@@ -92,11 +92,6 @@ class TextSpec extends AnyFunSuite {
     assert(sum == "same same same.")
   }
 
-  test("compression ratio = len(summary)/len(text) (app.py:2033)") {
-    assert(Summarizer.compressionRatio("abcd", "ab") == 0.5)
-    assert(Summarizer.compressionRatio("", "x") == 0.0)
-  }
-
   test("nav clamps (app.py:1500-1505) + property: result always in [0, total-1]") {
     assert(Nav.nextI(0, 5) == 1)
     assert(Nav.nextI(4, 5) == 4)
