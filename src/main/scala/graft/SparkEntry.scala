@@ -3,6 +3,7 @@ package graft
 import graft.gen.Corpus
 import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.pipe.{ExtractJob, StructureJob}
+import graft.util.Pin
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -508,7 +509,7 @@ object SparkEntry {
       // and its lineage contains the MinHash-LSH self-join — without
       // the pin the whole near-dup pass runs twice
       val samp = graft.ops.Sampling.stratifiedSample(kept, "predicted_lang", k = 20)
-        .localCheckpoint()
+        .transform(Pin.once)
       val packed = graft.ops.Packing.packByBudget(
         samp.join(docs.select(col("doc_id"), col("text")), Seq("doc_id")),
         budgetTokens = 400L, graft.ops.Packing.wordTokens(col("text")))
@@ -799,9 +800,11 @@ object SparkEntry {
       val docs = s.read.parquet(p(dir, "documents"))
       val train = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
         .withColumn("label", col("n_chars") >= 300)
+      // pinned: the range exchange's bounds sample and shuffle both read it
       val scored = graft.ops.Classifier.naiveBayesScore(docs, train, "label")
         .join(docs.select(col("doc_id"), (col("n_chars") >= 300).as("y")),
           Seq("doc_id"))
+        .transform(Pin.once)
       graft.ops.Classifier.calibrationCurve(scored, "y", bands = 10)
         .orderBy(col("band"))
     }),
@@ -2151,12 +2154,12 @@ object SparkEntry {
       .select(col("doc_id"), posexplode(
         graft.functions.GraftFunctions.sentencesSql(col("text"))))
       .withColumnRenamed("pos", "idx").withColumnRenamed("col", "sentence")
-      .localCheckpoint()
+      .transform(Pin.once)
     val n = sents.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sent"))
     val tokCnt = sents.select(col("doc_id"), col("idx"),
         explode(graft.functions.GraftFunctions.tokenizeWords(col("sentence"))).as("word"))
       .groupBy(col("doc_id"), col("idx"), col("word")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .transform(Pin.once)
     val stop = graft.text.Stopwords.set.toSeq
     val freq = tokCnt.filter(!col("word").isin(stop.map(lit): _*))
       .groupBy(col("doc_id"), col("word")).agg(sum(col("c")).as("f"))

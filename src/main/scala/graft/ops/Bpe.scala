@@ -127,7 +127,8 @@ object Bpe {
     * budget plan (vs the whitespace/regex counts of q07). The merge
     * table rides into the closure as an Array (broadcast by
     * construction — it is `merges` rows); per-row work is the
-    * procedural encode kernel, map-side only.
+    * procedural encode kernel over the native word tokens, map-side
+    * only.
     */
   def bpeTokenCounts(docs: DataFrame, mergeTable: DataFrame,
                      idCol: String = "doc_id",
@@ -136,12 +137,9 @@ object Bpe {
       .select(col("left"), col("right"))
       .collect()
       .map(r => (r.getString(0), r.getString(1)))
-    val enc = udf((text: String) =>
-      if (text == null) 0L
-      else "\\W+".r.split(text.toLowerCase).iterator
-        .filter(_.nonEmpty)
-        .map(w => encodeWord(w, table).length.toLong)
-        .sum)
-    docs.select(col(idCol), enc(col(textCol)).as("n_bpe_tokens"))
+    val enc = udf((words: Seq[String]) =>
+      if (words == null) 0L
+      else words.iterator.map(w => encodeWord(w, table).length.toLong).sum)
+    docs.select(col(idCol), enc(toks(col(textCol))).as("n_bpe_tokens"))
   }
 }

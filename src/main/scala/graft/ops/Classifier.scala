@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.util.Pin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -40,13 +41,12 @@ object Classifier {
     def toks(c: Column) = graft.functions.GraftFunctions.tokenizeWords(c)
     val trainTok = train.select(col(labelCol).cast("boolean").as("__y"),
       explode(toks(col(textCol))).as("word"))
-    // word x class counts in ONE aggregation; pinned so the totals
-    // derivation and the scoring join share one evaluation of the
-    // training scan (the model is vocab-sized, bounded)
+    // word x class counts in ONE aggregation; pinned: the totals and
+    // the scoring join both read it (the model is vocab-sized, bounded)
     val model = trainTok.groupBy(col("word")).agg(
       sum(when(col("__y"), 1L).otherwise(0L)).as("cp"),
       sum(when(col("__y"), 0L).otherwise(1L)).as("cn"))
-      .localCheckpoint()
+      .transform(Pin.once)
     // O(model) scalars: class token totals, vocab size, doc priors
     val totals = model.agg(
       coalesce(sum(col("cp")), lit(0L)).as("__tp"),
@@ -175,7 +175,7 @@ object Classifier {
     val cells = df
       .groupBy(col(actual).as("actual"), col(predicted).as("predicted"))
       .agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+      .transform(Pin.once)
     val actTot = cells.groupBy(col("actual"))
       .agg(sum(col("n")).as("__na"))
     val predTot = cells.groupBy(col("predicted"))

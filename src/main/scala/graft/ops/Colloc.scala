@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.util.Pin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -40,21 +41,20 @@ object Colloc {
         slice(t, lit(2), greatest(size(t) - 1, lit(0))),
         (a, b) => struct(a.as("w1"), b.as("w2")))
     }
-    // the UNFILTERED bigram model is pinned once: Nb (total bigram
-    // positions, pre-minCount) is exactly sum(c2) over it — a
-    // model-sized agg — so no third corpus scan+tokenize is needed,
-    // and the >= minCount model filters from the same evaluation
+    // the UNFILTERED bigram model is pinned: Nb (total bigram
+    // positions, pre-minCount) is sum(c2) over it, and the >= minCount
+    // model filters from the same evaluation
     val bgAll = docs.select(explode(bigrams(col(textCol))).as("bg"))
       .groupBy(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
       .agg(count(lit(1)).as("c2"))
-      .localCheckpoint()
+      .transform(Pin.once)
     val nb = bgAll.agg(
       greatest(coalesce(sum(col("c2")), lit(0L)), lit(1L))
         .cast("double").as("__nbt"))
     val bg = bgAll.filter(col("c2") >= minCount)
     val uni = docs.select(explode(toks(col(textCol))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("c1"))
-      .localCheckpoint() // totals + both join legs read ONE evaluation
+      .transform(Pin.once) // totals + both join legs read it
     val totals = uni.agg(
       greatest(coalesce(sum(col("c1")), lit(0L)), lit(1L))
         .cast("double").as("__nu"))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.util.Pin
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -538,10 +539,11 @@ object Dedup {
     * keeper per cluster is then component == id.
     *
     * Distributed min-label propagation: each round is ONE
-    * edge-to-label join + ONE min aggregation, lineage truncated per
-    * round (localCheckpoint — an unbounded iterative lineage would
-    * otherwise replan from scratch each round), converging in
-    * O(graph diameter) rounds — near-dup graphs are shallow stars
+    * edge-to-label join + ONE min aggregation, pinned by
+    * [[Pin.truncate]] (an unbounded iterative lineage would otherwise
+    * replan from scratch each round), which releases the round it
+    * supersedes; it converges in O(graph diameter) rounds — near-dup
+    * graphs are shallow stars
     * around boilerplate hubs. The per-round driver work is one
     * convergence count, never data rows. (The large-star/small-star
     * contraction halves round counts on adversarially deep graphs;
@@ -551,43 +553,28 @@ object Dedup {
                           idA: String = "id_a", idB: String = "id_b",
                           nodeCol: String = "doc_id",
                           maxIters: Int = 50): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
-    def persisted = sc.getPersistentRDDs.keySet.toSet
-    // release a superseded round's checkpointed blocks EAGERLY: each
-    // localCheckpoint pins a full label table in executor storage, and
-    // waiting for GC + the async ContextCleaner would hold O(rounds)
-    // copies at once — at corpus scale that evicts everything else
-    def release(ids: scala.collection.Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-    val pre0 = persisted
-    val e = pairs.select(col(idA).as("a"), col(idB).as("b"))
+    // the symmetric edge set is read by every round
+    val e = Pin.once(pairs.select(col(idA).as("a"), col(idB).as("b"))
       .unionByName(pairs.select(col(idB).as("a"), col(idA).as("b")))
-      .distinct().localCheckpoint()
-    val eIds = persisted -- pre0
+      .distinct())
     // label every node AND every pair endpoint: an endpoint missing
     // from `nodes` would otherwise enter the propagation without an
     // initial self-label and destabilize the convergence count
-    val preL = persisted
     var labels = nodes.select(col(nodeCol).as("n"))
       .unionByName(e.select(col("a").as("n")))
       .distinct()
       .select(col("n"), col("n").as("lbl"))
-      .localCheckpoint()
-    var labelIds = persisted -- preL
+      .transform(Pin.once)
     val lblType = labels.schema("lbl").dataType
     var changed = 1L
     var it = 0
     while (changed > 0 && it < maxIters) {
       val nbr = e.join(labels.withColumnRenamed("n", "b"), Seq("b"))
         .select(col("a").as("n"), col("lbl"))
-      val preN = persisted
-      // ONE job per round (round-6): the old label rides the union as
-      // a nullable companion column (max ignores the nbr rows' nulls,
-      // and every n in the round has exactly one labels row, so __old
-      // is its previous label), and the convergence count is observed
-      // ON the checkpoint materialization itself — the round-5 form
-      // paid a second label-table join + count action per round just
-      // to learn whether anything moved.
+      // ONE job per round: the old label rides the union as a nullable
+      // companion column (max ignores the nbr rows' nulls, and every n
+      // has exactly one labels row, so __old is its previous label),
+      // and the convergence count is observed on the pin's own job
       val obs = new org.apache.spark.sql.Observation()
       val next = labels.select(col("n"), col("lbl"), col("lbl").as("__old"))
         .unionByName(nbr.select(col("n"), col("lbl"),
@@ -596,15 +583,13 @@ object Dedup {
         .agg(min(col("lbl")).as("lbl"), max(col("__old")).as("__old"))
         .observe(obs, sum(when(col("lbl") =!= col("__old"), 1L).otherwise(0L))
           .as("__chg"))
-        .localCheckpoint()
-      val nextIds = persisted -- preN
+        .transform(Pin.truncate)
       changed = Option(obs.get("__chg")).collect { case l: Long => l }.getOrElse(0L)
-      release(labelIds -- nextIds -- eIds)
-      labelIds = nextIds
+      Pin.release(labels)
       labels = next
       it += 1
     }
-    release(eIds -- labelIds)
+    Pin.release(e)
     require(changed == 0, s"connectedComponents did not converge in $maxIters rounds")
     labels.select(col("n").as(nodeCol), col("lbl").as("component"))
   }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.util.Pin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -29,13 +30,12 @@ object Distrib {
   def sliceKlDivergence(docs: DataFrame, sliceCol: String,
                         textCol: String = "text"): DataFrame = {
     def toks(c: Column) = graft.functions.GraftFunctions.tokenizeWords(c)
-    // pinned: cw/ns/the join all derive from sw — without the pin the
-    // corpus-sized tokenize+agg lineage would run once PER consumer
-    // (the model itself is O(slices x vocab), bounded)
+    // pinned: cw, ns and the join all read sw (the model is
+    // O(slices x vocab), bounded)
     val sw = docs
       .select(col(sliceCol), explode(toks(col(textCol))).as("word"))
       .groupBy(col(sliceCol), col("word")).agg(count(lit(1)).as("csw"))
-      .localCheckpoint()
+      .transform(Pin.once)
     // corpus word counts: re-aggregate the slice model, not the corpus
     val cw = sw.groupBy(col("word")).agg(sum(col("csw")).as("cw"))
     val ns = sw.groupBy(col(sliceCol)).agg(sum(col("csw")).as("ns"))
@@ -84,12 +84,12 @@ object Distrib {
     def toks(c: Column) = graft.functions.GraftFunctions.tokenizeWords(c)
     val ca = s"${sliceCol}_a"
     val cb = s"${sliceCol}_b"
-    // pinned: ns and both join legs derive from sw — one evaluation
-    // of the corpus tokenize+agg (the model is O(slices x vocab))
+    // pinned: ns and both join legs read sw (the model is
+    // O(slices x vocab), bounded)
     val sw = docs
       .select(col(sliceCol), explode(toks(col(textCol))).as("word"))
       .groupBy(col(sliceCol), col("word")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .transform(Pin.once)
     val ns = sw.groupBy(col(sliceCol)).agg(sum(col("c")).as("ns"))
     val prob = sw.join(ns, Seq(sliceCol))
       .select(col(sliceCol),
@@ -139,11 +139,11 @@ object Distrib {
     def toks(c: Column) = graft.functions.GraftFunctions.tokenizeWords(c)
     val ca = s"${sliceCol}_a"
     val cb = s"${sliceCol}_b"
-    // pinned: the size table and both join legs derive from sv
+    // pinned: the size table and both join legs read sv
     val sv = docs
       .select(col(sliceCol), explode(toks(col(textCol))).as("word"))
       .distinct()
-      .localCheckpoint()
+      .transform(Pin.once)
     val nv = sv.groupBy(col(sliceCol)).agg(count(lit(1)).as("nv"))
     val inter = sv.select(col(sliceCol).as(ca), col("word"))
       .join(sv.select(col(sliceCol).as(cb), col("word")), Seq("word"))
@@ -180,11 +180,11 @@ object Distrib {
     require(topN >= 2, "topN >= 2")
     def toks(c: Column) = graft.functions.GraftFunctions.tokenizeWords(c)
     import org.apache.spark.sql.expressions.Window
-    // pinned: totals and the ranked head both derive from w
+    // pinned: totals and the ranked head both read w
     val w = docs
       .select(explode(toks(col(textCol))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .transform(Pin.once)
     val tot = w.agg(count(lit(1)).as("vocab"), sum(col("c")).as("n_tokens"))
     val fit = w
       .orderBy(col("c").desc, col("word")).limit(topN)
@@ -285,7 +285,7 @@ object Distrib {
       .select(to_date(col(tsCol)).as("day"), col(catCol).as("cat"))
       .where(col("day").isNotNull)
       .groupBy(col("day"), col("cat")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .transform(Pin.once)
     val grid = counts.select(col("day")).distinct()
       .crossJoin(broadcast(counts.select(col("cat")).distinct()))
       .join(counts, Seq("day", "cat"), "left")
@@ -349,7 +349,7 @@ object Distrib {
       .select(col(sliceCol).as("s"), col(valueCol).cast("long").as("v"))
       .where(col("v").isNotNull)
       .groupBy(col("s"), col("v")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .transform(Pin.once)
     val grid = counts.select(col("v")).distinct()
       .crossJoin(broadcast(counts.select(col("s")).distinct()))
       .join(counts, Seq("s", "v"), "left")

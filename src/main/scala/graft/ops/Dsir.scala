@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.util.Pin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -57,13 +58,12 @@ object Dsir {
         .select(extra :+
           pmod(graft.util.SqlCols.md5Head32(col("__bg")), lit(buckets.toLong))
             .as("f"): _*)
-    // pinned: each model feeds BOTH its total and the scoring join —
-    // without the pin the corpus-sized feature scan would run once
-    // per consumer (the model itself is <= B rows, bounded); the
-    // broadcast below is structural, not a size guess
+    // pinned: each model feeds BOTH its total and the scoring join
+    // (the model is <= B rows, bounded); the broadcast below is
+    // structural, not a size guess
     def model(src: DataFrame, cnt: String) = explodedFeats(src, Seq.empty)
       .groupBy(col("f")).agg(count(lit(1)).as(cnt))
-      .localCheckpoint()
+      .transform(Pin.once)
     val tm = model(target, "ct")
     val rm = model(docs, "cr")
     val consts = tm.agg(coalesce(sum(col("ct")), lit(0L)).as("__tt"))

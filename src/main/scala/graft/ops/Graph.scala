@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.util.Pin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -26,11 +27,11 @@ import org.apache.spark.sql.functions._
   * Scale shape: outdeg is one edge aggregation; each iteration is one
   * contribution join (edges x ranks, shuffle on node key) + one
   * node-keyed aggregation + two O(1) broadcast scalars (N, dangling
-  * mass). Ranks localCheckpoint per round — the plan stays one
-  * iteration deep, the lineage never stacks (the
-  * [[Dedup.connectedComponents]] pattern). Skew note: a mega-hub's
-  * in-edge sum serializes one reducer; pre-aggregate per (dst, salt)
-  * upstream if a node's in-degree approaches partition scale.
+  * mass). Each round's ranks are a [[Pin.truncate]] that releases the
+  * round before (the [[Dedup.connectedComponents]] pattern). Skew
+  * note: a mega-hub's in-edge sum serializes one reducer; pre-aggregate
+  * per (dst, salt) upstream if a node's in-degree approaches partition
+  * scale.
   */
 object Graph {
 
@@ -42,28 +43,22 @@ object Graph {
                srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(iters >= 1, "iters >= 1")
     require(damping > 0.0 && damping < 1.0, "damping in (0,1)")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .localCheckpoint()
+    // e and base are read by every round
+    val e = Pin.once(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
-      .localCheckpoint()
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     // nodes with outdeg joined once; dangling = null outdeg
     val base = nodes.join(outdeg, nodes("node") === outdeg("src"), "left")
       .select(col("node"), col("outdeg"))
-      .localCheckpoint()
+      .transform(Pin.once)
     val nNodes = base.count().toDouble
-    // outdeg rides the rank frame across rounds (round-6): the old
-    // form re-joined ranks with the (node, outdeg) table every
-    // iteration just to recover the degree — carrying the column
-    // through the per-round checkpoint deletes one corpus-keyed join
-    // per iteration for the cost of one long per row. The final
-    // new-rank join is keyed on `base` so nodes with no inbound edges
-    // keep receiving the teleport + dangling mass, exactly as before.
+    // outdeg rides the rank frame across rounds, so no round re-joins
+    // the degree table; the new-rank join is keyed on `base` so nodes
+    // with no inbound edges still receive the teleport + dangling mass
     var ranks = base.select(col("node"), col("outdeg"),
         round(lit(1.0) / lit(nNodes), 10).as("rank"))
-      .localCheckpoint()
     var it = 0
     while (it < iters) {
       val dangling = ranks.filter(col("outdeg").isNull)
@@ -72,16 +67,20 @@ object Graph {
         .join(e, col("node") === col("src"))
         .select(col("dst").as("node"), (col("rank") / col("outdeg")).as("__c"))
         .groupBy(col("node")).agg(sum(col("__c")).as("__in"))
-      ranks = base
+      val next = base
         .join(contrib, Seq("node"), "left")
         .crossJoin(broadcast(dangling))
         .select(col("node"), col("outdeg"),
           round(lit((1.0 - damping) / nNodes) +
             lit(damping) * (coalesce(col("__in"), lit(0.0)) +
               col("__dm") / lit(nNodes)), 10).as("rank"))
-        .localCheckpoint()
+        .transform(Pin.truncate)
+      Pin.release(ranks)
+      ranks = next
       it += 1
     }
+    Pin.release(e)
+    Pin.release(base)
     ranks.select(col("node"), round(col("rank"), 8).as("rank"))
   }
 }

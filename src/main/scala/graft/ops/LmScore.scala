@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.util.Pin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -93,13 +94,12 @@ object LmScore {
     val refToks = ref.select(explode(toks(col(textCol))).as("word"))
     val vocab = refToks.agg(
       greatest(count_distinct(col("word")), lit(1L)).as("__v"))
-    // pinned: ctx and the scoring join both derive from refBg —
-    // one evaluation of the reference bigram scan (the model is
+    // pinned: ctx and the scoring join both read refBg (the model is
     // bigram-vocab-sized, bounded)
     val refBg = bigramCols(ref, Seq.empty)
       .groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("c2"))
-      .localCheckpoint()
+      .transform(Pin.once)
     val ctx = refBg.groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
     val docBg = bigramCols(docs, Seq(col(idCol)))
     docBg

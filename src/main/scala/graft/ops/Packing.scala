@@ -41,7 +41,7 @@ object Packing {
     require(budgetTokens > 0, "budgetTokens must be positive")
     // the running token sum is Shuffling.rangePrefix — the shared
     // parallel-prefix core (range partition, per-partition window, P
-    // driver offset scalars, localCheckpoint pin; see its doc for the
+    // driver offset scalars, Pin.once pin; see its doc for the
     // pinning correctness argument) — with the token count as the
     // summed value instead of 1
     Shuffling.rangePrefix(

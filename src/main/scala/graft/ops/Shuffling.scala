@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.util.Pin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,11 +24,9 @@ import org.apache.spark.sql.functions._
   * range-partition by (rank, id), per-partition `row_number` (every
   * window group is one bounded range partition), per-partition counts
   * -> driver prefix offsets (P scalars, control plane only), one
-  * map-side add. `localCheckpoint` pins the materialized range
-  * boundaries — RangePartitioner re-samples per job, so without the
-  * pin a row near a boundary could land in different partitions for
-  * the counts job and the output job, shifting every downstream
-  * position by one.
+  * map-side add. A [[Pin.once]] fixes the materialized range
+  * boundaries for the counts job and the output job (see
+  * [[rangePrefix]]).
   *
   * Writing the result is `repartition(shards, col("shard"))` +
   * `sortWithinPartitions("pos")` — one shuffle, each shard one sorted
@@ -45,14 +44,16 @@ object Shuffling {
     * offsets (P control-plane scalars, never data rows), one map-side
     * add.
     *
-    * `localCheckpoint` PINS the materialized partitioning: the totals
+    * [[Pin.once]] PINS the materialized partitioning: the totals
     * collect and the returned frame are separate jobs, and
     * RangePartitioner re-samples its bounds per job — without the pin
     * a row near a boundary could land in pid P for the totals job but
     * pid P+1 for the output job, silently corrupting every downstream
-    * offset. Single definition for the rank/packing/banding/
-    * proportional-sample family: the pinning argument must never
-    * drift between copies.
+    * offset. A lost block is recomputed through the same range
+    * exchange, bounds and all. The input is NOT pinned: the bounds
+    * sample and the exchange each read it, so a caller whose input has
+    * an expensive lineage pins it at its own call site. Single
+    * definition for the rank/packing/banding/proportional-sample family.
     */
   private[ops] def rangePrefix(df: DataFrame,
                                orderCols: Seq[org.apache.spark.sql.Column],
@@ -61,20 +62,13 @@ object Shuffling {
     require(orderCols.nonEmpty, "orderCols must be non-empty")
     val spark = df.sparkSession
     val p = if (parts > 0) parts else spark.sparkContext.defaultParallelism
-    // pin the INPUT before the range exchange (round-6):
-    // RangePartitioner's bounds sampling scans every partition of its
-    // child, so an expensive upstream (q72's corpus-wide NB scoring
-    // feeds this directly) was computed twice — once for the sample,
-    // once for the shuffle. Materializing df first makes the sampling
-    // pass read the pinned blocks instead of re-running the lineage.
-    val pinned = df.withColumn("__v", valueCol.cast("long")).localCheckpoint()
-    val ranged = pinned
+    val ranged = df.withColumn("__v", valueCol.cast("long"))
       .repartitionByRange(p, orderCols: _*)
       .withColumn("__pid", spark_partition_id())
     val w = Window.partitionBy(col("__pid")).orderBy(orderCols: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val local = ranged.withColumn("__run", sum(col("__v")).over(w))
-      .localCheckpoint()
+      .transform(Pin.once)
     // max(__run) == the partition total (values are non-negative);
     // range partitions are assigned in ascending key order, so pid
     // order IS the global order

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
+import graft.util.Pin
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -80,9 +81,9 @@ object Similarity {
                idCol: String = "vec_id", vecCol: String = "embedding",
                sampleCap: Int = 100000): Array[Array[Double]] = {
     require(sampleCap >= nCentroids, "sampleCap must cover the centroid init")
-    val sample = detSample(embeddings, idCol, vecCol, sampleCap).persist()
+    val sample = Pin.once(detSample(embeddings, idCol, vecCol, sampleCap))
     try lloyd(sample, col("v"), nCentroids, iters)
-    finally sample.unpersist()
+    finally Pin.release(sample)
   }
 
   /** Deterministic hash-ordered training sample (see [[trainIvf]] doc).
@@ -162,9 +163,9 @@ object Similarity {
     // residual mode quantizes v - coarse[cell] (cell assigned once per
     // sample row by the native kernel); the assignment column rides
     // along so each Lloyd round stays ONE aggregation
-    val sample = (if (residual)
+    val sample = Pin.once(if (residual)
         sample0.withColumn("__cell", nearestCentroid(col("v"), coarse))
-      else sample0.withColumn("__cell", lit(0))).persist()
+      else sample0.withColumn("__cell", lit(0)))
     try {
       // one init collect for ALL subspaces (the same first-`codes`
       // sample vectors — residuals in residual mode, against the
@@ -224,7 +225,7 @@ object Similarity {
         it += 1
       }
       books
-    } finally sample.unpersist()
+    } finally Pin.release(sample)
   }
 
   /** IVF-PQ ANN top-k with exact re-rank — the 10^12-vector shape of
@@ -547,7 +548,7 @@ object Similarity {
         col("col").cast("double").as("v"))
     val centroid = ex.groupBy(col("g"), col("d"))
       .agg(avg(col("v")).as("c"))
-      .localCheckpoint()
+      .transform(Pin.once)
     val perVec = ex.join(broadcast(centroid), Seq("g", "d"))
       .groupBy(col("g"), col("id"))
       .agg(sum(col("v") * col("c")).as("__vc"),

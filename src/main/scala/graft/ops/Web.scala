@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.util.Pin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -85,7 +86,7 @@ object Web {
       .select(col(domainCol).as("domain"), col(idCol).as("id"),
         col(lineCol).as("line"))
       .distinct()
-      .localCheckpoint()
+      .transform(Pin.once)
     val docTot = distinctLines.select(col("domain"), col("id")).distinct()
       .groupBy(col("domain")).agg(count(lit(1)).as("n_docs"))
     distinctLines.groupBy(col("domain"), col("line"))

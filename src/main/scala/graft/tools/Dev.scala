@@ -3,6 +3,7 @@ package graft.tools
 import graft.SparkEntry
 import graft.gen.Corpus
 import graft.pipe.ExtractJob
+import graft.util.Pin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.functions._
@@ -236,7 +237,9 @@ object Dev {
     * `df.write.format("noop")` computes every column of every row and
     * discards it, so the number is the computation, not the sink or an
     * optimizer-pruned count. Median of `repeats` runs, warm session,
-    * so per-query claims are isolated from sweep residue and host noise.
+    * so per-query claims are isolated from sweep residue and host noise;
+    * every run starts with the earlier runs' pins released, as the
+    * frozen Bench does before each query.
     *
     * args: <sfDir> <name1,name2,...|all> [repeats]
     */
@@ -248,6 +251,7 @@ object Dev {
       else args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val results = names.map { name =>
       val times = (1 to repeats).map { r =>
+        Pin.releaseAll(spark)
         spark.sparkContext.setJobDescription(s"benchextra $name run$r")
         val t0 = System.nanoTime()
         SparkEntry.queries(name)(spark, sfDir)

@@ -1,15 +1,40 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.storage.StorageLevel
 
 /** Column <-> Expression bridge. The converters live behind
   * `private[sql]` in Spark 4 (`classic.ExpressionUtils`), so extension
   * libraries shipping native expressions expose them from inside the
-  * package — the standard pattern for Catalyst extensions.
+  * package — the standard pattern for Catalyst extensions, and the
+  * access the eager pin needs too.
   */
 object GraftBridge {
   def toExpression(c: Column): Expression =
     classic.ExpressionUtils.expression(c)
   def toColumn(e: Expression): Column =
     classic.ExpressionUtils.column(e)
+
+  /** Spark's eager `classic.Dataset.checkpoint` body without its
+    * `localCheckpoint()`: the rows persist at `level` with their
+    * lineage, outside the CacheManager ([[graft.util.Pin.once]]).
+    */
+  def persistEager(df: DataFrame, level: StorageLevel): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val rdd = SQLExecution.withNewExecutionId(ds.queryExecution, Some("pin")) {
+      val r = ds.queryExecution.toRdd.map(_.copy()).persist(level)
+      r.count()
+      r
+    }
+    classic.Dataset.ofRows(ds.sparkSession, LogicalRDD.fromDataset(rdd, ds, ds.isStreaming))
+  }
+
+  /** The persisted RDD a pinned frame reads, when `df` is itself one. */
+  def pinnedRdd(df: DataFrame): Option[RDD[_]] =
+    df.asInstanceOf[classic.Dataset[Row]].logicalPlan match {
+      case l: LogicalRDD if l.rdd.getStorageLevel != StorageLevel.NONE => Some(l.rdd)
+      case _ => None
+    }
 }

@@ -1,7 +1,10 @@
 package graft
 
 import graft.ops.Graph
+import graft.util.Pin
+import org.apache.spark.{GraftFaults, SparkException}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraphSpec extends AnyFunSuite {
@@ -57,5 +60,48 @@ class GraphSpec extends AnyFunSuite {
     val rep = Graph.pageRank(edges.toDF("src", "dst").repartition(7), iters = 4)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(rep == got, "per-round rounding pins the result under any partitioning")
+  }
+
+  test("pageRank and connectedComponents leave pinned only the pins their results read") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    def leftPinned(run: => org.apache.spark.sql.DataFrame) = {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val out = run
+      (out, sc.getPersistentRDDs.keySet.toSet -- before)
+    }
+    // the edge and degree pins and every superseded round are released:
+    // only the last round's truncated pin remains
+    val edges = Seq(("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "c"))
+    val (ranks, rankPins) = leftPinned(Graph.pageRank(edges.toDF("src", "dst"), iters = 5))
+    assert(rankPins.size == 1 && rankPins == GraftFaults.pinsRead(ranks), s"left pinned: $rankPins")
+    assert(ranks.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap == ref(edges, 5, 0.85))
+    // a diameter-9 path: ten label rounds, one pin left
+    val path = (0L until 9L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val (cc, ccPins) = leftPinned(
+      graft.ops.Dedup.connectedComponents(path, (0L to 9L).toDF("doc_id")))
+    assert(ccPins.size == 1 && ccPins == GraftFaults.pinsRead(cc), s"left pinned: $ccPins")
+    assert(cc.collect().map(_.getLong(1)).toSet == Set(0L))
+    (rankPins ++ ccPins).foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+  }
+
+  test("Pin.truncate: lost blocks fail the read with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND; Pin.once recomputes") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val agg = (0L until 2000L).toDF("k")
+      .groupBy((col("k") % 37).as("g")).agg(sum(col("k")).as("s"))
+    val want = agg.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val cut = Pin.truncate(agg)
+    val kept = Pin.once(agg)
+    val pins = Seq(cut, kept).flatMap(GraftFaults.pinsRead)
+    pins.foreach(GraftFaults.dropBlocks)
+    assert(kept.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == want)
+    // a truncated frame has no lineage to recompute from: the read must
+    // fail, never return other rows
+    val err = intercept[SparkException](cut.collect())
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(m => m != null && m.contains("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND")), err.getMessage)
+    Pin.release(cut)
+    Pin.release(kept)
   }
 }

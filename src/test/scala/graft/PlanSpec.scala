@@ -352,4 +352,24 @@ class PlanSpec extends AnyFunSuite {
       .filter(col("s.kind") === "media").select(col("s.media_ref")).distinct().count()
     assert(usedRefs <= distinctContents)
   }
+
+  test("one pin policy: only Pin, GraftBridge and the frozen Bench pin or release frames") {
+    val owners = Set("graft/util/Pin.scala", "org/apache/spark/sql/GraftBridge.scala",
+      "graft/Bench.scala")
+    val pinCalls = Seq("localCheckpoint(", ".persist(", ".cache()", "getPersistentRDDs")
+    def scalaFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(scalaFiles)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val root = new java.io.File("src/main/scala")
+    val files = scalaFiles(root)
+    assert(files.size > 50, s"scanned ${files.size} files under ${root.getAbsolutePath}")
+    val hits = for {
+      f <- files
+      rel = root.toPath.relativize(f.toPath).toString.replace('\\', '/')
+      if !owners(rel)
+      (line, i) <- java.nio.file.Files.readAllLines(f.toPath).toArray(Array.empty[String]).zipWithIndex
+      call <- pinCalls if line.contains(call)
+    } yield s"$rel:${i + 1}: $call"
+    assert(hits.isEmpty, hits.mkString("pins outside graft.util.Pin:\n", "\n", ""))
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.{Sampling, Shuffling}
+import org.apache.spark.GraftFaults
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -38,5 +39,27 @@ class ShufflingSpec extends AnyFunSuite {
     assert(sizes.max - sizes.min <= 1)
     // the order is a real shuffle, not id order
     assert(naive.map(_(1).asInstanceOf[Long]).take(20) != (0L until 20L).toSeq)
+  }
+
+  test("globalRank recomputes lost pinned blocks: every pos still equals the naive row_number") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    val sc = spark.sparkContext
+    val df = (0L until 30000L).toDF("doc_id")
+      .withColumn("__r", Sampling.detRank(col("doc_id")))
+    val order = Seq(col("__r"), col("doc_id"))
+    val naive = df.withColumn("pos", row_number().over(Window.orderBy(order: _*)).cast("long") - 1)
+      .select(col("doc_id"), col("pos")).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val ranked = Shuffling.globalRank(df, order, parts = 16)
+    val pins = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(pins.nonEmpty, "the range partitioning is pinned")
+    // the totals job has run on the driver; lose every pinned block
+    // before the output job reads them
+    pins.foreach(GraftFaults.dropBlocks)
+    val got = ranked.select(col("doc_id"), col("pos")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == naive)
+    pins.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
   }
 }
