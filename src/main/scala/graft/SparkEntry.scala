@@ -800,11 +800,9 @@ object SparkEntry {
       val docs = s.read.parquet(p(dir, "documents"))
       val train = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
         .withColumn("label", col("n_chars") >= 300)
-      // pinned: the range exchange's bounds sample and shuffle both read it
       val scored = graft.ops.Classifier.naiveBayesScore(docs, train, "label")
         .join(docs.select(col("doc_id"), (col("n_chars") >= 300).as("y")),
           Seq("doc_id"))
-        .transform(Pin.once)
       graft.ops.Classifier.calibrationCurve(scored, "y", bands = 10)
         .orderBy(col("band"))
     }),

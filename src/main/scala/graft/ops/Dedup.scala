@@ -541,10 +541,11 @@ object Dedup {
     * Distributed min-label propagation: each round is ONE
     * edge-to-label join + ONE min aggregation, pinned by
     * [[Pin.truncate]] (an unbounded iterative lineage would otherwise
-    * replan from scratch each round), which releases the round it
-    * supersedes; it converges in O(graph diameter) rounds — near-dup
-    * graphs are shallow stars
-    * around boilerplate hubs. The per-round driver work is one
+    * replan from scratch each round) and releasing the round it
+    * supersedes; the edge set and the initial labels every round reads
+    * are truncated too, so no round re-walks the pair lineage. It
+    * converges in O(graph diameter) rounds — near-dup graphs are
+    * shallow stars around boilerplate hubs. The per-round driver work is one
     * convergence count, never data rows. (The large-star/small-star
     * contraction halves round counts on adversarially deep graphs;
     * the plain form is the right trade at near-dup shapes.)
@@ -554,7 +555,7 @@ object Dedup {
                           nodeCol: String = "doc_id",
                           maxIters: Int = 50): DataFrame = {
     // the symmetric edge set is read by every round
-    val e = Pin.once(pairs.select(col(idA).as("a"), col(idB).as("b"))
+    val e = Pin.truncate(pairs.select(col(idA).as("a"), col(idB).as("b"))
       .unionByName(pairs.select(col(idB).as("a"), col(idA).as("b")))
       .distinct())
     // label every node AND every pair endpoint: an endpoint missing
@@ -564,7 +565,7 @@ object Dedup {
       .unionByName(e.select(col("a").as("n")))
       .distinct()
       .select(col("n"), col("n").as("lbl"))
-      .transform(Pin.once)
+      .transform(Pin.truncate)
     val lblType = labels.schema("lbl").dataType
     var changed = 1L
     var it = 0

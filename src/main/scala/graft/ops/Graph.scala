@@ -28,7 +28,8 @@ import org.apache.spark.sql.functions._
   * contribution join (edges x ranks, shuffle on node key) + one
   * node-keyed aggregation + two O(1) broadcast scalars (N, dangling
   * mass). Each round's ranks are a [[Pin.truncate]] that releases the
-  * round before (the [[Dedup.connectedComponents]] pattern). Skew
+  * round before, and the edge and degree frames every round reads are
+  * truncated too (the [[Dedup.connectedComponents]] pattern). Skew
   * note: a mega-hub's in-edge sum serializes one reducer; pre-aggregate
   * per (dst, salt) upstream if a node's in-degree approaches partition
   * scale.
@@ -44,7 +45,7 @@ object Graph {
     require(iters >= 1, "iters >= 1")
     require(damping > 0.0 && damping < 1.0, "damping in (0,1)")
     // e and base are read by every round
-    val e = Pin.once(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
+    val e = Pin.truncate(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
@@ -52,7 +53,7 @@ object Graph {
     // nodes with outdeg joined once; dangling = null outdeg
     val base = nodes.join(outdeg, nodes("node") === outdeg("src"), "left")
       .select(col("node"), col("outdeg"))
-      .transform(Pin.once)
+      .transform(Pin.truncate)
     val nNodes = base.count().toDouble
     // outdeg rides the rank frame across rounds, so no round re-joins
     // the degree table; the new-rank join is keyed on `base` so nodes

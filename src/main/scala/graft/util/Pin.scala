@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.storage.StorageLevel
 
 /** The one pinning policy for intermediate frames. Every pin in the
@@ -17,10 +18,12 @@ import org.apache.spark.storage.StorageLevel
   *    2012); a local checkpoint would store them on one executor only.
   *  - [[truncate]] is `localCheckpoint`, for iterative loops only (the
   *    label rounds of `Dedup.connectedComponents`, the rank rounds of
-  *    `Graph.pageRank`), where a lineage that grows by one round per
-  *    iteration would otherwise be replanned from scratch each round. A
-  *    lost block fails the query with
-  *    `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`; it never returns wrong rows.
+  *    `Graph.pageRank`, and the frames every round of them reads),
+  *    where a lineage that grows by one round per iteration would
+  *    otherwise be replanned from scratch each round, and every round's
+  *    jobs would re-walk the kept lineage of their inputs. A lost block
+  *    fails the query with `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`; it never
+  *    returns wrong rows.
   *
   * Neither verb uses `Dataset.persist`: that registers the plan in the
   * session's CacheManager, so a later query with an equal plan would be
@@ -31,9 +34,19 @@ import org.apache.spark.storage.StorageLevel
   */
 object Pin {
 
-  /** Materialize `df` once for the readers of one query, lineage kept. */
-  def once(df: DataFrame): DataFrame =
-    GraftBridge.persistEager(df, StorageLevel.MEMORY_AND_DISK)
+  /** Materialize `df` once for the readers of one query, lineage kept:
+    * Spark's eager `classic.Dataset.checkpoint` body without its
+    * `localCheckpoint()`, so nothing enters the CacheManager.
+    */
+  def once(df: DataFrame): DataFrame = {
+    val qe = df.queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some("pin")) {
+      val r = qe.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
+      r.count()
+      r
+    }
+    GraftBridge.ofRows(rows, df)
+  }
 
   /** Materialize one round of an iterative loop and cut its lineage. */
   def truncate(df: DataFrame): DataFrame = df.localCheckpoint()
@@ -42,8 +55,11 @@ object Pin {
     * (a superseded loop round, or a pin no returned frame reads); a
     * no-op on any other frame.
     */
-  def release(df: DataFrame): Unit =
-    GraftBridge.pinnedRdd(df).foreach(_.unpersist(blocking = false))
+  def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case l: LogicalRDD if l.rdd.getStorageLevel != StorageLevel.NONE =>
+      l.rdd.unpersist(blocking = false)
+    case _ => ()
+  }
 
   /** Free every pin of the session, so the next query is measured or
     * run without the storage of the ones before it.

@@ -1,15 +1,15 @@
 package org.apache.spark.sql
 
 import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Column <-> Expression bridge. The converters live behind
   * `private[sql]` in Spark 4 (`classic.ExpressionUtils`), so extension
   * libraries shipping native expressions expose them from inside the
   * package — the standard pattern for Catalyst extensions, and the
-  * access the eager pin needs too.
+  * access [[graft.util.Pin.once]] needs to wrap its pinned rows.
   */
 object GraftBridge {
   def toExpression(c: Column): Expression =
@@ -17,24 +17,12 @@ object GraftBridge {
   def toColumn(e: Expression): Column =
     classic.ExpressionUtils.column(e)
 
-  /** Spark's eager `classic.Dataset.checkpoint` body without its
-    * `localCheckpoint()`: the rows persist at `level` with their
-    * lineage, outside the CacheManager ([[graft.util.Pin.once]]).
+  /** A frame over `rows`, the computed rows of `like`, keeping its
+    * schema, partitioning and ordering (`classic.Dataset.checkpoint`'s
+    * last step).
     */
-  def persistEager(df: DataFrame, level: StorageLevel): DataFrame = {
-    val ds = df.asInstanceOf[classic.Dataset[Row]]
-    val rdd = SQLExecution.withNewExecutionId(ds.queryExecution, Some("pin")) {
-      val r = ds.queryExecution.toRdd.map(_.copy()).persist(level)
-      r.count()
-      r
-    }
-    classic.Dataset.ofRows(ds.sparkSession, LogicalRDD.fromDataset(rdd, ds, ds.isStreaming))
+  def ofRows(rows: RDD[InternalRow], like: DataFrame): DataFrame = {
+    val ds = like.asInstanceOf[classic.Dataset[Row]]
+    classic.Dataset.ofRows(ds.sparkSession, LogicalRDD.fromDataset(rows, ds, ds.isStreaming))
   }
-
-  /** The persisted RDD a pinned frame reads, when `df` is itself one. */
-  def pinnedRdd(df: DataFrame): Option[RDD[_]] =
-    df.asInstanceOf[classic.Dataset[Row]].logicalPlan match {
-      case l: LogicalRDD if l.rdd.getStorageLevel != StorageLevel.NONE => Some(l.rdd)
-      case _ => None
-    }
 }

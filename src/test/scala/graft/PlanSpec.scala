@@ -356,7 +356,10 @@ class PlanSpec extends AnyFunSuite {
   test("one pin policy: only Pin, GraftBridge and the frozen Bench pin or release frames") {
     val owners = Set("graft/util/Pin.scala", "org/apache/spark/sql/GraftBridge.scala",
       "graft/Bench.scala")
-    val pinCalls = Seq("localCheckpoint(", ".persist(", ".cache()", "getPersistentRDDs")
+    // any call, dotted, bare or infix, with or without parentheses;
+    // comment lines and string literals are skipped
+    val pinCall = raw"\b(localCheckpoint|checkpoint|persist|cache|unpersist|getPersistentRDDs)\b".r
+    val literal = "\"[^\"]*\"".r
     def scalaFiles(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(scalaFiles)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
@@ -368,7 +371,8 @@ class PlanSpec extends AnyFunSuite {
       rel = root.toPath.relativize(f.toPath).toString.replace('\\', '/')
       if !owners(rel)
       (line, i) <- java.nio.file.Files.readAllLines(f.toPath).toArray(Array.empty[String]).zipWithIndex
-      call <- pinCalls if line.contains(call)
+      if !Seq("*", "/*", "//").exists(line.trim.startsWith)
+      call <- pinCall.findAllIn(literal.replaceAllIn(line, "\"\"").split("//").head)
     } yield s"$rel:${i + 1}: $call"
     assert(hits.isEmpty, hits.mkString("pins outside graft.util.Pin:\n", "\n", ""))
   }
