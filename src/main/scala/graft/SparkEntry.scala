@@ -357,7 +357,7 @@ object SparkEntry {
     "q31_tfidf" -> ((s, dir) => {
       // smoothed TF-IDF top-3 terms per document (term weighting for
       // curation: two hash aggs + a broadcast count + a rank window)
-      TextAnalysis.tfidfTop(s.read.parquet(p(dir, "documents")), k = 3)
+      TextAnalysis.tfidfTop(s.read.parquet(p(dir, "documents")))
         .orderBy(col("doc_id"), col("rn"))
     }),
 
@@ -475,7 +475,7 @@ object SparkEntry {
       // doc must self-flag and overlap-by-8-gram is exactly checkable
       val docs = s.read.parquet(p(dir, "documents"))
       graft.ops.Dedup.decontaminate(docs,
-          docs.filter(pmod(col("doc_id"), lit(97)) === 0), n = 8)
+          docs.filter(pmod(col("doc_id"), lit(97)) === 0))
         .orderBy(col("doc_id"))
     }),
 
@@ -653,7 +653,7 @@ object SparkEntry {
       // hashes, distinct per doc; any shared 8-token run guarantees
       // a shared fingerprint
       graft.ops.Dedup.winnowFingerprints(
-          s.read.parquet(p(dir, "documents")), k = 5, w = 4)
+          s.read.parquet(p(dir, "documents")))
         .orderBy(col("doc_id"), col("fp"))),
 
     "q58_nb_classifier" -> ((s, dir) => {
@@ -1129,7 +1129,7 @@ object SparkEntry {
           concat(lit("copyright "), col("source"),
             lit(" all rights reserved")).as("line"))
       graft.ops.Web.domainBoilerplate(
-          chunkLines.unionByName(footer), "source", "doc_id", "line")
+          chunkLines.unionByName(footer), "source")
         .orderBy(col("domain"), col("line"))
     }),
 
@@ -1248,7 +1248,7 @@ object SparkEntry {
       val docs = s.read.parquet(p(dir, "documents"))
       val pairs = Dedup.minhashLsh(docs, threshold = 0.2)
         .select(col("id_a"), col("id_b"))
-      Dedup.shingleContainment(docs, pairs, n = 3)
+      Dedup.shingleContainment(docs, pairs)
         .orderBy(col("id_a"), col("id_b"))
     }),
 
@@ -1269,7 +1269,7 @@ object SparkEntry {
       // independently by the oracle from the same md5-derived 56-bit
       // hash (integer register mass, so no float-summation-order gap)
       val docs = s.read.parquet(p(dir, "documents"))
-      val est = graft.ops.Sketches.hllDistinct(docs, "text", "source", p = 10)
+      val est = graft.ops.Sketches.hllDistinct(docs, "text", "source")
       val exact = docs.groupBy(col("source"))
         .agg(countDistinct(col("text")).as("exact_distinct"))
       est.join(exact, Seq("source"))
@@ -1433,7 +1433,7 @@ object SparkEntry {
     }),
 
     "x05_simhash" -> ((s, dir) => {
-      Dedup.simhashPairs(s.read.parquet(p(dir, "documents")), maxDist = 8)
+      Dedup.simhashPairs(s.read.parquet(p(dir, "documents")))
         .orderBy(col("id_a"), col("id_b"))
     }),
 
@@ -1755,7 +1755,7 @@ object SparkEntry {
       // aggregation (word counts), everything else model-sized.
       graft.ops.Bpe.trainBpe(
           s.read.parquet(p(dir, "documents")),
-          merges = 50, vocabCap = 5000, minPair = 2L)
+          merges = 50, vocabCap = 5000)
         .orderBy(col("rank"))
     }),
 

@@ -77,24 +77,14 @@ object ImageCodec {
   /** Encode grayscale pixels as PNG (lossless — decode(encodePng(px))
     * round-trips exactly).
     */
-  def encodePng(w: Int, h: Int, px: Array[Int]): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-    val raster = img.getRaster
-    var i = 0
-    while (i < px.length) {
-      raster.setSample(i % w, i / w, 0, px(i))
-      i += 1
-    }
-    val out = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", out)
-    out.toByteArray
-  }
+  def encodePng(w: Int, h: Int, px: Array[Int]): Array[Byte] = encode(w, h, px, "png")
 
   /** Encode grayscale pixels as JPEG (lossy — pixel values survive only
     * approximately; used to exercise the lossy branch).
     */
-  def encodeJpeg(w: Int, h: Int, px: Array[Int]): Array[Byte] = {
+  def encodeJpeg(w: Int, h: Int, px: Array[Int]): Array[Byte] = encode(w, h, px, "jpg")
+
+  private def encode(w: Int, h: Int, px: Array[Int], format: String): Array[Byte] = {
     val img = new java.awt.image.BufferedImage(
       w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
     val raster = img.getRaster
@@ -104,7 +94,7 @@ object ImageCodec {
       i += 1
     }
     val out = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "jpg", out)
+    javax.imageio.ImageIO.write(img, format, out)
     out.toByteArray
   }
 }

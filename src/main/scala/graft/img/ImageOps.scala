@@ -241,14 +241,15 @@ object ImageOps {
     (out, t)
   }
 
-  /** Adaptive Gaussian threshold, blockSize x blockSize window, bias C:
+  /** Adaptive Gaussian threshold, 11 x 11 window, bias C = 2:
     * out = 255 if px > (gaussianWeightedMean(window) - C) else 0.
     * (`cv2.adaptiveThreshold(...,ADAPTIVE_THRESH_GAUSSIAN_C,BINARY,11,2)`,
     * `app.py:531-533`.) Separable double-precision Gaussian with
     * OpenCV's derived sigma = 0.3*((k-1)*0.5 - 1) + 0.8.
     */
-  def adaptiveGaussian(px: Array[Int], w: Int, h: Int,
-                       blockSize: Int = 11, c: Double = 2.0): Array[Int] = {
+  def adaptiveGaussian(px: Array[Int], w: Int, h: Int): Array[Int] = {
+    val blockSize = 11
+    val c = 2.0
     val r = blockSize / 2
     val sigma = 0.3 * ((blockSize - 1) * 0.5 - 1) + 0.8
     val kern = new Array[Double](blockSize)
@@ -520,11 +521,12 @@ object ImageOps {
     * bins of the line family at that angle; the angle whose vote
     * histogram is most CONCENTRATED (sum of squared bin counts —
     * text baselines collapse into few bins exactly when the candidate
-    * matches the page skew) wins. Coarse 0.5 deg pass over +-maxDeg,
+    * matches the page skew) wins. Coarse 0.5 deg pass over +-8 deg,
     * then a 0.1 deg refinement around the winner. Returns the
     * estimated skew in degrees (rotate by -estimate to deskew).
     */
-  def estimateSkew(px: Array[Int], w: Int, h: Int, maxDeg: Double = 8.0): Double = {
+  def estimateSkew(px: Array[Int], w: Int, h: Int): Double = {
+    val maxDeg = 8.0
     val (bin, _) = blurOtsu(px, w, h, 3)
     // sample ink pixels (cap keeps the vote O(points * angles))
     val xs = new Array[Int](20000)

@@ -37,7 +37,7 @@ object OcrEngine {
       case "fast" =>
         (ImageOps.thresholdGlobal(px, 128), 128)
       case "balanced" =>
-        (ImageOps.adaptiveGaussian(ImageOps.gaussianBlur(px, w, h, blurSize(mode)), w, h, 11, 2.0), -1)
+        (ImageOps.adaptiveGaussian(ImageOps.gaussianBlur(px, w, h, blurSize(mode)), w, h), -1)
       case "quality" =>
         val (bin, t) = ImageOps.blurOtsu(px, w, h, blurSize(mode))
         (ImageOps.morphClose(bin, w, h, 1, 1), t)
@@ -85,8 +85,8 @@ object OcrEngine {
     * or unmatchable crops return "" and the region is dropped upstream,
     * mirroring `if text.strip()`.
     */
-  def decodeRoi(gray: Array[Int], w: Int, h: Int, language: String = "eng"): String = {
-    val font = Glyphs.fontFor(language)
+  def decodeRoi(gray: Array[Int], w: Int, h: Int): String = {
+    val font = Glyphs.fontFor("eng")
     if (w > Glyphs.W || h > Glyphs.H) return "" // larger than a glyph: no text
     var mn = 255; var mx = 0
     var i = 0

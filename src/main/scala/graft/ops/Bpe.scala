@@ -30,9 +30,8 @@ object Bpe {
   /** The single corpus-sized aggregation: (word, count), then the
     * deterministic top-`vocabCap` head (count desc, word asc).
     */
-  private[graft] def wordCountHead(docs: DataFrame, textCol: String,
-                                 vocabCap: Int): Array[(String, Long)] =
-    docs.select(explode(toks(col(textCol))).as("word"))
+  private def wordCountHead(docs: DataFrame, vocabCap: Int): Array[(String, Long)] =
+    docs.select(explode(toks(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("word"))
       .limit(vocabCap)
@@ -41,18 +40,16 @@ object Bpe {
 
   /** Learn `merges` BPE merges. Returns one row per learned merge:
     * (rank INT starting at 1, left, right, merged, pair_count LONG).
-    * Stops early when no pair reaches `minPair` occurrences (weighted
+    * Stops early when no pair reaches 2 occurrences (weighted
     * by word frequency). Highest pair count wins each round; ties
     * break on (left, right) ascending — byte-for-byte reproducible.
     */
-  def trainBpe(docs: DataFrame, textCol: String = "text",
-               merges: Int = 100, vocabCap: Int = 50000,
-               minPair: Long = 2L): DataFrame = {
-    require(merges > 0 && vocabCap > 0 && minPair >= 1, "positive params")
+  def trainBpe(docs: DataFrame, merges: Int = 100, vocabCap: Int = 50000): DataFrame = {
+    require(merges > 0 && vocabCap > 0, "positive params")
     val spark = docs.sparkSession
     import spark.implicits._
-    val head = wordCountHead(docs, textCol, vocabCap)
-    val table = learnMerges(head, merges, minPair)
+    val head = wordCountHead(docs, vocabCap)
+    val table = learnMerges(head, merges, 2L)
     table.toSeq.toDF("rank", "left", "right", "merged", "pair_count")
   }
 
@@ -130,9 +127,7 @@ object Bpe {
     * procedural encode kernel over the native word tokens, map-side
     * only.
     */
-  def bpeTokenCounts(docs: DataFrame, mergeTable: DataFrame,
-                     idCol: String = "doc_id",
-                     textCol: String = "text"): DataFrame = {
+  def bpeTokenCounts(docs: DataFrame, mergeTable: DataFrame): DataFrame = {
     val table = mergeTable.orderBy(col("rank"))
       .select(col("left"), col("right"))
       .collect()
@@ -140,6 +135,6 @@ object Bpe {
     val enc = udf((words: Seq[String]) =>
       if (words == null) 0L
       else words.iterator.map(w => encodeWord(w, table).length.toLong).sum)
-    docs.select(col(idCol), enc(toks(col(textCol))).as("n_bpe_tokens"))
+    docs.select(col("doc_id"), enc(toks(col("text"))).as("n_bpe_tokens"))
   }
 }

@@ -28,23 +28,21 @@ import org.apache.spark.sql.functions._
   */
 object Chunking {
 
-  /** (idCol, textCol) -> (idCol, chunk_idx, tok_start, n_tok,
+  /** (doc_id, text) -> (doc_id, chunk_idx, tok_start, n_tok,
     * chunk_text). Documents with zero tokens produce no chunks.
     */
-  def slidingChunks(docs: DataFrame, window: Int, stride: Int,
-                    idCol: String = "doc_id",
-                    textCol: String = "text"): DataFrame = {
+  def slidingChunks(docs: DataFrame, window: Int, stride: Int): DataFrame = {
     require(window >= 1, "window must be >= 1")
     require(stride >= 1 && stride <= window,
       "stride must be in [1, window] (stride > window would drop tokens)")
-    val t = graft.functions.GraftFunctions.tokenizeWords(col(textCol))
+    val t = graft.functions.GraftFunctions.tokenizeWords(col("text"))
     docs
-      .select(col(idCol), t.as("__toks"))
+      .select(col("doc_id"), t.as("__toks"))
       .filter(size(col("__toks")) > 0)
-      .select(col(idCol), col("__toks"),
+      .select(col("doc_id"), col("__toks"),
         posexplode(sequence(lit(0), size(col("__toks")) - 1, lit(stride))))
       .select(
-        col(idCol),
+        col("doc_id"),
         col("pos").cast("int").as("chunk_idx"),
         col("col").cast("long").as("tok_start"),
         least(lit(window), size(col("__toks")) - col("col"))

@@ -35,12 +35,10 @@ import org.apache.spark.sql.functions._
   */
 object Classifier {
 
-  def naiveBayesScore(docs: DataFrame, train: DataFrame, labelCol: String,
-                      idCol: String = "doc_id",
-                      textCol: String = "text"): DataFrame = {
+  def naiveBayesScore(docs: DataFrame, train: DataFrame, labelCol: String): DataFrame = {
     def toks(c: Column) = graft.functions.GraftFunctions.tokenizeWords(c)
     val trainTok = train.select(col(labelCol).cast("boolean").as("__y"),
-      explode(toks(col(textCol))).as("word"))
+      explode(toks(col("text"))).as("word"))
     // word x class counts in ONE aggregation; pinned: the totals and
     // the scoring join both read it (the model is vocab-sized, bounded)
     val model = trainTok.groupBy(col("word")).agg(
@@ -58,7 +56,7 @@ object Classifier {
       greatest(sum(when(col(labelCol).cast("boolean"), 0L).otherwise(1L)),
         lit(1L)).as("__nn"))
     val consts = totals.crossJoin(priors)
-    val tok = docs.select(col(idCol), explode(toks(col(textCol))).as("word"))
+    val tok = docs.select(col("doc_id"), explode(toks(col("text"))).as("word"))
     tok
       .join(model, Seq("word"), "left")
       .crossJoin(broadcast(consts))
@@ -67,7 +65,7 @@ object Classifier {
             (col("__tp") + col("__v")).cast("double")) -
         log((coalesce(col("cn"), lit(0L)) + 1L).cast("double") /
             (col("__tn") + col("__v")).cast("double")))
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"),
         round(first(log(col("__np").cast("double") / col("__nn").cast("double")))
           + sum(col("__lo")), 4).as("log_odds"))
@@ -79,7 +77,7 @@ object Classifier {
     * bands (via [[Sampling.rankBands]] — range-partitioned global
     * rank, never a one-task ntile), then per band the mean predicted
     * probability sigmoid(score) against the observed positive rate.
-    * `scored` must carry (idCol, scoreCol, labelCol).
+    * `scored` must carry (doc_id, log_odds, labelCol).
     *
     * Cross-engine determinism: scores arrive rounded(4) (the
     * [[naiveBayesScore]] contract) so banding by (score, id) agrees
@@ -88,17 +86,15 @@ object Classifier {
     * drift and it lives far below the round.
     */
   def calibrationCurve(scored: DataFrame, labelCol: String,
-                       bands: Int = 10,
-                       scoreCol: String = "log_odds",
-                       idCol: String = "doc_id"): DataFrame = {
+                       bands: Int = 10): DataFrame = {
     val banded = Sampling.rankBands(
-      scored.select(col(idCol), col(scoreCol),
+      scored.select(col("doc_id"), col("log_odds"),
         col(labelCol).cast("boolean").as("__y")),
-      Seq(col(scoreCol), col(idCol)), bands)
+      Seq(col("log_odds"), col("doc_id")), bands)
     banded.groupBy(col("band"))
       .agg(count(lit(1)).as("n"),
         sum(when(col("__y"), 1L).otherwise(0L)).as("n_pos"),
-        round(avg(lit(1.0) / (lit(1.0) + exp(-col(scoreCol)))), 6)
+        round(avg(lit(1.0) / (lit(1.0) + exp(-col("log_odds")))), 6)
           .as("mean_prob"))
       .withColumn("frac_pos",
         round(col("n_pos").cast("double") / col("n").cast("double"), 6))

@@ -30,8 +30,7 @@ import org.apache.spark.sql.functions._
   */
 object Colloc {
 
-  def pmiCollocations(docs: DataFrame, minCount: Int = 5, k: Int = 50,
-                      textCol: String = "text"): DataFrame = {
+  def pmiCollocations(docs: DataFrame, minCount: Int = 5, k: Int = 50): DataFrame = {
     require(minCount >= 1 && k >= 1, "minCount and k must be >= 1")
     def toks(c: Column) = graft.functions.GraftFunctions.tokenizeWords(c)
     def bigrams(c: Column) = {
@@ -44,7 +43,7 @@ object Colloc {
     // the UNFILTERED bigram model is pinned: Nb (total bigram
     // positions, pre-minCount) is sum(c2) over it, and the >= minCount
     // model filters from the same evaluation
-    val bgAll = docs.select(explode(bigrams(col(textCol))).as("bg"))
+    val bgAll = docs.select(explode(bigrams(col("text"))).as("bg"))
       .groupBy(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
       .agg(count(lit(1)).as("c2"))
       .transform(Pin.once)
@@ -52,7 +51,7 @@ object Colloc {
       greatest(coalesce(sum(col("c2")), lit(0L)), lit(1L))
         .cast("double").as("__nbt"))
     val bg = bgAll.filter(col("c2") >= minCount)
-    val uni = docs.select(explode(toks(col(textCol))).as("word"))
+    val uni = docs.select(explode(toks(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("c1"))
       .transform(Pin.once) // totals + both join legs read it
     val totals = uni.agg(

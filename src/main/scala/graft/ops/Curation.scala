@@ -22,27 +22,22 @@ object Curation {
     * Output: (doc_id, is_exact_keeper, quality_score, predicted_lang,
     * gopher_keep, keep).
     */
-  def verdict(docs: DataFrame, qualityMin: Double = 0.3,
-              langs: Seq[String] = Seq("en", "id"),
-              idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val ids = docs.select(col(idCol).as("doc_id"), col(textCol).as("__t"))
-    val keepers = Dedup.exact(docs, idCol, textCol)
+  def verdict(docs: DataFrame): DataFrame = {
+    val keepers = Dedup.exact(docs)
       .select(col("keeper").as("doc_id"), lit(true).as("is_exact_keeper"))
-    val quality = TextAnalysis.qualityFeatures(
-        ids.select(col("doc_id"), col("__t").as("text")))
+    val quality = TextAnalysis.qualityFeatures(docs)
       .select(col("doc_id"), col("quality_score"))
-    val gopher = TextAnalysis.gopherQuality(
-        ids.select(col("doc_id"), col("__t").as("text")))
+    val gopher = TextAnalysis.gopherQuality(docs)
       .select(col("doc_id"), col("gopher_keep"))
-    ids.select(col("doc_id"), TextAnalysis.predictedLang(col("__t")).as("predicted_lang"))
+    docs.select(col("doc_id"), TextAnalysis.predictedLang(col("text")).as("predicted_lang"))
       .join(quality, Seq("doc_id"))
       .join(gopher, Seq("doc_id"))
       .join(keepers, Seq("doc_id"), "left")
       .withColumn("is_exact_keeper", coalesce(col("is_exact_keeper"), lit(false)))
       .withColumn("keep",
         col("is_exact_keeper") &&
-          col("quality_score") >= qualityMin &&
-          col("predicted_lang").isin(langs: _*) &&
+          col("quality_score") >= 0.3 &&
+          col("predicted_lang").isin("en", "id") &&
           col("gopher_keep"))
       .select(col("doc_id"), col("is_exact_keeper"), col("quality_score"),
         col("predicted_lang"), col("gopher_keep"), col("keep"))
@@ -54,16 +49,12 @@ object Curation {
     * Near-dup detection is approximate by contract, so this form is
     * fixture-tested rather than DuckDB-oracled.
     */
-  def verdictFull(docs: DataFrame, qualityMin: Double = 0.3,
-                  langs: Seq[String] = Seq("en", "id"),
-                  nearDupThreshold: Double = 0.7,
-                  idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val losers = Dedup.minhashLsh(docs.select(col(idCol).as("doc_id"),
-        col(textCol).as("text")), threshold = nearDupThreshold)
+  def verdictFull(docs: DataFrame, nearDupThreshold: Double = 0.7): DataFrame = {
+    val losers = Dedup.minhashLsh(docs, threshold = nearDupThreshold)
       .select(col("id_b").as("doc_id"))
       .distinct()
       .withColumn("is_neardup_loser", lit(true))
-    verdict(docs, qualityMin, langs, idCol, textCol)
+    verdict(docs)
       .join(losers, Seq("doc_id"), "left")
       .withColumn("is_neardup_loser", coalesce(col("is_neardup_loser"), lit(false)))
       .withColumn("keep", col("keep") && !col("is_neardup_loser"))

@@ -21,6 +21,13 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
+  /** MinHash signature length and band count shared by [[minhashLsh]]
+    * and its audit companion [[lshOversizedBuckets]], so the audit
+    * always reports on the banding the operator ran.
+    */
+  private val MinhashK = 32
+  private val LshBands = 8
+
   /** THE normalized-text form shared by every "same document" key:
     * lowercase + whitespace collapse + trim. One definition — keys
     * must never disagree about what "the same text" is.
@@ -41,11 +48,11 @@ object Dedup {
   /** Exact dedup: one row per distinct normalized content with the
     * group size and the keeper (minimum doc_id).
     */
-  def exact(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+  def exact(docs: DataFrame): DataFrame =
     docs
-      .select(col(idCol), fingerprint(col(textCol)).as("h"))
+      .select(col("doc_id"), fingerprint(col("text")).as("h"))
       .groupBy(col("h"))
-      .agg(count(lit(1)).as("n"), min(col(idCol)).as("keeper"))
+      .agg(count(lit(1)).as("n"), min(col("doc_id")).as("keeper"))
 
   /** Word n-gram shingles of a document, lowercase, distinct.
     * Gram windows are the native codegen [[graft.functions.NgramKernel]]
@@ -90,14 +97,13 @@ object Dedup {
     * full-text shuffle; at web-scale dup ratios (and in this corpus,
     * which has none) the full-text exchange is the scarcer resource.
     */
-  private def signaturesOf(docs: DataFrame, k: Int,
-                           idCol: String, textCol: String): DataFrame =
+  private def signaturesOf(docs: DataFrame): DataFrame =
     docs
-      .select(col(idCol).as("id"), col(textCol).as("__text"))
+      .select(col("doc_id").as("id"), col("text").as("__text"))
       .repartition(docs.sparkSession.sparkContext.defaultParallelism * 2, col("id"))
       .select(fingerprint(col("__text")).as("__fp"), col("id"),
         graft.functions.GraftFunctions.minhashSig(
-          graft.functions.GraftFunctions.shingleHashes(col("__text"), 3), k).as("sig"))
+          graft.functions.GraftFunctions.shingleHashes(col("__text"), 3), MinhashK).as("sig"))
       .groupBy(col("__fp"))
       .agg(min(col("id")).as("id"), first(col("sig")).as("sig"))
       .select(col("id"), col("sig"))
@@ -107,13 +113,13 @@ object Dedup {
     * (one loop per row; docs pair iff a band slice matches exactly, so
     * the key derivation only needs determinism, not a specific hash).
     */
-  private def bandedSignatures(sigs: DataFrame, k: Int, bands: Int): DataFrame = {
+  private def bandedSignatures(sigs: DataFrame, bands: Int): DataFrame = {
     // bands must tile the signature exactly: bands > k makes every
     // band an empty slice (one identical constant key per band for
     // EVERY doc — an all-pairs bucket), and k % bands != 0 silently
     // drops the trailing signature slots from banding
-    require(bands >= 1 && bands <= k && k % bands == 0,
-      s"bands ($bands) must divide the signature length k ($k)")
+    require(bands >= 1 && bands <= MinhashK && MinhashK % bands == 0,
+      s"bands ($bands) must divide the signature length k ($MinhashK)")
     sigs.select(
       col("id"), col("sig"),
       posexplode(graft.functions.GraftFunctions.sigBandKeys(col("sig"), bands)))
@@ -126,10 +132,8 @@ object Dedup {
     * excludes from pairing. Same banding plan, so what this reports is
     * what the operator dropped; run it whenever the cap may have fired.
     */
-  def lshOversizedBuckets(docs: DataFrame, k: Int = 32, bands: Int = 8,
-                          maxBucket: Long = 1L << 20,
-                          idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    bandedSignatures(signaturesOf(docs, k, idCol, textCol), k, bands)
+  def lshOversizedBuckets(docs: DataFrame, maxBucket: Long = 1L << 20): DataFrame =
+    bandedSignatures(signaturesOf(docs), LshBands)
       .groupBy(col("band"), col("bucket"))
       .agg(count(lit(1)).as("n_members"))
       .filter(col("n_members") > maxBucket)
@@ -164,11 +168,9 @@ object Dedup {
     * band/bucket self-join is the only shuffle that matters at scale;
     * the bucket key includes the band id so buckets stay small.
     */
-  def minhashLsh(docs: DataFrame, threshold: Double = 0.5,
-                 k: Int = 32, bands: Int = 8,
-                 idCol: String = "doc_id", textCol: String = "text",
+  def minhashLsh(docs: DataFrame, threshold: Double = 0.5, bands: Int = LshBands,
                  maxBucket: Long = 1L << 20): DataFrame = {
-    val sigs = signaturesOf(docs, k, idCol, textCol)
+    val sigs = signaturesOf(docs)
 
     // bucket-size cap: a single boilerplate bucket that somehow survives
     // the exact-dup collapse (near-identical templated text) would make
@@ -180,7 +182,7 @@ object Dedup {
     // count shares the join's (band,bucket) shuffle — no extra
     // exchange.
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("band"), col("bucket"))
-    val banded = bandedSignatures(sigs, k, bands)
+    val banded = bandedSignatures(sigs, bands)
       .withColumn("__bn", count(lit(1)).over(w))
       .filter(col("__bn") <= maxBucket)
       .drop("__bn")
@@ -195,7 +197,7 @@ object Dedup {
       // form would be an interpreted tree walk per candidate pair).
       .withColumn("est_jaccard",
         graft.functions.GraftFunctions.sigAgreement(col("sig_a"), col("sig_b"))
-          .cast("double") / k)
+          .cast("double") / MinhashK)
       .filter(col("est_jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("est_jaccard"), 4).as("est_jaccard"))
       .dropDuplicates("id_a", "id_b")
@@ -274,13 +276,12 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
   }
 
-  /** SimHash near-dup pairs from raw text: exact-duplicate collapse
-    * (identical docs all share a simhash and would pair quadratically
-    * within their block — exact() reports those groups separately),
-    * then pigeonhole multi-index pairing.
+  /** SimHash near-dup pairs (hamming <= 8) from raw text:
+    * exact-duplicate collapse (identical docs all share a simhash and
+    * would pair quadratically within their block — exact() reports
+    * those groups separately), then pigeonhole multi-index pairing.
     */
-  def simhashPairs(docs: DataFrame, maxDist: Int = 8,
-                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def simhashPairs(docs: DataFrame): DataFrame = {
     // simhash before the exact-dup collapse (round-6, the signaturesOf
     // rationale): one pinned-width repartition by id parallelizes the
     // kernel (the one-file bench scan would otherwise serialize it),
@@ -289,33 +290,32 @@ object Dedup {
     // ⇒ identical lowercase token multiset ⇒ identical simhash, so
     // first(sh) is deterministic.
     val reps = docs
-      .select(col(idCol).as("id"), col(textCol).as("__text"))
+      .select(col("doc_id").as("id"), col("text").as("__text"))
       .repartition(docs.sparkSession.sparkContext.defaultParallelism * 2, col("id"))
       .select(fingerprint(col("__text")).as("__fp"), col("id"),
         simhash(col("__text")).as("sh"))
       .groupBy(col("__fp"))
       .agg(min(col("id")).as("id"), first(col("sh")).as("sh"))
       .select(col("id"), col("sh"))
-    simhashPairsFromHashes(reps, maxDist)
+    simhashPairsFromHashes(reps, 8)
   }
 
   /** Exact n-gram Jaccard for candidate pairs (the precise verifier
     * behind MinHash's estimate). pairs must carry id_a/id_b.
     */
-  def ngramJaccard(docs: DataFrame, pairs: DataFrame, n: Int = 3,
-                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def ngramJaccard(docs: DataFrame, pairs: DataFrame): DataFrame = {
     // texts join first, shingles AFTER (round-6): the joins prune to
     // pair members before the kernel runs, so shingling costs
     // O(|pairs|), not O(|docs|) — the round-5 form shingled the whole
     // corpus twice (once per join branch) to verify a pair-sized
     // candidate set, and shuffled the shingle ARRAYS instead of the
     // shorter raw text wherever the join shuffled
-    val t = docs.select(col(idCol).as("id"), col(textCol).as("__t"))
+    val t = docs.select(col("doc_id").as("id"), col("text").as("__t"))
     pairs
       .join(t.withColumnRenamed("id", "id_a").withColumnRenamed("__t", "__ta"), Seq("id_a"))
       .join(t.withColumnRenamed("id", "id_b").withColumnRenamed("__t", "__tb"), Seq("id_b"))
-      .withColumn("sh_a", shingles(col("__ta"), n))
-      .withColumn("sh_b", shingles(col("__tb"), n))
+      .withColumn("sh_a", shingles(col("__ta")))
+      .withColumn("sh_b", shingles(col("__tb")))
       .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
       .withColumn("uni", size(array_union(col("sh_a"), col("sh_b"))))
       .select(col("id_a"), col("id_b"),
@@ -329,7 +329,7 @@ object Dedup {
     * which is exactly the near-dup class quote farms and scraper
     * wrappers produce. Emits both directions plus the shingle-set
     * sizes, and a `superset_dup` flag when either direction clears
-    * `minContainment`.
+    * 0.9.
     *
     * Scale shape: pairs-driven like the Jaccard verifier — shingle
     * arrays are built per DOC (semi-join-prunable to docs that appear
@@ -337,17 +337,16 @@ object Dedup {
     * intersection is a per-row array op. No corpus self-join; cost is
     * O(|pairs| × shingles/doc).
     */
-  def shingleContainment(docs: DataFrame, pairs: DataFrame, n: Int = 3,
-                         minContainment: Double = 0.9,
-                         idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def shingleContainment(docs: DataFrame, pairs: DataFrame): DataFrame = {
+    val minContainment = 0.9
     // texts join first, shingles AFTER the pruning joins (round-6, the
     // ngramJaccard rationale): kernel cost O(|pairs|), not O(|docs|)
-    val t = docs.select(col(idCol).as("id"), col(textCol).as("__t"))
+    val t = docs.select(col("doc_id").as("id"), col("text").as("__t"))
     pairs
       .join(t.withColumnRenamed("id", "id_a").withColumnRenamed("__t", "__ta"), Seq("id_a"))
       .join(t.withColumnRenamed("id", "id_b").withColumnRenamed("__t", "__tb"), Seq("id_b"))
-      .withColumn("sh_a", shingles(col("__ta"), n))
-      .withColumn("sh_b", shingles(col("__tb"), n))
+      .withColumn("sh_a", shingles(col("__ta")))
+      .withColumn("sh_b", shingles(col("__tb")))
       .withColumn("n_shingles_a", size(col("sh_a")).cast("long"))
       .withColumn("n_shingles_b", size(col("sh_b")).cast("long"))
       .withColumn("n_common", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
@@ -393,10 +392,9 @@ object Dedup {
     * threshold. A 10^12-pair verify is budgetable: cost is
     * |pairs| × avgLen × maxDist, with the cap chosen by the caller.
     */
-  def editDistVerify(docs: DataFrame, pairs: DataFrame, maxDist: Int,
-                     idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def editDistVerify(docs: DataFrame, pairs: DataFrame, maxDist: Int): DataFrame = {
     require(maxDist >= 0, "maxDist must be non-negative")
-    val t = docs.select(col(idCol).as("id"), col(textCol).as("t"))
+    val t = docs.select(col("doc_id").as("id"), col("text").as("t"))
     pairs
       .join(t.withColumnRenamed("id", "id_a").withColumnRenamed("t", "t_a"), Seq("id_a"))
       .join(t.withColumnRenamed("id", "id_b").withColumnRenamed("t", "t_b"), Seq("id_b"))
@@ -432,28 +430,27 @@ object Dedup {
     * thing you store instead of rescanning the corpus — this operator
     * IS the maintenance contract for it.
     */
-  def incrementalDedup(oldDocs: DataFrame, newDocs: DataFrame,
-                       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def incrementalDedup(oldDocs: DataFrame, newDocs: DataFrame): DataFrame = {
     val oldIdx = oldDocs
-      .select(fingerprint(col(textCol)).as("h"), col(idCol).as("__old_id"))
+      .select(fingerprint(col("text")).as("h"), col("doc_id").as("__old_id"))
       .groupBy(col("h")).agg(min(col("__old_id")).as("old_id"))
-    val hashed = newDocs.select(col(idCol), fingerprint(col(textCol)).as("h"))
+    val hashed = newDocs.select(col("doc_id"), fingerprint(col("text")).as("h"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
     hashed
-      .withColumn("first_new_id", min(col(idCol)).over(w))
+      .withColumn("first_new_id", min(col("doc_id")).over(w))
       .join(oldIdx, Seq("h"), "left")
       .withColumn("verdict",
         when(col("old_id").isNotNull, lit("dup_of_old"))
-          .when(col(idCol) > col("first_new_id"), lit("dup_in_new"))
+          .when(col("doc_id") > col("first_new_id"), lit("dup_in_new"))
           .otherwise(lit("unique")))
       .withColumn("canonical_id",
         coalesce(col("old_id"), col("first_new_id")))
-      .select(col(idCol), col("h").as("content_hash"), col("verdict"),
+      .select(col("doc_id"), col("h").as("content_hash"), col("verdict"),
         col("canonical_id"))
   }
 
   /** Test-set decontamination (the GPT-3-style benchmark-overlap
-    * rule): flag every document sharing at least one word `n`-gram
+    * rule): flag every document sharing at least one word 8-gram
     * with the benchmark/eval set, with the count of distinct shared
     * grams kept queryable. Same shingle definition as the MinHash
     * family (lowercase, \\W+ tokens, short docs degrade to one
@@ -464,20 +461,19 @@ object Dedup {
     * hash shuffle on the gram), the corpus side is explode ->
     * semi-join -> doc-keyed count — no corpus self-join anywhere.
     *
-    * Output: (idCol, n_hits, contaminated) for EVERY input doc.
+    * Output: (doc_id, n_hits, contaminated) for EVERY input doc.
     */
-  def decontaminate(docs: DataFrame, benchmark: DataFrame, n: Int = 8,
-                    idCol: String = "doc_id", textCol: String = "text",
-                    benchTextCol: String = "text"): DataFrame = {
+  def decontaminate(docs: DataFrame, benchmark: DataFrame): DataFrame = {
+    val n = 8
     val bg = benchmark
-      .select(explode(shingles(col(benchTextCol), n)).as("__g"))
+      .select(explode(shingles(col("text"), n)).as("__g"))
       .distinct()
     val hits = docs
-      .select(col(idCol), explode(shingles(col(textCol), n)).as("__g"))
+      .select(col("doc_id"), explode(shingles(col("text"), n)).as("__g"))
       .join(bg, Seq("__g"), "left_semi")
-      .groupBy(col(idCol)).agg(count(lit(1)).as("n_hits"))
-    docs.select(col(idCol))
-      .join(hits, Seq(idCol), "left")
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hits"))
+    docs.select(col("doc_id"))
+      .join(hits, Seq("doc_id"), "left")
       .withColumn("n_hits", coalesce(col("n_hits"), lit(0L)))
       .withColumn("contaminated", col("n_hits") > 0)
   }
@@ -500,13 +496,12 @@ object Dedup {
     * repeated 10^9 times in the partial agg — no window, no skew
     * blowup.
     */
-  def paragraphDedup(paras: DataFrame, idCol: String = "doc_id",
-                     idxCol: String = "idx", paraCol: String = "para"): DataFrame =
-    paras.withColumn("__h", fingerprint(col(paraCol)))
+  def paragraphDedup(paras: DataFrame): DataFrame =
+    paras.withColumn("__h", fingerprint(col("para")))
       .groupBy(col("__h"))
-      .agg(min(struct(col(idCol), col(idxCol), col(paraCol))).as("__k"))
-      .select(col("__k")(idCol).as(idCol), col("__k")(idxCol).as(idxCol),
-        col("__k")(paraCol).as(paraCol))
+      .agg(min(struct(col("doc_id"), col("idx"), col("para"))).as("__k"))
+      .select(col("__k")("doc_id").as("doc_id"), col("__k")("idx").as("idx"),
+        col("__k")("para").as("para"))
 
   /** Intra-document repeated-line removal (the RefinedWeb line-level
     * rule): within EACH document, every line whose normalized text
@@ -519,15 +514,14 @@ object Dedup {
     * whale group possible. Input is the exploded line table
     * (id, idx, line); output is the surviving (id, idx, line) rows.
     */
-  def dedupLinesWithin(lines: DataFrame, idCol: String = "doc_id",
-                       idxCol: String = "idx", lineCol: String = "line"): DataFrame = {
+  def dedupLinesWithin(lines: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol), fingerprint(col(lineCol)))
-      .orderBy(col(idxCol))
+      .partitionBy(col("doc_id"), fingerprint(col("line")))
+      .orderBy(col("idx"))
     lines
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
-      .select(col(idCol), col(idxCol), col(lineCol))
+      .select(col("doc_id"), col("idx"), col("line"))
   }
 
   /** Connected components over a near-dup pair graph — the TRANSITIVE
@@ -550,18 +544,16 @@ object Dedup {
     * contraction halves round counts on adversarially deep graphs;
     * the plain form is the right trade at near-dup shapes.)
     */
-  def connectedComponents(pairs: DataFrame, nodes: DataFrame,
-                          idA: String = "id_a", idB: String = "id_b",
-                          nodeCol: String = "doc_id",
-                          maxIters: Int = 50): DataFrame = {
+  def connectedComponents(pairs: DataFrame, nodes: DataFrame): DataFrame = {
+    val maxRounds = 50
     // the symmetric edge set is read by every round
-    val e = Pin.truncate(pairs.select(col(idA).as("a"), col(idB).as("b"))
-      .unionByName(pairs.select(col(idB).as("a"), col(idA).as("b")))
+    val e = Pin.truncate(pairs.select(col("id_a").as("a"), col("id_b").as("b"))
+      .unionByName(pairs.select(col("id_b").as("a"), col("id_a").as("b")))
       .distinct())
     // label every node AND every pair endpoint: an endpoint missing
     // from `nodes` would otherwise enter the propagation without an
     // initial self-label and destabilize the convergence count
-    var labels = nodes.select(col(nodeCol).as("n"))
+    var labels = nodes.select(col("doc_id").as("n"))
       .unionByName(e.select(col("a").as("n")))
       .distinct()
       .select(col("n"), col("n").as("lbl"))
@@ -569,7 +561,7 @@ object Dedup {
     val lblType = labels.schema("lbl").dataType
     var changed = 1L
     var it = 0
-    while (changed > 0 && it < maxIters) {
+    while (changed > 0 && it < maxRounds) {
       val nbr = e.join(labels.withColumnRenamed("n", "b"), Seq("b"))
         .select(col("a").as("n"), col("lbl"))
       // ONE job per round: the old label rides the union as a nullable
@@ -591,8 +583,8 @@ object Dedup {
       it += 1
     }
     Pin.release(e)
-    require(changed == 0, s"connectedComponents did not converge in $maxIters rounds")
-    labels.select(col("n").as(nodeCol), col("lbl").as("component"))
+    require(changed == 0, s"connectedComponents did not converge in $maxRounds rounds")
+    labels.select(col("n").as("doc_id"), col("lbl").as("component"))
   }
 
   /** Near-dup flow matrix between slices — WHERE does the duplication
@@ -606,21 +598,19 @@ object Dedup {
     * table against (id, slice), one (slice_a, slice_b) count agg; the
     * corpus itself never flows through (the q77 discipline).
     */
-  def dupFlowMatrix(pairs: DataFrame, docs: DataFrame,
-                    idCol: String = "doc_id", sliceCol: String = "source",
-                    idA: String = "id_a", idB: String = "id_b"): DataFrame = {
-    val s = docs.select(col(idCol), col(sliceCol))
+  def dupFlowMatrix(pairs: DataFrame, docs: DataFrame): DataFrame = {
+    val s = docs.select(col("doc_id"), col("source"))
     val m = pairs
-      .join(s.select(col(idCol).as(idA), col(sliceCol).as("__sa")), Seq(idA))
-      .join(s.select(col(idCol).as(idB), col(sliceCol).as("__sb")), Seq(idB))
+      .join(s.select(col("doc_id").as("id_a"), col("source").as("__sa")), Seq("id_a"))
+      .join(s.select(col("doc_id").as("id_b"), col("source").as("__sb")), Seq("id_b"))
       .select(least(col("__sa"), col("__sb")).as("source_a"),
         greatest(col("__sa"), col("__sb")).as("source_b"))
       .groupBy(col("source_a"), col("source_b"))
       .agg(count(lit(1)).as("n_pairs"))
-    val cnt = s.groupBy(col(sliceCol)).agg(count(lit(1)).as("n_docs"))
-    m.join(broadcast(cnt.select(col(sliceCol).as("source_a"),
+    val cnt = s.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
+    m.join(broadcast(cnt.select(col("source").as("source_a"),
         col("n_docs").as("docs_a"))), Seq("source_a"))
-      .join(broadcast(cnt.select(col(sliceCol).as("source_b"),
+      .join(broadcast(cnt.select(col("source").as("source_b"),
         col("n_docs").as("docs_b"))), Seq("source_b"))
       .select(col("source_a"), col("source_b"), col("n_pairs"),
         col("docs_a"), col("docs_b"))
@@ -638,21 +628,19 @@ object Dedup {
     * collapses before the shuffle — and one join-back on the
     * component. Output: (id, component, score, keep).
     */
-  def keepBestPerCluster(components: DataFrame, scores: DataFrame,
-                         idCol: String = "doc_id",
-                         scoreCol: String = "score"): DataFrame = {
-    val j = components.join(scores.select(col(idCol), col(scoreCol)), Seq(idCol))
+  def keepBestPerCluster(components: DataFrame, scores: DataFrame): DataFrame = {
+    val j = components.join(scores.select(col("doc_id"), col("score")), Seq("doc_id"))
     val best = j.groupBy(col("component"))
-      .agg(max(struct(col(scoreCol), (-col(idCol)).as("__negid"))).as("__b"))
+      .agg(max(struct(col("score"), (-col("doc_id")).as("__negid"))).as("__b"))
       .select(col("component"), (-col("__b.__negid")).as("__survivor"))
     j.join(best, Seq("component"))
-      .select(col(idCol), col("component"), col(scoreCol),
-        (col(idCol) === col("__survivor")).as("keep"))
+      .select(col("doc_id"), col("component"), col("score"),
+        (col("doc_id") === col("__survivor")).as("keep"))
   }
 
   /** Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
     * SIGMOD 2003 — the MOSS algorithm, value-selection form): hash
-    * every k-token gram, slide a window of `w` consecutive gram
+    * every k = 5-token gram, slide a window of w = 4 consecutive gram
     * hashes, keep each window's MINIMUM hash, emit the distinct kept
     * hashes per document. Any shared run of >= k + w - 1 tokens
     * between two documents is GUARANTEED to contribute at least one
@@ -675,27 +663,26 @@ object Dedup {
     * possible) and the final per-doc distinct. Map-side gram
     * construction via transform/posexplode, codegen'd md5.
     */
-  def winnowFingerprints(docs: DataFrame, k: Int = 5, w: Int = 4,
-                         idCol: String = "doc_id",
-                         textCol: String = "text"): DataFrame = {
-    require(k >= 1 && w >= 1, "gram length k and window w must be >= 1")
-    val toks = graft.functions.GraftFunctions.tokenizeWords(col(textCol))
-    val base = docs.select(col(idCol), toks.as("__toks"))
+  def winnowFingerprints(docs: DataFrame): DataFrame = {
+    val k = 5 // gram length
+    val w = 4 // window
+    val toks = graft.functions.GraftFunctions.tokenizeWords(col("text"))
+    val base = docs.select(col("doc_id"), toks.as("__toks"))
       .withColumn("__n", size(col("__toks")))
     // native gram kernel (short docs -> empty array inside the
     // kernel), md5 applied ROW-WISE after the posexplode so the hash
     // stays in whole-stage codegen instead of an interpreted
     // per-element lambda
     val g = base
-      .select(col(idCol), (col("__n") - k + 1).as("__ng"),
+      .select(col("doc_id"), (col("__n") - k + 1).as("__ng"),
         posexplode(graft.functions.GraftFunctions.ngramJoin(col("__toks"), k)))
-      .toDF(idCol, "__ng", "__gpos", "__gram")
-      .select(col(idCol), col("__ng"), col("__gpos"), md5(col("__gram")).as("__h"))
-    val win = Window.partitionBy(col(idCol)).orderBy(col("__gpos"))
+      .toDF("doc_id", "__ng", "__gpos", "__gram")
+      .select(col("doc_id"), col("__ng"), col("__gpos"), md5(col("__gram")).as("__h"))
+    val win = Window.partitionBy(col("doc_id")).orderBy(col("__gpos"))
       .rowsBetween(-(w - 1), 0)
     g.withColumn("__m", min(col("__h")).over(win))
       .filter(col("__gpos") >= least(lit(w), col("__ng")) - 1)
-      .select(col(idCol), col("__m").as("fp"))
+      .select(col("doc_id"), col("__m").as("fp"))
       .distinct()
   }
 }

@@ -27,13 +27,12 @@ import org.apache.spark.sql.functions._
   */
 object Distrib {
 
-  def sliceKlDivergence(docs: DataFrame, sliceCol: String,
-                        textCol: String = "text"): DataFrame = {
+  def sliceKlDivergence(docs: DataFrame, sliceCol: String): DataFrame = {
     def toks(c: Column) = graft.functions.GraftFunctions.tokenizeWords(c)
     // pinned: cw, ns and the join all read sw (the model is
     // O(slices x vocab), bounded)
     val sw = docs
-      .select(col(sliceCol), explode(toks(col(textCol))).as("word"))
+      .select(col(sliceCol), explode(toks(col("text"))).as("word"))
       .groupBy(col(sliceCol), col("word")).agg(count(lit(1)).as("csw"))
       .transform(Pin.once)
     // corpus word counts: re-aggregate the slice model, not the corpus
@@ -79,15 +78,14 @@ object Distrib {
     * ln 2). Slice cardinality is assumed dashboard-scale (sources,
     * languages, shards — not doc_id).
     */
-  def pairwiseJsd(docs: DataFrame, sliceCol: String,
-                  textCol: String = "text"): DataFrame = {
+  def pairwiseJsd(docs: DataFrame, sliceCol: String): DataFrame = {
     def toks(c: Column) = graft.functions.GraftFunctions.tokenizeWords(c)
     val ca = s"${sliceCol}_a"
     val cb = s"${sliceCol}_b"
     // pinned: ns and both join legs read sw (the model is
     // O(slices x vocab), bounded)
     val sw = docs
-      .select(col(sliceCol), explode(toks(col(textCol))).as("word"))
+      .select(col(sliceCol), explode(toks(col("text"))).as("word"))
       .groupBy(col(sliceCol), col("word")).agg(count(lit(1)).as("c"))
       .transform(Pin.once)
     val ns = sw.groupBy(col(sliceCol)).agg(sum(col("c")).as("ns"))
@@ -134,14 +132,13 @@ object Distrib {
     * [[Sketches.KmvDistinct]] signatures (exact below k by the same
     * guarantee x26 oracles).
     */
-  def vocabJaccard(docs: DataFrame, sliceCol: String,
-                   textCol: String = "text"): DataFrame = {
+  def vocabJaccard(docs: DataFrame, sliceCol: String): DataFrame = {
     def toks(c: Column) = graft.functions.GraftFunctions.tokenizeWords(c)
     val ca = s"${sliceCol}_a"
     val cb = s"${sliceCol}_b"
     // pinned: the size table and both join legs read sv
     val sv = docs
-      .select(col(sliceCol), explode(toks(col(textCol))).as("word"))
+      .select(col(sliceCol), explode(toks(col("text"))).as("word"))
       .distinct()
       .transform(Pin.once)
     val nv = sv.groupBy(col(sliceCol)).agg(count(lit(1)).as("nv"))
@@ -175,14 +172,13 @@ object Distrib {
     * summation-order ulps in the fit sums, same contract as
     * [[sliceKlDivergence]].
     */
-  def zipfHeaps(docs: DataFrame, textCol: String = "text",
-                topN: Int = 1000): DataFrame = {
+  def zipfHeaps(docs: DataFrame, topN: Int = 1000): DataFrame = {
     require(topN >= 2, "topN >= 2")
     def toks(c: Column) = graft.functions.GraftFunctions.tokenizeWords(c)
     import org.apache.spark.sql.expressions.Window
     // pinned: totals and the ranked head both read w
     val w = docs
-      .select(explode(toks(col(textCol))).as("word"))
+      .select(explode(toks(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("c"))
       .transform(Pin.once)
     val tot = w.agg(count(lit(1)).as("vocab"), sum(col("c")).as("n_tokens"))
@@ -224,11 +220,10 @@ object Distrib {
     * (N, V, N1, N2) re-aggregates the MODEL. Ratios divide integer
     * counts once, round(6)/round(4).
     */
-  def goodTuring(docs: DataFrame, sliceCol: String,
-                 textCol: String = "text"): DataFrame = {
+  def goodTuring(docs: DataFrame, sliceCol: String): DataFrame = {
     def toks(c: Column) = graft.functions.GraftFunctions.tokenizeWords(c)
     docs
-      .select(col(sliceCol).as("slice"), explode(toks(col(textCol))).as("w"))
+      .select(col(sliceCol).as("slice"), explode(toks(col("text"))).as("w"))
       .groupBy(col("slice"), col("w")).agg(count(lit(1)).as("c"))
       .groupBy(col("slice"))
       .agg(sum(col("c")).as("n_tokens"),

@@ -41,9 +41,7 @@ import org.apache.spark.sql.functions._
 object Dsir {
 
   def importanceWeights(docs: DataFrame, target: DataFrame,
-                        buckets: Int = 65536,
-                        idCol: String = "doc_id",
-                        textCol: String = "text"): DataFrame = {
+                        buckets: Int = 65536): DataFrame = {
     require(buckets >= 1, "buckets must be >= 1")
     def toks(c: Column) = graft.functions.GraftFunctions.tokenizeWords(c)
     // hashed bigram features: native gram kernel for the adjacent
@@ -53,7 +51,7 @@ object Dsir {
     // zip_with evaluated two interpreted lambdas per pair)
     def explodedFeats(src: DataFrame, extra: Seq[Column]): DataFrame =
       src.select(extra :+ explode(
-          graft.functions.GraftFunctions.ngramJoin(toks(col(textCol)), 2))
+          graft.functions.GraftFunctions.ngramJoin(toks(col("text")), 2))
           .as("__bg"): _*)
         .select(extra :+
           pmod(graft.util.SqlCols.md5Head32(col("__bg")), lit(buckets.toLong))
@@ -68,7 +66,7 @@ object Dsir {
     val rm = model(docs, "cr")
     val consts = tm.agg(coalesce(sum(col("ct")), lit(0L)).as("__tt"))
       .crossJoin(rm.agg(coalesce(sum(col("cr")), lit(0L)).as("__tr")))
-    val docF = explodedFeats(docs, Seq(col(idCol)))
+    val docF = explodedFeats(docs, Seq(col("doc_id")))
     docF
       .join(broadcast(tm), Seq("f"), "left")
       .join(broadcast(rm), Seq("f"), "left")
@@ -78,7 +76,7 @@ object Dsir {
             (col("__tt") + lit(buckets.toLong)).cast("double")) -
         log((coalesce(col("cr"), lit(0L)) + 1L).cast("double") /
             (col("__tr") + lit(buckets.toLong)).cast("double")))
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_feats"),
         round(sum(col("__lr")), 4).as("log_w"))
   }

@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
   *      join. Per-doc windows are bounded by document length; no whale
   *      key is possible.
   *
-  * Output: one row per input document — (idCol, n_tokens, n_removed,
+  * Output: one row per input document — (doc_id, n_tokens, n_removed,
   * kept_text) where kept_text re-joins the surviving tokens with
   * single spaces (tokenization is the corpus-wide `\W+` lowercase
   * rule, q07 parity). Documents shorter than k tokens pass through
@@ -52,11 +52,10 @@ object ExactSubstr {
   private def toksOf(textCol: Column): Column =
     graft.functions.GraftFunctions.tokenizeWords(textCol)
 
-  def dedupSubstrings(docs: DataFrame, k: Int = 8,
-                      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def dedupSubstrings(docs: DataFrame, k: Int = 8): DataFrame = {
     require(k >= 2, "window length k must be >= 2")
     val base = docs
-      .select(col(idCol).as("id"), toksOf(col(textCol)).as("__toks"))
+      .select(col("doc_id").as("id"), toksOf(col("text")).as("__toks"))
       .withColumn("__n", size(col("__toks")))
 
     // one row per token — the granularity the operator inherently works at
@@ -117,9 +116,9 @@ object ExactSubstr {
             struct(col("pos"), col("tok"))))).getField("tok"),
           " ").as("kept_text"))
 
-    docs.select(col(idCol).as("id"))
+    docs.select(col("doc_id").as("id"))
       .join(perDoc, Seq("id"), "left")
-      .select(col("id").as(idCol),
+      .select(col("id").as("doc_id"),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
         coalesce(col("n_removed"), lit(0L)).as("n_removed"),
         coalesce(col("kept_text"), lit("")).as("kept_text"))

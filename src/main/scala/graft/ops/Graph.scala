@@ -36,16 +36,15 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** @param edges (srcCol, dstCol) directed edges, duplicates allowed
+  /** @param edges (src, dst) directed edges, duplicates allowed
     *              (parallel edges each carry mass, matching the sum
     *              semantics above).
     */
-  def pageRank(edges: DataFrame, iters: Int = 3, damping: Double = 0.85,
-               srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+  def pageRank(edges: DataFrame, iters: Int = 3): DataFrame = {
     require(iters >= 1, "iters >= 1")
-    require(damping > 0.0 && damping < 1.0, "damping in (0,1)")
+    val damping = 0.85
     // e and base are read by every round
-    val e = Pin.truncate(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
+    val e = Pin.truncate(edges.select(col("src"), col("dst")))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()

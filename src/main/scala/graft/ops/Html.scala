@@ -77,22 +77,21 @@ object Html {
       .drop("col")
 
   /** DOM-heuristic main-content selection (the jusText/Arc90 family):
-    * a block is content iff it has at least `minWords` words and at
-    * most one link per `wordsPerLink` words (navigation and footer
+    * a block is content iff it has at least 5 words and at
+    * most one link per 5 words (navigation and footer
     * chrome is short and link-dense; body copy is long and link-
     * sparse). Kept blocks reassemble in document order, "\n\n"-joined.
-    * Integer-only keep arithmetic (n_links * wordsPerLink <= n_words)
+    * Integer-only keep arithmetic (n_links * 5 <= n_words)
     * so the oracle compares exactly.
     *
     * Output: (doc_id, n_blocks, n_kept, main_text) — one row per input
     * page, empty main_text when nothing qualifies.
     */
-  def mainContent(pages: DataFrame, htmlCol: Column, idCol: Column,
-                  minWords: Int = 5, wordsPerLink: Int = 5): DataFrame =
+  def mainContent(pages: DataFrame, htmlCol: Column, idCol: Column): DataFrame =
     blocks(pages, htmlCol, idCol)
       .withColumn("keep",
-        col("n_words") >= minWords &&
-          col("n_links") * wordsPerLink <= col("n_words"))
+        col("n_words") >= 5 &&
+          col("n_links") * 5 <= col("n_words"))
       .groupBy(col("doc_id"))
       .agg(
         count(lit(1)).cast("long").as("n_blocks"),

@@ -209,8 +209,7 @@ object Joins {
     */
   def bloomSemiJoin(fact: DataFrame, dim: DataFrame,
                     factKey: String, dimKey: String,
-                    expectedKeys: Long = 1000000L,
-                    fpp: Double = 0.01): DataFrame = {
+                    expectedKeys: Long = 1000000L): DataFrame = {
     // concrete-type membership, not typeName: IntegerType.typeName is
     // "integer" ("int" is only its simpleString), so a name list
     // silently rejects int32 parquet keys
@@ -220,7 +219,7 @@ object Joins {
         org.apache.spark.sql.types.ShortType, org.apache.spark.sql.types.ByteType)
         .contains(keyType),
       s"bloomSemiJoin requires an integral key; $factKey is ${keyType.typeName}")
-    val bf = dim.stat.bloomFilter(col(dimKey).cast("long"), expectedKeys, fpp)
+    val bf = dim.stat.bloomFilter(col(dimKey).cast("long"), expectedKeys, 0.01)
     val bc = fact.sparkSession.sparkContext.broadcast(bf)
     val might = udf((v: java.lang.Long) => v != null && bc.value.mightContainLong(v))
     fact

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   *   3. does not contain the word "javascript" (case-insensitive);
   *   4. contains no curly brace (code/markup tell);
   * per PAGE (doc), keep iff
-  *   5. at least `minKept` lines survived, AND
+  *   5. at least 3 lines survived, AND
   *   6. no line contains "lorem ipsum" (placeholder-text page drop —
   *      a PAGE rule in C4: the offending line may itself pass 1–4).
   *
@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   */
 object LineRules {
 
-  def c4LineFilter(lines: DataFrame, minWords: Int = 5, minKept: Int = 3): DataFrame = {
+  def c4LineFilter(lines: DataFrame, minWords: Int = 5): DataFrame = {
     // native case-preserving tokenizer (the count is case-insensitive
     // anyway; the former filter(split(...)) HOF was interpreted)
     val words = graft.functions.GraftFunctions.tokenizeRaw(col("line"))
@@ -59,6 +59,6 @@ object LineRules {
           "\n").as("kept_text"),
         bool_or(col("__lorem")).as("__lorem"))
       .select(col("doc_id"), col("n_lines"), col("n_kept"), col("kept_text"),
-        (col("n_kept") >= minKept && !col("__lorem")).as("doc_kept"))
+        (col("n_kept") >= 3 && !col("__lorem")).as("doc_kept"))
   }
 }

@@ -31,23 +31,21 @@ import org.apache.spark.sql.functions._
   */
 object LmScore {
 
-  def unigramCrossEntropy(docs: DataFrame, ref: DataFrame,
-                          idCol: String = "doc_id",
-                          textCol: String = "text"): DataFrame = {
+  def unigramCrossEntropy(docs: DataFrame, ref: DataFrame): DataFrame = {
     def toks(c: Column) = graft.functions.GraftFunctions.tokenizeWords(c)
     val refCounts = ref
-      .select(explode(toks(col(textCol))).as("word"))
+      .select(explode(toks(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("c"))
     val consts = refCounts.agg(
       greatest(coalesce(sum(col("c")), lit(0L)) + count(lit(1)), lit(1L))
         .cast("double").as("__denom"))
-    val tok = docs.select(col(idCol), explode(toks(col(textCol))).as("word"))
+    val tok = docs.select(col("doc_id"), explode(toks(col("text"))).as("word"))
     tok
       .join(refCounts, Seq("word"), "left")
       .crossJoin(broadcast(consts))
       .withColumn("__nll",
         -log((coalesce(col("c"), lit(0L)) + lit(1L)) / col("__denom")))
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"),
         round(avg(col("__nll")), 4).as("cross_entropy"))
   }
@@ -76,9 +74,7 @@ object LmScore {
     * doc-keyed mean. At 10^12 docs the model joins are the only
     * shuffles and both broadcast when the vocab is bounded.
     */
-  def bigramCrossEntropy(docs: DataFrame, ref: DataFrame,
-                         idCol: String = "doc_id",
-                         textCol: String = "text"): DataFrame = {
+  def bigramCrossEntropy(docs: DataFrame, ref: DataFrame): DataFrame = {
     def toks(c: Column) = graft.functions.GraftFunctions.tokenizeWords(c)
     // bigrams via the native gram kernel (adjacent pairs joined " ");
     // w1/w2 split back row-wise AFTER the explode (tokens cannot
@@ -86,12 +82,12 @@ object LmScore {
     // an interpreted lambda per pair
     def bigramCols(src: DataFrame, extra: Seq[Column]): DataFrame =
       src.select(extra :+ explode(
-          graft.functions.GraftFunctions.ngramJoin(toks(col(textCol)), 2))
+          graft.functions.GraftFunctions.ngramJoin(toks(col("text")), 2))
           .as("__bg"): _*)
         .select(extra ++ Seq(
           substring_index(col("__bg"), " ", 1).as("w1"),
           substring_index(col("__bg"), " ", -1).as("w2")): _*)
-    val refToks = ref.select(explode(toks(col(textCol))).as("word"))
+    val refToks = ref.select(explode(toks(col("text"))).as("word"))
     val vocab = refToks.agg(
       greatest(count_distinct(col("word")), lit(1L)).as("__v"))
     // pinned: ctx and the scoring join both read refBg (the model is
@@ -101,7 +97,7 @@ object LmScore {
       .agg(count(lit(1)).as("c2"))
       .transform(Pin.once)
     val ctx = refBg.groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
-    val docBg = bigramCols(docs, Seq(col(idCol)))
+    val docBg = bigramCols(docs, Seq(col("doc_id")))
     docBg
       .join(refBg, Seq("w1", "w2"), "left")
       .join(ctx, Seq("w1"), "left")
@@ -109,7 +105,7 @@ object LmScore {
       .withColumn("__nll",
         -log((coalesce(col("c2"), lit(0L)) + lit(1L)).cast("double") /
           (coalesce(col("c1"), lit(0L)) + col("__v")).cast("double")))
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"),
         round(avg(col("__nll")), 4).as("cross_entropy"))
   }

@@ -32,9 +32,7 @@ import org.apache.spark.sql.functions._
 object Mixture {
 
   def tokenBudgetPlan(docs: DataFrame, weights: Seq[(String, Double)],
-                      budget: Long,
-                      sliceCol: String = "source",
-                      textCol: String = "text"): DataFrame = {
+                      budget: Long): DataFrame = {
     require(budget >= 0, "budget must be >= 0")
     require(weights.nonEmpty && weights.forall(_._2 >= 0.0),
       "weights must be non-empty and non-negative")
@@ -42,13 +40,13 @@ object Mixture {
     require(sumW > 0.0, "at least one weight must be positive")
     def toks(c: Column) = graft.functions.GraftFunctions.tokenizeWords(c)
     val avail = docs
-      .groupBy(col(sliceCol))
-      .agg(sum(size(toks(col(textCol)))).as("avail_tokens"))
+      .groupBy(col("source"))
+      .agg(sum(size(toks(col("text")))).as("avail_tokens"))
     val spark = docs.sparkSession
     import spark.implicits._
-    val design = weights.toDF(sliceCol, "weight")
-    avail.join(design, Seq(sliceCol), "full_outer")
-      .select(col(sliceCol),
+    val design = weights.toDF("source", "weight")
+    avail.join(design, Seq("source"), "full_outer")
+      .select(col("source"),
         coalesce(col("weight"), lit(0.0)).as("weight"),
         coalesce(col("avail_tokens"), lit(0L)).as("avail_tokens"))
       .withColumn("target_tokens",
@@ -83,14 +81,11 @@ object Mixture {
     * slice aggregation; softmax runs over the slice-count-sized model
     * (single-partition window over slices — bounded by construction).
     */
-  def doremiWeights(docs: DataFrame, ref: DataFrame, eta: Double = 1.0,
-                    sliceCol: String = "source",
-                    idCol: String = "doc_id",
-                    textCol: String = "text"): DataFrame = {
+  def doremiWeights(docs: DataFrame, ref: DataFrame, eta: Double = 1.0): DataFrame = {
     require(eta > 0.0, "eta must be positive")
-    val ce = LmScore.unigramCrossEntropy(docs, ref, idCol, textCol)
-    val byDoc = docs.select(col(idCol), col(sliceCol)).join(ce, Seq(idCol))
-    val slices = byDoc.groupBy(col(sliceCol))
+    val ce = LmScore.unigramCrossEntropy(docs, ref)
+    val byDoc = docs.select(col("doc_id"), col("source")).join(ce, Seq("doc_id"))
+    val slices = byDoc.groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         round(avg(col("cross_entropy")), 6).as("ce"))
     val base = byDoc.agg(round(avg(col("cross_entropy")), 6).as("__ce0"))
@@ -100,7 +95,7 @@ object Mixture {
         round(greatest(col("ce") - col("__ce0"), lit(0.0)), 6))
       .withColumn("__e", exp(lit(eta) * col("excess")))
       .withColumn("weight", round(col("__e") / sum(col("__e")).over(w), 6))
-      .select(col(sliceCol), col("n_docs"), col("ce"), col("excess"),
+      .select(col("source"), col("n_docs"), col("ce"), col("excess"),
         col("weight"))
   }
 
@@ -127,14 +122,12 @@ object Mixture {
     * model (the normalization window is single-partition but bounded
     * by slice count, never data).
     */
-  def temperatureWeights(docs: DataFrame, alpha: Double = 0.3,
-                         sliceCol: String = "source",
-                         textCol: String = "text"): DataFrame = {
+  def temperatureWeights(docs: DataFrame, alpha: Double = 0.3): DataFrame = {
     require(alpha > 0.0, "alpha must be positive")
     def toks(c: Column) = graft.functions.GraftFunctions.tokenizeWords(c)
     val w = org.apache.spark.sql.expressions.Window.partitionBy()
-    docs.groupBy(col(sliceCol))
-      .agg(sum(size(toks(col(textCol)))).cast("long").as("n_tokens"))
+    docs.groupBy(col("source"))
+      .agg(sum(size(toks(col("text")))).cast("long").as("n_tokens"))
       // zero-token corpus: 0/0 would read NaN — report all-zero
       // columns instead (the tokenBudgetPlan empty-slice convention)
       .withColumn("share",
@@ -149,7 +142,7 @@ object Mixture {
       .withColumn("boost",
         when(col("share") > 0, round(col("weight") / col("share"), 6))
           .otherwise(lit(0.0)))
-      .select(col(sliceCol), col("n_tokens"), col("share"), col("weight"),
+      .select(col("source"), col("n_tokens"), col("share"), col("weight"),
         col("boost"))
   }
 }

@@ -83,29 +83,41 @@ object Multimodal {
     out.toByteArray
   }
 
-  /** Pages of a 'GPDF' container (raster bytes, in order). The page
-    * count and lengths are input, not trusted: a count or length that
-    * does not fit the container throws IllegalArgumentException
-    * instead of over-reading or looping in place.
+  /** Walks a `[magic][count:int32][per record: len:int32 + bytes]`
+    * container — the GPDF page and GVID frame layout — calling
+    * `visit(i, off, len)` for record i, whose bytes are
+    * [off, off + len), and returns the record count. The count and
+    * lengths are input, not trusted: a count or length that does not
+    * fit the container throws IllegalArgumentException instead of
+    * over-reading, allocating from a forged count, or looping in place.
     */
-  def pdfPages(bytes: Array[Byte]): Vector[Array[Byte]] = {
-    require(kindOf(bytes) == "pdf" && bytes.length >= 8, "not a pdf container")
+  private def walkRecords(bytes: Array[Byte], kind: String)(
+      visit: (Int, Int, Int) => Unit): Int = {
+    require(kindOf(bytes) == kind && bytes.length >= 8, s"not a $kind container")
     val n = i32(bytes, 4)
-    // each page record holds at least its 4-byte length
+    // each record holds at least its 4-byte length
     require(n >= 0 && n <= (bytes.length - 8) / 4,
-      s"pdf page count $n does not fit a ${bytes.length}-byte container")
+      s"$kind record count $n does not fit a ${bytes.length}-byte container")
     var off = 8
-    val out = Vector.newBuilder[Array[Byte]]
-    var p = 0
-    while (p < n) {
-      require(bytes.length - off >= 4, s"pdf container truncated at page $p")
+    var i = 0
+    while (i < n) {
+      require(bytes.length - off >= 4, s"$kind container truncated at record $i")
       val len = i32(bytes, off)
       require(len >= 0 && len <= bytes.length - off - 4,
-        s"pdf page $p length $len overruns the ${bytes.length}-byte container")
-      out += bytes.slice(off + 4, off + 4 + len)
+        s"$kind record $i length $len overruns the ${bytes.length}-byte container")
+      visit(i, off + 4, len)
       off += 4 + len
-      p += 1
+      i += 1
     }
+    n
+  }
+
+  /** Pages of a 'GPDF' container (raster bytes, in order); a malformed
+    * container throws IllegalArgumentException ([[walkRecords]]).
+    */
+  def pdfPages(bytes: Array[Byte]): Vector[Array[Byte]] = {
+    val out = Vector.newBuilder[Array[Byte]]
+    walkRecords(bytes, "pdf")((_, off, len) => out += bytes.slice(off, off + len))
     out.result()
   }
 
@@ -142,22 +154,17 @@ object Multimodal {
     else "image"
 
   def metaOf(ref: String, bytes: Array[Byte]): MediaMeta = kindOf(bytes) match {
-    case "pdf" =>
-      val n = i32(bytes, 4)
-      // a structurally valid zero-page container is 8 bytes — there is
-      // no first page record to read dimensions from
-      if (n <= 0 || bytes.length < 12) MediaMeta(ref, "pdf", 0, 0, 0, 0, 0, bytes.length.toLong)
-      else {
-        val (w, h, _) = SynthRaster.parse(bytes.slice(12, 12 + i32(bytes, 8)))
-        MediaMeta(ref, "pdf", w, h, n, 0, 0, bytes.length.toLong)
+    case kind @ ("pdf" | "video") =>
+      // the first page or frame carries the dimensions; a zero-record
+      // container has none to read
+      var first: Array[Byte] = null
+      val n = walkRecords(bytes, kind) { (i, off, len) =>
+        if (i == 0) first = bytes.slice(off, off + len)
       }
-    case "video" =>
-      val n = i32(bytes, 4)
-      if (n <= 0 || bytes.length < 12) MediaMeta(ref, "video", 0, 0, 0, 0, 0, bytes.length.toLong)
+      if (first == null) MediaMeta(ref, kind, 0, 0, 0, 0, 0, bytes.length.toLong)
       else {
-        // first frame carries the dimensions
-        val (w, h, _) = SynthRaster.parse(bytes.slice(12, 12 + i32(bytes, 8)))
-        MediaMeta(ref, "video", w, h, n, 0, 0, bytes.length.toLong)
+        val (w, h, _) = SynthRaster.parse(first)
+        MediaMeta(ref, kind, w, h, n, 0, 0, bytes.length.toLong)
       }
     case "audio" =>
       MediaMeta(ref, "audio", 0, 0, 0, i32(bytes, 4), i32(bytes, 8), bytes.length.toLong)
@@ -166,31 +173,21 @@ object Multimodal {
       MediaMeta(ref, "image", w, h, 1, 0, 0, bytes.length.toLong)
   }
 
-  /** Image decode: compressed formats (png/jpg/gif/bmp/tiff — the
-    * reference's allowlist, app.py:229) via the JDK's ImageIO, the
-    * synthetic raster via its parser. See [[graft.img.ImageCodec]].
+  /** Frame sampling: every `stride`-th frame of a video container; a
+    * malformed container throws IllegalArgumentException
+    * ([[walkRecords]]).
     */
-  def decodeImage(bytes: Array[Byte]): (Int, Int, Array[Int]) =
-    graft.img.ImageCodec.decode(bytes)
-
-  /** Frame sampling: every `stride`-th frame of a video container. */
   def sampleFrames(bytes: Array[Byte], stride: Int): Vector[(Int, Array[Byte])] = {
-    require(kindOf(bytes) == "video", "not a video container")
-    val n = i32(bytes, 4)
-    var off = 8
+    require(stride >= 1, "stride must be >= 1")
     val out = Vector.newBuilder[(Int, Array[Byte])]
-    var f = 0
-    while (f < n) {
-      val len = i32(bytes, off)
-      if (f % stride == 0) out += ((f, bytes.slice(off + 4, off + 4 + len)))
-      off += 4 + len
-      f += 1
+    walkRecords(bytes, "video") { (f, off, len) =>
+      if (f % stride == 0) out += ((f, bytes.slice(off, off + len)))
     }
     out.result()
   }
 
   def imageFeatures(ref: String, bytes: Array[Byte]): ImageFeatures = {
-    val (w, h, px) = decodeImage(bytes)
+    val (w, h, px) = graft.img.ImageCodec.decode(bytes)
     val hist = new Array[Long](16)
     var sum = 0.0
     var i = 0

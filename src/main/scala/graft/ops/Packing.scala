@@ -32,12 +32,12 @@ import org.apache.spark.sql.functions._
   */
 object Packing {
 
-  /** (idCol, nTokensCol) -> (idCol, n_tokens, shard). `nTokens` must
+  /** (doc_id, nTokens) -> (doc_id, n_tokens, shard). `nTokens` must
     * be a non-negative column (negative values would break the
     * max-running == partition-total step).
     */
   def packByBudget(docs: DataFrame, budgetTokens: Long, nTokens: Column,
-                   idCol: String = "doc_id", parts: Int = 0): DataFrame = {
+                   parts: Int = 0): DataFrame = {
     require(budgetTokens > 0, "budgetTokens must be positive")
     // the running token sum is Shuffling.rangePrefix — the shared
     // parallel-prefix core (range partition, per-partition window, P
@@ -45,10 +45,10 @@ object Packing {
     // pinning correctness argument) — with the token count as the
     // summed value instead of 1
     Shuffling.rangePrefix(
-        docs.select(col(idCol), nTokens.cast("long").as("n_tokens")),
-        Seq(col(idCol)), col("n_tokens"), parts)
+        docs.select(col("doc_id"), nTokens.cast("long").as("n_tokens")),
+        Seq(col("doc_id")), col("n_tokens"), parts)
       .withColumn("shard", graft.util.SqlCols.floorDiv(col("__before"), budgetTokens))
-      .select(col(idCol), col("n_tokens"), col("shard"))
+      .select(col("doc_id"), col("n_tokens"), col("shard"))
   }
 
   /** The q07-parity token count (`\W+` split, empties dropped) — the
@@ -71,18 +71,17 @@ object Packing {
     * two across engines); one doc-keyed pick + one bucket agg.
     */
   def paddingWaste(docs: DataFrame, nTokens: Column,
-                   caps: Seq[Long],
-                   idCol: String = "doc_id"): DataFrame = {
+                   caps: Seq[Long]): DataFrame = {
     require(caps.nonEmpty && caps == caps.sorted && caps.distinct == caps
       && caps.head > 0, "caps must be positive, ascending, distinct")
     val spark = docs.sparkSession
     import spark.implicits._
     val ladder = caps.toDF("cap")
     val maxCap = caps.max
-    val d = docs.select(col(idCol), nTokens.cast("long").as("__n"))
+    val d = docs.select(col("doc_id"), nTokens.cast("long").as("__n"))
     val bucketed = d
       .join(broadcast(ladder), col("__n") <= col("cap"), "left")
-      .groupBy(col(idCol), col("__n"))
+      .groupBy(col("doc_id"), col("__n"))
       .agg(coalesce(min(col("cap")), lit(maxCap)).as("bucket"))
       .withColumn("kept", least(col("__n"), col("bucket")))
       .withColumn("truncated", greatest(col("__n") - col("bucket"), lit(0L)))

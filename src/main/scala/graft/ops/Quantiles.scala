@@ -130,7 +130,7 @@ object Quantiles {
 
   /** Robust per-slice outlier audit: median + MAD (median absolute
     * deviation) of an integer metric, and the count of rows whose
-    * |x - median| exceeds `c` * MAD — the heavy-tail-safe sibling of
+    * |x - median| exceeds 3 * MAD — the heavy-tail-safe sibling of
     * a mean/stddev z-score (one whale document cannot move either
     * statistic). percentile_disc medians via [[exactIntQuantiles]],
     * so every statistic is an actual data value and the whole result
@@ -147,9 +147,7 @@ object Quantiles {
     * at the median) makes every x != median an outlier under the
     * strict > rule — intentional: a degenerate slice SHOULD light up.
     */
-  def madOutliers(df: DataFrame, valueCol: String, sliceCol: String,
-                  c: Int = 3): DataFrame = {
-    require(c >= 1, "c >= 1")
+  def madOutliers(df: DataFrame, valueCol: String, sliceCol: String): DataFrame = {
     val base = df.select(col(sliceCol), col(valueCol).cast("long").as("__v"))
       .where(col("__v").isNotNull)
     val med = exactIntQuantiles(base, "__v", Seq(500), keys = Seq(sliceCol))
@@ -164,7 +162,7 @@ object Quantiles {
     base.join(broadcast(stats), Seq(sliceCol))
       .groupBy(col(sliceCol), col("median"), col("mad"))
       .agg(count(lit(1)).as("n"),
-        sum(when(abs(col("__v") - col("median")) > lit(c.toLong) * col("mad"),
+        sum(when(abs(col("__v") - col("median")) > lit(3L) * col("mad"),
           1L).otherwise(0L)).as("n_outliers"))
       .withColumn("outlier_ppm",
         expr("CAST((n_outliers * 1000000) DIV n AS BIGINT)"))

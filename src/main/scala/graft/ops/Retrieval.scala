@@ -28,11 +28,10 @@ import org.apache.spark.sql.functions._
   */
 object Retrieval {
 
-  def bm25TopK(docs: DataFrame, queryTerms: Seq[String], k: Int,
-               k1: Double = 1.2, b: Double = 0.75,
-               idCol: String = "doc_id",
-               textCol: String = "text"): DataFrame = {
+  def bm25TopK(docs: DataFrame, queryTerms: Seq[String], k: Int): DataFrame = {
     require(queryTerms.nonEmpty && k > 0, "query terms and k required")
+    val k1 = 1.2  // term-frequency saturation
+    val b = 0.75  // length normalization
     val terms = queryTerms.map(_.toLowerCase).distinct
     def toks(c: Column) = graft.functions.GraftFunctions.tokenizeWords(c)
     // one corpus pass: doc length + per-probe-term tf (map-side filter)
@@ -40,14 +39,14 @@ object Retrieval {
     // codegen'd, the array-filter lambda is interpreted; the explode
     // fan-out is bounded by doc length either way and the filter
     // still runs map-side before any shuffle
-    val base = docs.select(col(idCol), toks(col(textCol)).as("__t"))
-      .select(col(idCol), size(col("__t")).as("len"),
+    val base = docs.select(col("doc_id"), toks(col("text")).as("__t"))
+      .select(col("doc_id"), size(col("__t")).as("len"),
         explode(col("__t")).as("term"))
       .filter(col("term").isInCollection(terms))
-    val tf = base.groupBy(col(idCol), col("term"))
+    val tf = base.groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"), first(col("len")).as("len"))
     // corpus scalars: N and avg len come from the docs table itself
-    val stats = docs.select(col(idCol), size(toks(col(textCol))).as("__l"))
+    val stats = docs.select(col("doc_id"), size(toks(col("text"))).as("__l"))
       .agg(greatest(count(lit(1)), lit(1L)).cast("double").as("__nn"),
         greatest(coalesce(avg(col("__l")), lit(0.0)), lit(1e-9)).as("__avg"))
     val df_ = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -59,10 +58,10 @@ object Retrieval {
       .withColumn("__s",
         col("__idf") * (col("tf") * (k1 + 1.0)) /
           (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("len") / col("__avg"))))
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(round(sum(col("__s")), 4).as("score"),
         count(lit(1)).as("n_terms"))
-      .orderBy(col("score").desc, col(idCol))
+      .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
   }
 
@@ -87,15 +86,13 @@ object Retrieval {
     *
     * Output one row: k, p, overlap_at_k, rbo (round 6).
     */
-  def rankBiasedOverlap(a: DataFrame, b: DataFrame, k: Int, p: Double,
-                        idCol: String = "doc_id",
-                        scoreCol: String = "score"): DataFrame = {
+  def rankBiasedOverlap(a: DataFrame, b: DataFrame, k: Int, p: Double): DataFrame = {
     require(k >= 1 && p > 0.0 && p < 1.0, "need k >= 1 and p in (0, 1)")
     import org.apache.spark.sql.expressions.Window
     def topRanks(df: DataFrame) = {
       val lim = df
-        .select(col(idCol).as("id"),
-          round(col(scoreCol).cast("double"), 4).as("s"))
+        .select(col("doc_id").as("id"),
+          round(col("score").cast("double"), 4).as("s"))
         .orderBy(col("s").desc, col("id"))
         .limit(k)
       // the window runs over the ALREADY-LIMITED k rows — bounded

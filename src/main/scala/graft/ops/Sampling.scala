@@ -33,24 +33,24 @@ object Sampling {
     * rn = 1..k in deterministic-rank order.
     */
   def stratifiedSample(docs: DataFrame, stratumCol: String, k: Int,
-                       idCol: String = "doc_id", salts: Int = 16): DataFrame = {
+                       salts: Int = 16): DataFrame = {
     require(k > 0 && salts > 0, "k and salts must be positive")
-    val rank = detRank(col(idCol))
-    val base = docs.select(col(stratumCol), col(idCol), rank.as("__r"))
+    val rank = detRank(col("doc_id"))
+    val base = docs.select(col(stratumCol), col("doc_id"), rank.as("__r"))
     // phase 1: bounded sub-group top-k (31-bit hash domain — ANSI-safe)
     val salted = base.withColumn("__salt",
-      pmod(xxhash64(col(idCol)), lit(salts)).cast("int"))
+      pmod(xxhash64(col("doc_id")), lit(salts)).cast("int"))
     val w1 = Window.partitionBy(col(stratumCol), col("__salt"))
-      .orderBy(col("__r"), col(idCol))
+      .orderBy(col("__r"), col("doc_id"))
     val survivors = salted
       .withColumn("__rn1", row_number().over(w1))
       .filter(col("__rn1") <= k)
     // phase 2: exact rank over <= salts*k rows per stratum
-    val w2 = Window.partitionBy(col(stratumCol)).orderBy(col("__r"), col(idCol))
+    val w2 = Window.partitionBy(col(stratumCol)).orderBy(col("__r"), col("doc_id"))
     survivors
       .withColumn("rn", row_number().over(w2))
       .filter(col("rn") <= k)
-      .select(col(stratumCol), col(idCol), col("rn"))
+      .select(col(stratumCol), col("doc_id"), col("rn"))
   }
 
   /** Per-stratum PROPORTIONAL sampling — the mixture-weighting step
@@ -73,18 +73,18 @@ object Sampling {
     * one reducer if hash-joined, hence the explicit broadcast).
     */
   def proportionalSample(docs: DataFrame, stratumCol: String, rateCol: Column,
-                         idCol: String = "doc_id", parts: Int = 0): DataFrame = {
-    val base = docs.select(col(stratumCol), col(idCol),
-      detRank(col(idCol)).as("__r"), rateCol.cast("double").as("__rate"))
+                         parts: Int = 0): DataFrame = {
+    val base = docs.select(col(stratumCol), col("doc_id"),
+      detRank(col("doc_id")).as("__r"), rateCol.cast("double").as("__rate"))
     val ranked = graft.ops.Shuffling.globalRank(
-      base, Seq(col(stratumCol), col("__r"), col(idCol)), parts)
+      base, Seq(col(stratumCol), col("__r"), col("doc_id")), parts)
     val quotas = ranked.groupBy(col(stratumCol)).agg(
       min(col("pos")).as("__p0"),
       ceil(max(col("__rate")) * count(lit(1))).cast("long").as("__q"))
     ranked.join(broadcast(quotas), Seq(stratumCol))
       .withColumn("rn", (col("pos") - col("__p0") + 1).cast("int"))
       .filter(col("rn") <= col("__q"))
-      .select(col(stratumCol), col(idCol), col("rn"))
+      .select(col(stratumCol), col("doc_id"), col("rn"))
   }
 
   /** Exact rank-based banding (deciles and friends) — the quality-
@@ -129,20 +129,19 @@ object Sampling {
     * survivors only. Rows with w <= 0 are excluded by definition
     * (A-ES is defined over positive weights).
     */
-  def prioritySample(df: DataFrame, weightCol: Column, k: Int,
-                     idCol: String = "doc_id"): DataFrame = {
+  def prioritySample(df: DataFrame, weightCol: Column, k: Int): DataFrame = {
     require(k > 0, "k must be positive")
-    val h = graft.util.SqlCols.md5Head32(col(idCol).cast("string"))
+    val h = graft.util.SqlCols.md5Head32(col("doc_id").cast("string"))
     val u = (h + lit(1L)).cast("double") / lit(4294967296.0)
     // filter BEFORE the division — ANSI mode raises on w = 0; null
     // ids draw no uniform (and engines disagree on DESC-null order),
     // so they are excluded with the nonpositive weights
-    df.select(col(idCol), weightCol.cast("double").as("weight"))
-      .filter(col("weight") > 0.0 && col(idCol).isNotNull)
+    df.select(col("doc_id"), weightCol.cast("double").as("weight"))
+      .filter(col("weight") > 0.0 && col("doc_id").isNotNull)
       .withColumn("priority", round(log(u) / col("weight"), 9))
-      .orderBy(col("priority").desc, col(idCol))
+      .orderBy(col("priority").desc, col("doc_id"))
       .limit(k)
       .withColumn("rn", row_number().over(
-        Window.orderBy(col("priority").desc, col(idCol))))
+        Window.orderBy(col("priority").desc, col("doc_id"))))
   }
 }

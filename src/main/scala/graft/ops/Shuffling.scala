@@ -104,15 +104,15 @@ object Shuffling {
       .withColumn("pos", col("__before"))
       .drop("__before", "__v")
 
-  /** (idCol) -> (idCol, pos, shard); `pos` is the global rank in
+  /** (doc_id) -> (doc_id, pos, shard); `pos` is the global rank in
     * deterministic-shuffle order, `shard` = pos % shards.
     */
   def deterministicShuffle(docs: DataFrame, shards: Int,
-                           idCol: String = "doc_id", parts: Int = 0): DataFrame = {
+                           parts: Int = 0): DataFrame = {
     require(shards > 0, "shards must be positive")
-    val base = docs.select(col(idCol), Sampling.detRank(col(idCol)).as("__r"))
-    globalRank(base, Seq(col("__r"), col(idCol)), parts)
+    val base = docs.select(col("doc_id"), Sampling.detRank(col("doc_id")).as("__r"))
+    globalRank(base, Seq(col("__r"), col("doc_id")), parts)
       .withColumn("shard", pmod(col("pos"), lit(shards.toLong)).cast("int"))
-      .select(col(idCol), col("pos"), col("shard"))
+      .select(col("doc_id"), col("pos"), col("shard"))
   }
 }

@@ -28,17 +28,30 @@ import graft.util.Pin
   */
 object Similarity {
 
+  /** Training-sample cap of every codebook trained here ([[trainIvf]],
+    * [[trainPq]], [[semanticDedup]] and its audit companion).
+    */
+  private val SampleCap = 100000
+  /** Lloyd rounds of [[semanticDedup]], shared with its audit
+    * companion [[semanticOversizedClusters]] so both see one codebook.
+    */
+  private val SemanticIters = 2
+  /** Banding of [[embeddingNearDups]], shared with its audit companion
+    * [[embeddingOversizedBuckets]].
+    */
+  private val RpBands = 4
+  private val RpPlanesPerBand = 8
+
   /** Exact top-k most-similar vectors to one query vector (brute
     * force). The query is a plan literal -> broadcast by construction;
     * the scan is embarrassingly parallel, the only shuffle is the
     * final top-k (a single reduction).
     */
-  def bruteForceTopK(embeddings: DataFrame, query: Seq[Float], k: Int = 10,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+  def bruteForceTopK(embeddings: DataFrame, query: Seq[Float], k: Int = 10): DataFrame = {
     val q = array(query.map(v => lit(v)): _*)
     embeddings
-      .select(col(idCol), round(GraftFunctions.cosineSim(col(vecCol), q), 4).as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
+      .select(col("vec_id"), round(GraftFunctions.cosineSim(col("embedding"), q), 4).as("sim"))
+      .orderBy(col("sim").desc, col("vec_id"))
       .limit(k)
   }
 
@@ -78,10 +91,9 @@ object Similarity {
     * k x dim cell means, never data rows.
     */
   def trainIvf(embeddings: DataFrame, dim: Int, nCentroids: Int, iters: Int = 2,
-               idCol: String = "vec_id", vecCol: String = "embedding",
-               sampleCap: Int = 100000): Array[Array[Double]] = {
+               sampleCap: Int = SampleCap): Array[Array[Double]] = {
     require(sampleCap >= nCentroids, "sampleCap must cover the centroid init")
-    val sample = Pin.once(detSample(embeddings, idCol, vecCol, sampleCap))
+    val sample = Pin.once(detSample(embeddings, sampleCap))
     try lloyd(sample, col("v"), nCentroids, iters)
     finally Pin.release(sample)
   }
@@ -92,13 +104,12 @@ object Similarity {
     * a single task; [[lloyd]]'s init re-sorts so the hash order
     * survives the repartition.
     */
-  private def detSample(embeddings: DataFrame, idCol: String, vecCol: String,
-                        sampleCap: Int): DataFrame =
+  private def detSample(embeddings: DataFrame, sampleCap: Int): DataFrame =
     embeddings
       // hash the STRING form of the id: a cast to long nulls every
       // non-numeric id (content hashes, URLs), collapsing the
       // deterministic hash order into an arbitrary all-ties pick
-      .select(col(idCol).cast("string").as("id"), col(vecCol).as("v"))
+      .select(col("vec_id").cast("string").as("id"), col("embedding").as("v"))
       .orderBy(xxhash64(col("id")), col("id"))
       .limit(sampleCap)
       .repartition(embeddings.sparkSession.sparkContext.defaultParallelism)
@@ -149,17 +160,16 @@ object Similarity {
     * [[GraftFunctions.pqEncode]] fused loop.
     */
   def trainPq(embeddings: DataFrame, dim: Int, m: Int = 8, codes: Int = 16,
-              iters: Int = 2, idCol: String = "vec_id", vecCol: String = "embedding",
-              sampleCap: Int = 100000,
+              iters: Int = 2,
               coarse: Array[Array[Double]] = Array.empty): Array[Array[Array[Double]]] = {
     require(m >= 1 && dim % m == 0, s"dim $dim must split into m=$m equal subspaces")
     require(codes >= 1 && codes <= 256, "PQ codes are one byte: 1..256 per subspace")
-    require(sampleCap >= codes, "sampleCap must cover the centroid init")
+    require(SampleCap >= codes, "sampleCap must cover the centroid init")
     val residual = coarse.nonEmpty
     require(!residual || coarse.head.length == dim,
       s"coarse centroids must have dim $dim")
     val subDim = dim / m
-    val sample0 = detSample(embeddings, idCol, vecCol, sampleCap)
+    val sample0 = detSample(embeddings, SampleCap)
     // residual mode quantizes v - coarse[cell] (cell assigned once per
     // sample row by the native kernel); the assignment column rides
     // along so each Lloyd round stays ONE aggregation
@@ -252,17 +262,16 @@ object Similarity {
   def ivfPqTopK(embeddings: DataFrame, queries: DataFrame, dim: Int,
                 coarse: Array[Array[Double]], pq: Array[Array[Array[Double]]],
                 k: Int = 10, nProbe: Int = 2, rerank: Int = 50,
-                idCol: String = "vec_id", vecCol: String = "embedding",
                 residual: Boolean = false): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val index = embeddings
-      .select(col(idCol).as("id"), col(vecCol).as("v"))
+      .select(col("vec_id").as("id"), col("embedding").as("v"))
       .withColumn("cl", nearestCentroid(col("v"), coarse))
       .select(col("id"), col("cl"),
         (if (residual) GraftFunctions.pqEncodeRes(col("v"), col("cl"), coarse, pq)
         else GraftFunctions.pqEncode(col("v"), pq)).as("code"))
     val probes = math.max(1, math.min(nProbe, coarse.length))
-    val qs = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
+    val qs = queries.select(col("vec_id").as("qid"), col("embedding").as("qv"))
       .withColumn("cl", explode(GraftFunctions.ivfProbes(col("qv"), coarse, probes)))
     val keep = math.max(rerank, k)
     val wAdc = Window.partitionBy(col("qid")).orderBy(col("adc").asc, col("id"))
@@ -284,8 +293,8 @@ object Similarity {
       .select(col("qid"), col("id"))
     val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("id"))
     survivors
-      .join(embeddings.select(col(idCol).as("id"), col(vecCol).as("v")), Seq("id"))
-      .join(broadcast(queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))),
+      .join(embeddings.select(col("vec_id").as("id"), col("embedding").as("v")), Seq("id"))
+      .join(broadcast(queries.select(col("vec_id").as("qid"), col("embedding").as("qv"))),
         Seq("qid"))
       .withColumn("sim", round(GraftFunctions.cosineSim(col("qv"), col("v")), 4))
       .withColumn("rn", row_number().over(w))
@@ -302,12 +311,11 @@ object Similarity {
     * loop that computes the distances.
     */
   def ivfTopK(embeddings: DataFrame, queries: DataFrame, dim: Int,
-              codebook: Array[Array[Double]], k: Int = 10, nProbe: Int = 2,
-              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val emb = embeddings.select(col(idCol).as("id"), col(vecCol).as("v"))
+              codebook: Array[Array[Double]], k: Int = 10, nProbe: Int = 2): DataFrame = {
+    val emb = embeddings.select(col("vec_id").as("id"), col("embedding").as("v"))
       .withColumn("cl", nearestCentroid(col("v"), codebook))
     val probes = math.max(1, math.min(nProbe, codebook.length))
-    val qs = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
+    val qs = queries.select(col("vec_id").as("qid"), col("embedding").as("qv"))
       .withColumn("cl", explode(GraftFunctions.ivfProbes(col("qv"), codebook, probes)))
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("id"))
@@ -355,10 +363,9 @@ object Similarity {
     * the same index plan, to enumerate what was dropped).
     */
   def embeddingNearDups(embeddings: DataFrame, dim: Int, threshold: Double = 0.8,
-                        bands: Int = 4, planesPerBand: Int = 8,
-                        idCol: String = "vec_id", vecCol: String = "embedding",
+                        bands: Int = RpBands, planesPerBand: Int = RpPlanesPerBand,
                         maxBucket: Long = 1L << 20): DataFrame = {
-    val banded = bandBuckets(embeddings, dim, bands, planesPerBand, idCol, vecCol)
+    val banded = bandBuckets(embeddings, dim, bands, planesPerBand)
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("band"), col("bucket"))
     val capped = banded
       .withColumn("__bn", count(lit(1)).over(w))
@@ -381,10 +388,8 @@ object Similarity {
     * excludes at the same maxBucket.
     */
   def embeddingOversizedBuckets(embeddings: DataFrame, dim: Int,
-                                bands: Int = 4, planesPerBand: Int = 8,
-                                idCol: String = "vec_id", vecCol: String = "embedding",
                                 maxBucket: Long = 1L << 20): DataFrame =
-    bandBuckets(embeddings, dim, bands, planesPerBand, idCol, vecCol)
+    bandBuckets(embeddings, dim, RpBands, RpPlanesPerBand)
       .groupBy(col("band"), col("bucket"))
       .agg(count(lit(1)).as("n_members"))
       .filter(col("n_members") > maxBucket)
@@ -394,10 +399,10 @@ object Similarity {
     * the sign bits.
     */
   private def bandBuckets(embeddings: DataFrame, dim: Int, bands: Int,
-                          planesPerBand: Int, idCol: String, vecCol: String): DataFrame = {
+                          planesPerBand: Int): DataFrame = {
     val m = planeMatrix(dim, bands * planesPerBand)
     embeddings
-      .select(col(idCol).as("id"), col(vecCol).as("v"))
+      .select(col("vec_id").as("id"), col("embedding").as("v"))
       .withColumn("__dots", GraftFunctions.planeDots(col("v"), m))
       .select(col("id"), col("v"), posexplode(array((0 until bands).map { bnd =>
         (0 until planesPerBand).map { p =>
@@ -429,12 +434,11 @@ object Similarity {
     * anywhere in the operator.
     */
   def annTopK(embeddings: DataFrame, queries: DataFrame, dim: Int, k: Int = 10,
-              planes: Int = 12, probes: Int = 0,
-              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+              planes: Int = 12, probes: Int = 0): DataFrame = {
     val m = planeMatrix(dim, planes)
-    val emb = embeddings.select(col(idCol).as("id"), col(vecCol).as("v"))
+    val emb = embeddings.select(col("vec_id").as("id"), col("embedding").as("v"))
       .withColumn("bucket", GraftFunctions.rhpBucket(col("v"), m))
-    val qs = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
+    val qs = queries.select(col("vec_id").as("qid"), col("embedding").as("qv"))
       .withColumn("bucket",
         explode(GraftFunctions.rhpProbes(col("qv"), m,
           math.min(math.max(probes, 0), planes))))
@@ -477,13 +481,11 @@ object Similarity {
     * (broadcast by construction).
     */
   def semanticDedup(embeddings: DataFrame, dim: Int, nClusters: Int = 16,
-                    threshold: Double = 0.95, iters: Int = 2,
-                    idCol: String = "vec_id", vecCol: String = "embedding",
-                    maxCluster: Long = 1L << 20,
-                    sampleCap: Int = 100000): DataFrame = {
-    val codebook = trainIvf(embeddings, dim, nClusters, iters, idCol, vecCol, sampleCap)
+                    threshold: Double = 0.95, maxCluster: Long = 1L << 20,
+                    sampleCap: Int = SampleCap): DataFrame = {
+    val codebook = trainIvf(embeddings, dim, nClusters, SemanticIters, sampleCap)
     val assigned = embeddings
-      .select(col(idCol).as("id"), col(vecCol).as("v"))
+      .select(col("vec_id").as("id"), col("embedding").as("v"))
       .withColumn("cluster", nearestCentroid(col("v"), codebook))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("cluster"))
     val capped = assigned
@@ -501,29 +503,19 @@ object Similarity {
 
   /** Audit companion of [[semanticDedup]]: clusters larger than
     * maxCluster under the SAME deterministic codebook — exactly the
-    * memberships the pairing excludes. Pass the already-trained
-    * `codebook` when running beside a dedup pass (the ivfTopK
-    * pattern) — the no-codebook overload retrains, which only
-    * determinism makes equivalent and which doubles the training jobs.
+    * memberships the pairing excludes. It retrains the codebook, which
+    * only determinism makes equivalent to the dedup pass's.
     */
   def semanticOversizedClusters(embeddings: DataFrame, dim: Int,
-                                nClusters: Int = 16, iters: Int = 2,
-                                idCol: String = "vec_id", vecCol: String = "embedding",
-                                maxCluster: Long = 1L << 20,
-                                sampleCap: Int = 100000): DataFrame =
-    semanticOversizedClusters(embeddings,
-      trainIvf(embeddings, dim, nClusters, iters, idCol, vecCol, sampleCap),
-      idCol, vecCol, maxCluster)
-
-  def semanticOversizedClusters(embeddings: DataFrame,
-                                codebook: Array[Array[Double]],
-                                idCol: String, vecCol: String,
-                                maxCluster: Long): DataFrame =
+                                nClusters: Int = 16, maxCluster: Long = 1L << 20,
+                                sampleCap: Int = SampleCap): DataFrame = {
+    val codebook = trainIvf(embeddings, dim, nClusters, SemanticIters, sampleCap)
     embeddings
-      .select(nearestCentroid(col(vecCol), codebook).as("cluster"))
+      .select(nearestCentroid(col("embedding"), codebook).as("cluster"))
       .groupBy(col("cluster"))
       .agg(count(lit(1)).as("n_members"))
       .filter(col("n_members") > maxCluster)
+  }
 
   /** Per-group embedding dispersion audit — is a slice's embedding
     * cloud tight (template farm / near-dup mass) or spread (healthy
@@ -539,11 +531,9 @@ object Similarity {
     * no arrays cross a shuffle, no driver data. Zero or zero-norm
     * vectors score cosine 0 by definition (guarded division).
     */
-  def groupDispersion(embeddings: DataFrame, groupCol: String,
-                      idCol: String = "vec_id",
-                      vecCol: String = "embedding"): DataFrame = {
-    val ex = embeddings.select(col(groupCol).as("g"), col(idCol).as("id"),
-        posexplode(col(vecCol)))
+  def groupDispersion(embeddings: DataFrame, groupCol: String): DataFrame = {
+    val ex = embeddings.select(col(groupCol).as("g"), col("vec_id").as("id"),
+        posexplode(col("embedding")))
       .select(col("g"), col("id"), col("pos").as("d"),
         col("col").cast("double").as("v"))
     val centroid = ex.groupBy(col("g"), col("d"))

@@ -301,9 +301,8 @@ object Sketches {
     * Aggregator; HLL is 6x smaller state at equal error (1.04/sqrt(m))
     * and is the industry interchange format. Both are one-scan.
     */
-  def hllDistinct(df: DataFrame, valueCol: String, groupCol: String,
-                  p: Int = 10): DataFrame = {
-    require(p >= 4 && p <= 16, "p must be in [4, 16]")
+  def hllDistinct(df: DataFrame, valueCol: String, groupCol: String): DataFrame = {
+    val p = 10 // register-index bits
     val m = 1L << p
     val wBits = 56 - p
     val h = conv(substring(md5(col(valueCol).cast("string")), 1, 14), 16, 10)

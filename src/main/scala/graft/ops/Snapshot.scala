@@ -28,14 +28,13 @@ import org.apache.spark.sql.functions._
   */
 object Snapshot {
 
-  def diff(current: DataFrame, previous: DataFrame,
-           id: String = "doc_id", text: String = "text"): DataFrame = {
-    val c = current.select(col(id), md5(col(text).cast("binary")).as("__hc"),
+  def diff(current: DataFrame, previous: DataFrame): DataFrame = {
+    val c = current.select(col("doc_id"), md5(col("text").cast("binary")).as("__hc"),
       lit(1).as("__inc"))
-    val p = previous.select(col(id), md5(col(text).cast("binary")).as("__hp"),
+    val p = previous.select(col("doc_id"), md5(col("text").cast("binary")).as("__hp"),
       lit(1).as("__inp"))
-    c.join(p, Seq(id), "full_outer")
-      .select(col(id),
+    c.join(p, Seq("doc_id"), "full_outer")
+      .select(col("doc_id"),
         when(col("__inp").isNull, "added")
           .when(col("__inc").isNull, "removed")
           .when(!(col("__hc") <=> col("__hp")), "changed")
@@ -44,7 +43,7 @@ object Snapshot {
 
   /** Latest-wins upsert — the APPLY side of [[diff]]: merge a delta
     * batch into a base snapshot keeping, per id, the row with the
-    * highest `version`; on a version tie the DELTA row wins (the
+    * highest `version` column; on a version tie the DELTA row wins (the
     * MERGE INTO semantics every incremental-ingest pipeline needs,
     * engine-side — at deployment the same rule rides Iceberg's
     * copy-on-write MERGE).
@@ -59,18 +58,16 @@ object Snapshot {
     * contract); cross-input duplicates are exactly what the rule
     * resolves. Both inputs must share the schema.
     */
-  def upsertLatestWins(base: DataFrame, delta: DataFrame,
-                       id: String = "doc_id",
-                       version: String = "version"): DataFrame = {
+  def upsertLatestWins(base: DataFrame, delta: DataFrame): DataFrame = {
     require(base.columns.sorted.sameElements(delta.columns.sorted),
       s"base/delta schemas differ: ${base.columns.mkString(",")} vs ${delta.columns.mkString(",")}")
-    val payload = base.columns.filter(_ != id).toSeq
+    val payload = base.columns.filter(_ != "doc_id").toSeq
     val u = base.withColumn("__src", lit(0))
       .unionByName(delta.withColumn("__src", lit(1)))
-    u.groupBy(col(id))
+    u.groupBy(col("doc_id"))
       .agg(max_by(
         struct(payload.map(col): _*),
-        struct(col(version), col("__src"))).as("__w"))
-      .select(col(id) +: payload.map(c => col(s"__w.$c").as(c)): _*)
+        struct(col("version"), col("__src"))).as("__w"))
+      .select(col("doc_id") +: payload.map(c => col(s"__w.$c").as(c)): _*)
   }
 }

@@ -37,8 +37,8 @@ object TextAnalysis {
     * mean word length, punctuation ratio, stopword ratio, digit ratio,
     * and a composite [0,1] score from clamped heuristics.
     */
-  def qualityFeatures(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
+  def qualityFeatures(docs: DataFrame): DataFrame = {
+    val t = col("text")
     val tk = toks(t)
     val stopHits = graft.functions.GraftFunctions.countInSet(
       tk, graft.text.Stopwords.set.toSeq)
@@ -65,20 +65,18 @@ object TextAnalysis {
           (lit(1.0) - least(col("punct_ratio") * 4, lit(0.5))), 4))
   }
 
-  /** Smoothed TF-IDF top-k terms per document (the term-weighting
+  /** Smoothed TF-IDF top-3 terms per document (the term-weighting
     * stage of a curation pipeline: distinctive-vocabulary features,
     * keyword extraction). tfidf = tf * (ln((N+1)/(df+1)) + 1) —
     * the sklearn-style smooth form, so unseen-df edge cases are
     * total. Two hash aggregations (tf, then df over the already-
     * distinct (doc, word) pairs — never a second corpus pass) plus
-    * one broadcast of the single-row corpus count; the per-doc top-k
+    * one broadcast of the single-row corpus count; the per-doc top-3
     * is a rank window. Ties break lexicographically for determinism.
     */
-  def tfidfTop(docs: DataFrame, k: Int = 3,
-               idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def tfidfTop(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val tokens = docs.select(col(idCol).as("doc_id"),
-      explode(toks(col(textCol))).as("word"))
+    val tokens = docs.select(col("doc_id"), explode(toks(col("text"))).as("word"))
     val tf = tokens.groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n_docs"))
@@ -88,7 +86,7 @@ object TextAnalysis {
       .withColumn("tfidf", round(col("tf") *
         (log((col("n_docs") + 1).cast("double") / (col("df") + 1)) + 1), 4))
       .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+      .filter(col("rn") <= 3)
       .select(col("doc_id"), col("word"), col("tf"), col("df"), col("tfidf"), col("rn"))
   }
 
@@ -110,10 +108,9 @@ object TextAnalysis {
     * and the only shuffles are keyed on doc_id(+gram), so the operator
     * scales as independent per-document groups.
     */
-  def gopherQuality(docs: DataFrame, idCol: String = "doc_id",
-                    textCol: String = "text"): DataFrame = {
+  def gopherQuality(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val base = docs.select(col(idCol).as("doc_id"), col(textCol).as("__t"))
+    val base = docs.select(col("doc_id"), col("text").as("__t"))
       .withColumn("n_symbols",
         (regexp_count(col("__t"), lit("#")) +
           regexp_count(col("__t"), lit("\\.\\.\\."))).cast("long"))
@@ -193,14 +190,13 @@ object TextAnalysis {
     * and phone numbers with typed placeholders. One codegen'd regexp
     * projection — map-side only, no shuffle.
     */
-  def piiScrub(docs: DataFrame, idCol: String = "doc_id",
-               textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
+  def piiScrub(docs: DataFrame): DataFrame = {
+    val t = col("text")
     // counts reconcile with placeholders: the replacement chain rewrites
     // URLs FIRST, so an email/phone embedded in a URL never gets its own
     // placeholder — count them on the URL-stripped text to match
     val noUrl = regexp_replace(t, urlRe, " ")
-    docs.select(col(idCol).as("doc_id"),
+    docs.select(col("doc_id"),
       regexp_count(t, lit(urlRe)).cast("long").as("n_urls"),
       regexp_count(noUrl, lit(emailRe)).cast("long").as("n_emails"),
       regexp_count(noUrl, lit(phoneRe)).cast("long").as("n_phones"),
@@ -245,11 +241,12 @@ object TextAnalysis {
     * engine, no HOF in the plan), one (doc, char) hash aggregation,
     * then per-doc H = ln n − Σ c·ln c / n in a second doc-keyed agg —
     * both shuffles doc-keyed, partial aggregation applies, per-doc
-    * state is the doc's own alphabet. round(6) absorbs libm ulps (the
+    * state is the doc's own alphabet; `low_entropy` flags entropy below
+    * 2 nats. round(6) absorbs libm ulps (the
     * engine-wide double contract). Empty/NULL docs report entropy 0
     * over 0 chars (flagged low — nothing there).
     */
-  def charEntropy(docs: DataFrame, threshold: Double = 2.0): DataFrame = {
+  def charEntropy(docs: DataFrame): DataFrame = {
     // sequence(1, 0) would DESCEND in Spark — guard empty/null text to
     // a null array (posexplode of null emits no rows, matching DuckDB's
     // empty generate_series)
@@ -269,7 +266,7 @@ object TextAnalysis {
       .select(col("doc_id"),
         coalesce(col("n"), lit(0L)).as("n"),
         coalesce(col("entropy"), lit(0.0)).as("entropy"))
-      .withColumn("low_entropy", col("entropy") < threshold)
+      .withColumn("low_entropy", col("entropy") < 2.0)
   }
 
   /** Corpus diversity audit — distinct-n (Li et al. 2016: the ratio
@@ -289,9 +286,7 @@ object TextAnalysis {
     * real n-grams only — unlike [[Dedup.shingles]], whose whole-doc
     * degrade exists for dedup recall).
     */
-  def distinctNgrams(docs: DataFrame, ns: Seq[Int] = Seq(1, 2, 3),
-                     textCol: String = "text",
-                     groupCol: String = "source"): DataFrame = {
+  def distinctNgrams(docs: DataFrame, ns: Seq[Int] = Seq(1, 2, 3)): DataFrame = {
     require(ns.nonEmpty && ns.forall(_ >= 1), "ns must be >= 1")
     // one scan for all n: an array of native per-n gram arrays (the
     // codegen NgramKernel — short docs yield empty arrays inside
@@ -302,19 +297,19 @@ object TextAnalysis {
     // per gram per row).
     val nsSorted = ns.distinct.sorted
     docs
-      .withColumn("__toks", graft.functions.GraftFunctions.tokenizeWords(col(textCol)))
-      .select(col(groupCol),
+      .withColumn("__toks", graft.functions.GraftFunctions.tokenizeWords(col("text")))
+      .select(col("source"),
         posexplode(array(nsSorted.map(n =>
           graft.functions.GraftFunctions.ngramJoin(col("__toks"), n)): _*)))
-      .toDF(groupCol, "__pos", "__grams")
-      .select(col(groupCol),
+      .toDF("source", "__pos", "__grams")
+      .select(col("source"),
         element_at(typedLit(nsSorted), col("__pos") + 1).as("n"),
         explode(col("__grams")).as("gram"))
-      .groupBy(col(groupCol), col("n"))
+      .groupBy(col("source"), col("n"))
       .agg(count(lit(1)).as("n_total"), countDistinct(col("gram")).as("n_distinct"))
       .withColumn("ratio", round(col("n_distinct").cast("double") /
         greatest(col("n_total"), lit(1L)).cast("double"), 6))
-      .select(col(groupCol), col("n"), col("n_total"), col("n_distinct"), col("ratio"))
+      .select(col("source"), col("n"), col("n_total"), col("n_distinct"), col("ratio"))
   }
 
   /** Per-script character counts: number of characters of `text` in
@@ -339,8 +334,8 @@ object TextAnalysis {
     * map-side only — zero shuffle; the downstream per-corpus rollup is
     * whatever the caller groups by.
     */
-  def scriptProfile(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
+  def scriptProfile(docs: DataFrame): DataFrame = {
+    val t = col("text")
     val withCounts = docs
       .withColumn("n_latin", scriptChars(t, "\\p{IsLatin}"))
       .withColumn("n_cyrillic", scriptChars(t, "\\p{IsCyrillic}"))

@@ -68,7 +68,7 @@ object Web {
     * line that repeats ACROSS a large fraction of one domain's pages
     * (nav bars, cookie banners, copyright footers) is boilerplate
     * even though each page contains it once. Emits the detector
-    * table: every (domain, line) present in ≥ `minDf` documents with
+    * table: every (domain, line) present in ≥ 2 documents with
     * its document frequency and frequency fraction, flagged when
     * df/domain_docs ≥ `minFrac` — the table a strip pass would
     * broadcast-anti-join against the corpus.
@@ -76,22 +76,20 @@ object Web {
     * Scale shape: distinct(domain, doc, line) then ONE
     * (domain, line) count agg — map-side combine absorbs the repeat
     * mass; domain doc totals re-aggregate the distinct pairs; the
-    * minDf filter keeps the output detector-sized. Integer-operand
+    * df ≥ 2 filter keeps the output detector-sized. Integer-operand
     * fraction, round(6).
     */
-  def domainBoilerplate(lines: DataFrame, domainCol: String = "domain",
-                        idCol: String = "doc_id", lineCol: String = "line",
-                        minDf: Long = 2L, minFrac: Double = 0.3): DataFrame = {
+  def domainBoilerplate(lines: DataFrame, domainCol: String,
+                        minFrac: Double = 0.3): DataFrame = {
     val distinctLines = lines
-      .select(col(domainCol).as("domain"), col(idCol).as("id"),
-        col(lineCol).as("line"))
+      .select(col(domainCol).as("domain"), col("doc_id").as("id"), col("line"))
       .distinct()
       .transform(Pin.once)
     val docTot = distinctLines.select(col("domain"), col("id")).distinct()
       .groupBy(col("domain")).agg(count(lit(1)).as("n_docs"))
     distinctLines.groupBy(col("domain"), col("line"))
       .agg(count(lit(1)).as("df"))
-      .filter(col("df") >= minDf)
+      .filter(col("df") >= 2L)
       .join(broadcast(docTot), Seq("domain"))
       .select(col("domain"), col("line"), col("df"), col("n_docs"),
         round(col("df").cast("double") / col("n_docs").cast("double"), 6)

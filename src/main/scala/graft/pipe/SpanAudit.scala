@@ -39,10 +39,10 @@ object SpanAudit {
       col("n_bad_kind") === 0L
 
   /** Relational form: one row per span with columns
-    * (id, kind, media_ref, offset).
+    * (doc_id, kind, media_ref, offset).
     */
-  def audit(spans: DataFrame, id: String = "doc_id"): DataFrame =
-    spans.groupBy(col(id)).agg(
+  def audit(spans: DataFrame): DataFrame =
+    spans.groupBy(col("doc_id")).agg(
         count(lit(1)).as("n_spans"),
         (count(lit(1)) - countDistinct(col("offset"))).as("n_dup_offsets"),
         (max(col("offset")).cast("long") + 1L - countDistinct(col("offset")))
@@ -56,15 +56,14 @@ object SpanAudit {
       .withColumn("is_clean", cleanExpr)
 
   /** Nested form: one row per document with
-    * `spansCol: array<struct<kind,text,media_ref,offset>>`.
+    * `spans: array<struct<kind,text,media_ref,offset>>`.
     */
-  def auditNested(docs: DataFrame, id: String = "doc_id",
-                  spansCol: String = "spans"): DataFrame = {
-    val sp = col(spansCol)
+  def auditNested(docs: DataFrame): DataFrame = {
+    val sp = col("spans")
     val offs = transform(sp, s => s("offset").cast("long"))
     val distinctOffs = array_distinct(offs)
     docs.select(
-        col(id),
+        col("doc_id"),
         size(sp).cast("long").as("n_spans"),
         (size(sp) - size(distinctOffs)).cast("long").as("n_dup_offsets"),
         when(size(sp) === 0, 0L)

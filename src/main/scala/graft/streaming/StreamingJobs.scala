@@ -41,17 +41,16 @@ object StreamingJobs {
   /** Streaming exact dedup: keep the first occurrence per normalized
     * content fingerprint with BOUNDED state —
     * `dropDuplicatesWithinWatermark` expires fingerprints once the
-    * event-time watermark passes them (the streaming form of
+    * one-hour event-time watermark passes them (the streaming form of
     * [[graft.ops.Dedup.exact]], and the principled analog of the
     * reference's TTL'd OCR cache, `app2.py:120-161`: entries are
     * remembered exactly as long as a duplicate could still arrive).
     */
-  def dedupStreaming(docs: DataFrame, textCol: String = "text",
-                     horizon: String = "1 hour"): DataFrame =
+  def dedupStreaming(docs: DataFrame): DataFrame =
     docs
       .withColumn("ts", col("ts").cast("timestamp"))
-      .withColumn("h", graft.ops.Dedup.fingerprint(col(textCol)))
-      .withWatermark("ts", horizon)
+      .withColumn("h", graft.ops.Dedup.fingerprint(col("text")))
+      .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("h")
 
   /** Streaming form of the FLAGSHIP extraction (span level): documents

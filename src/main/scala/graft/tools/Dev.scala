@@ -239,7 +239,11 @@ object Dev {
     * optimizer-pruned count. Median of `repeats` runs, warm session,
     * so per-query claims are isolated from sweep residue and host noise;
     * every run starts with the earlier runs' pins released, as the
-    * frozen Bench does before each query.
+    * frozen Bench does before each query. Each query first runs once
+    * untimed (printed as its `warm` line, left out of the median): a
+    * query's first run in a session, or its first after a different
+    * query, carries JIT compilation and reads slower than the runs
+    * after it.
     *
     * args: <sfDir> <name1,name2,...|all> [repeats]
     */
@@ -249,17 +253,19 @@ object Dev {
     val names =
       if (args(1) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    def run(name: String, label: String): Double = {
+      Pin.releaseAll(spark)
+      spark.sparkContext.setJobDescription(s"benchextra $name $label")
+      val t0 = System.nanoTime()
+      SparkEntry.queries(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
+      val dt = (System.nanoTime() - t0) / 1e9
+      println(f"[benchextra] $name $label $dt%.3f s")
+      dt
+    }
     val results = names.map { name =>
-      val times = (1 to repeats).map { r =>
-        Pin.releaseAll(spark)
-        spark.sparkContext.setJobDescription(s"benchextra $name run$r")
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"[benchextra] $name run$r $dt%.3f s")
-        dt
-      }.sorted
+      run(name, "warm")
+      val times = (1 to repeats).map(r => run(name, s"run$r")).sorted
       val med = times(times.size / 2)
       println(f"[benchextra] $name median $med%.3f s over $repeats")
       name -> med

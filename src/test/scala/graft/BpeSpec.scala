@@ -53,12 +53,12 @@ class BpeSpec extends AnyFunSuite {
     val text = (Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
       Seq.fill(6)("newest") ++ Seq.fill(3)("widest")).mkString(" ")
     val docs = Seq(("d1", text)).toDF("doc_id", "text")
-    val got = Bpe.trainBpe(docs, merges = 6, vocabCap = 100, minPair = 2L)
+    val got = Bpe.trainBpe(docs, merges = 6, vocabCap = 100)
       .orderBy("rank").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
     assert(got.toSeq == Bpe.learnMerges(head, 6, 2L).toSeq)
     // counts: low -> [low, </w>] (2), lowest -> [low, est</w>] (2)
-    val table = Bpe.trainBpe(docs, merges = 6, vocabCap = 100, minPair = 2L)
+    val table = Bpe.trainBpe(docs, merges = 6, vocabCap = 100)
     val counts = Bpe.bpeTokenCounts(
         Seq(("a", "low lowest"), ("b", ""), ("c", null.asInstanceOf[String])).toDF("doc_id", "text"),
         table)

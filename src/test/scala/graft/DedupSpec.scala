@@ -62,7 +62,7 @@ class DedupSpec extends AnyFunSuite {
       .filter(col("id_a") === 1 && col("id_b") === 2)
       .collect().headOption.map(_.getDouble(2))
     val truth = Dedup.ngramJaccard(d, docs().sparkSession.createDataFrame(
-      Seq((1L, 2L))).toDF("id_a", "id_b"), n = 3)
+      Seq((1L, 2L))).toDF("id_a", "id_b"))
       .collect().head.getDouble(2)
     est.foreach(e => assert(math.abs(e - truth) < 0.35,
       s"minhash estimate $e too far from true jaccard $truth"))
@@ -110,12 +110,12 @@ class DedupSpec extends AnyFunSuite {
       (2L, (20 to 40).map(i => s"v$i").mkString(" ")),         // clean
       (3L, (5 to 12).map(i => s"w$i").mkString(" ")))          // exactly the benchmark 8-gram
     val bench = docs((100L, (5 to 12).map(i => s"w$i").mkString(" ")))
-    val out = Dedup.decontaminate(d, bench, n = 8)
+    val out = Dedup.decontaminate(d, bench)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
     assert(out(1L) == (1L, true))   // shares the w5..w12 gram
     assert(out(2L) == (0L, false))
     assert(out(3L) == (1L, true))
-    val none = Dedup.decontaminate(d, docs(), n = 8).collect()
+    val none = Dedup.decontaminate(d, docs()).collect()
     assert(none.forall(!_.getBoolean(2)))
   }
 
@@ -412,11 +412,11 @@ class DedupSpec extends AnyFunSuite {
     import spark.implicits._
     val d = Seq((1L, "a b c d e f g h")).toDF("doc_id", "text")
     val bad = intercept[IllegalArgumentException] {
-      Dedup.minhashLsh(d, k = 32, bands = 40) // bands > k: empty slices
+      Dedup.minhashLsh(d, bands = 40) // bands > k = 32: empty slices
     }
     assert(bad.getMessage.contains("divide"))
     val bad2 = intercept[IllegalArgumentException] {
-      Dedup.minhashLsh(d, k = 32, bands = 5) // 32 % 5 != 0: dropped slots
+      Dedup.minhashLsh(d, bands = 5) // 32 % 5 != 0: dropped slots
     }
     assert(bad2.getMessage.contains("divide"))
   }
@@ -580,7 +580,7 @@ class DedupSpec extends AnyFunSuite {
       (4L, "too few"),
       (5L, "just six tokens right here now")
     ).toDF("doc_id", "text")
-    val fp = Dedup.winnowFingerprints(docs, k = 5, w = 4)
+    val fp = Dedup.winnowFingerprints(docs)
       .collect().map(r => (r.getLong(0), r.getString(1)))
     val byDoc = fp.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     assert((byDoc(1L) & byDoc(2L)).nonEmpty, "guaranteed shared fingerprint missing")
@@ -591,7 +591,7 @@ class DedupSpec extends AnyFunSuite {
     val n1Grams = 14 - 5 + 1
     assert(byDoc(1L).size < n1Grams)
     // determinism
-    val again = Dedup.winnowFingerprints(docs, k = 5, w = 4)
+    val again = Dedup.winnowFingerprints(docs)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(again == fp.toSet)
   }

@@ -150,16 +150,16 @@ class DistribSpec extends AnyFunSuite {
     // corpus {a:4, b:2}: ranks (1,ln4) (2,ln2) -> slope =
     // (ln4-ln2)/(ln1-ln2) = -1 exactly; vocab=2, tokens=6
     val docs = Seq(("d1", "a a a a b b")).toDF("doc_id", "text")
-    val row = Distrib.zipfHeaps(docs, "text").collect().head
+    val row = Distrib.zipfHeaps(docs).collect().head
     assert(row.getLong(0) == 2L && row.getLong(1) == 6L)
     assert(row.getDouble(2) == -1.0, "two-point ln-ln fit is exact")
     assert(row.getDouble(3) == r4(math.log(2.0) / math.log(6.0)))
     // uniform frequencies -> y constant -> slope exactly 0
     val flat = Seq(("d1", "a b c d")).toDF("doc_id", "text")
-    val fr = Distrib.zipfHeaps(flat, "text").collect().head
+    val fr = Distrib.zipfHeaps(flat).collect().head
     assert(fr.getDouble(2) == 0.0 && fr.getDouble(3) > 0.0 && fr.getDouble(3) <= 1.0)
     // topN caps the fit head without touching vocab/token totals
-    val capped = Distrib.zipfHeaps(docs, "text", topN = 2).collect().head
+    val capped = Distrib.zipfHeaps(docs, topN = 2).collect().head
     assert(capped.getLong(0) == 2L && capped.getLong(1) == 6L)
   }
 }

@@ -406,7 +406,7 @@ object GraftProps extends Properties("graft") {
     mode match {
       case "fast" => (ImageOps.thresholdGlobal(px, 128), 128)
       case "balanced" =>
-        (ImageOps.adaptiveGaussian(ImageOps.gaussianBlur(px, w, h, 3), w, h, 11, 2.0), -1)
+        (ImageOps.adaptiveGaussian(ImageOps.gaussianBlur(px, w, h, 3), w, h), -1)
       case m =>
         val bl = ImageOps.gaussianBlur(px, w, h, if (m == "quality") 5 else 3)
         val t = if (ImageOps.lowContrast(bl)) -1 else ImageOps.otsuThreshold(bl)

@@ -75,7 +75,7 @@ class LineRulesSpec extends AnyFunSuite {
     import spark.implicits._
     val rows = Seq((1L, 2, "c c."), (1L, 0, "a a."), (1L, 1, "b b."))
     val got = LineRules.c4LineFilter(
-        rows.toDF("doc_id", "idx", "line"), minWords = 2, minKept = 3)
+        rows.toDF("doc_id", "idx", "line"), minWords = 2)
       .collect().map(r => (r.getLong(2), r.getString(3), r.getBoolean(4)))
     assert(got.toSeq == Seq((3L, "a a.\nb b.\nc c.", true)))
   }

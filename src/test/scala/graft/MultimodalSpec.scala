@@ -36,6 +36,18 @@ class MultimodalSpec extends AnyFunSuite {
     assert(kept.map(_._1) == Vector(0, 3, 6))
     // each sampled frame is itself a decodable raster
     kept.foreach { case (_, fb) => SynthRaster.parse(fb) }
+    // malformed containers throw IllegalArgumentException promptly:
+    // every strict prefix, a frame count that cannot fit, and a
+    // negative frame length
+    def header(n: Int, len: Int) = Array[Byte]('G', 'V', 'I', 'D') ++
+      Seq(n, len).flatMap(v => Seq(v >>> 24, v >>> 16, v >>> 8, v).map(_.toByte))
+    val small = Multimodal.synthVideo(11, nFrames = 2)
+    val malformed = (0 until small.length).map(small.take) ++ Seq(
+      header(Int.MaxValue, -4) ++ new Array[Byte](4),
+      header(1, -4) ++ new Array[Byte](4))
+    val t0 = System.nanoTime()
+    malformed.foreach(b => intercept[IllegalArgumentException](Multimodal.sampleFrames(b, 1)))
+    assert((System.nanoTime() - t0) / 1e9 < 5.0, "malformed containers rejected promptly")
   }
 
   test("audio features are deterministic and sane") {
@@ -50,11 +62,11 @@ class MultimodalSpec extends AnyFunSuite {
     val (w, h, px) = SynthRaster.parse(raw)
     val png = graft.img.ImageCodec.encodePng(w, h, px)
     assert(graft.img.ImageCodec.isCompressedImage(png))
-    val (pw, ph, ppx) = Multimodal.decodeImage(png)
+    val (pw, ph, ppx) = graft.img.ImageCodec.decode(png)
     assert((pw, ph) == (w, h))
     assert(ppx.sameElements(px), "PNG decode must round-trip exactly")
     val jpg = graft.img.ImageCodec.encodeJpeg(w, h, px)
-    val (jw, jh, jpx) = Multimodal.decodeImage(jpg)
+    val (jw, jh, jpx) = graft.img.ImageCodec.decode(jpg)
     assert((jw, jh) == (w, h))
     val maxErr = jpx.zip(px).map { case (a, b) => math.abs(a - b) }.max
     assert(maxErr < 64, s"JPEG decode too lossy (max pixel err $maxErr)")
@@ -66,7 +78,7 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("unreadable compressed bytes fail loudly, not as silent garbage") {
     val fakeJpeg = Array[Byte](0xff.toByte, 0xd8.toByte, 0x00, 0x01)
-    intercept[Exception](Multimodal.decodeImage(fakeJpeg))
+    intercept[Exception](graft.img.ImageCodec.decode(fakeJpeg))
   }
 
   test("spark plumbing: metadata / features / frame-sample tables over a binary column") {

@@ -290,7 +290,7 @@ class PlanSpec extends AnyFunSuite {
       s"bm25 top-k must be TakeOrdered, not global sort:\n$bmPlan")
     // winnowing: one doc-keyed window exchange + the distinct — no
     // gram-keyed corpus-wide shuffle may appear
-    val wf = graft.ops.Dedup.winnowFingerprints(docs, k = 5, w = 4)
+    val wf = graft.ops.Dedup.winnowFingerprints(docs)
     wf.collect()
     val wfPlan = planOf(wf)
     val wfHash = "Exchange hashpartitioning".r.findAllIn(wfPlan).length
@@ -353,12 +353,12 @@ class PlanSpec extends AnyFunSuite {
     assert(usedRefs <= distinctContents)
   }
 
-  test("one pin policy: only Pin, GraftBridge and the frozen Bench pin or release frames") {
-    val owners = Set("graft/util/Pin.scala", "org/apache/spark/sql/GraftBridge.scala",
-      "graft/Bench.scala")
-    // any call, dotted, bare or infix, with or without parentheses;
-    // comment lines and string literals are skipped
-    val pinCall = raw"\b(localCheckpoint|checkpoint|persist|cache|unpersist|getPersistentRDDs)\b".r
+  /** `file:line: match` for every match of `pattern` in the code of
+    * src/main outside `skip`: comment lines are skipped and string
+    * literals blanked.
+    */
+  private def sourceHits(pattern: scala.util.matching.Regex,
+                         skip: Set[String] = Set.empty): Seq[String] = {
     val literal = "\"[^\"]*\"".r
     def scalaFiles(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(scalaFiles)
@@ -366,14 +366,33 @@ class PlanSpec extends AnyFunSuite {
     val root = new java.io.File("src/main/scala")
     val files = scalaFiles(root)
     assert(files.size > 50, s"scanned ${files.size} files under ${root.getAbsolutePath}")
-    val hits = for {
+    for {
       f <- files
       rel = root.toPath.relativize(f.toPath).toString.replace('\\', '/')
-      if !owners(rel)
+      if !skip(rel)
       (line, i) <- java.nio.file.Files.readAllLines(f.toPath).toArray(Array.empty[String]).zipWithIndex
       if !Seq("*", "/*", "//").exists(line.trim.startsWith)
-      call <- pinCall.findAllIn(literal.replaceAllIn(line, "\"\"").split("//").head)
-    } yield s"$rel:${i + 1}: $call"
+      hit <- pattern.findAllIn(literal.replaceAllIn(line, "\"\"").split("//").head)
+    } yield s"$rel:${i + 1}: $hit"
+  }
+
+  test("one pin policy: only Pin, GraftBridge and the frozen Bench pin or release frames") {
+    val owners = Set("graft/util/Pin.scala", "org/apache/spark/sql/GraftBridge.scala",
+      "graft/Bench.scala")
+    // any call, dotted, bare or infix, with or without parentheses
+    val pinCall = raw"\b(localCheckpoint|checkpoint|persist|cache|unpersist|getPersistentRDDs)\b".r
+    val hits = sourceHits(pinCall, owners)
     assert(hits.isEmpty, hits.mkString("pins outside graft.util.Pin:\n", "\n", ""))
+  }
+
+  test("one value per column: no parameter named ...Col has a default value") {
+    // the input schema is fixed (doc_id, text, source, vec_id,
+    // embedding, ...): operators name their columns as literals, and a
+    // column parameter stays only where callers pass different
+    // columns, so every caller names one; vals and vars are not
+    // parameters
+    val defaulted = raw"(?<!val )(?<!var )\b\w+Col\s*:[^=(){},]*[^=<>!]=(?![=>])".r
+    val hits = sourceHits(defaulted)
+    assert(hits.isEmpty, hits.mkString(s"${hits.size} defaulted column parameters:\n", "\n", ""))
   }
 }

@@ -116,7 +116,7 @@ class SketchesSpec extends AnyFunSuite {
     val base = (0 until n).map(i => ("g", s"val_$i")).toDF("source", "text")
     val dup = base.union(base) // duplicates must not move the estimate
     def run(d: org.apache.spark.sql.DataFrame) =
-      Sketches.hllDistinct(d, "text", "source", p = 10).collect()
+      Sketches.hllDistinct(d, "text", "source").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq.sorted
     val got = run(dup)
     assert(got.size == 1 && got.head._2 == 1024L)

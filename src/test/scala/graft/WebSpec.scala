@@ -80,7 +80,7 @@ class WebSpec extends AnyFunSuite {
       // domain b: same footer text but only 1 of 2 docs -> below minDf
       ("b", 5L, "footer line"), ("b", 6L, "other")
     ).toDF("domain", "doc_id", "line")
-    val got = graft.ops.Web.domainBoilerplate(lines)
+    val got = graft.ops.Web.domainBoilerplate(lines, "domain")
       .orderBy("domain", "line").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
         r.getDouble(4), r.getBoolean(5)))
@@ -88,7 +88,7 @@ class WebSpec extends AnyFunSuite {
       ("a", "footer line", 3L, 4L, 0.75, true),
       ("a", "shared pair", 2L, 4L, 0.5, true)))
     // stricter threshold drops the weaker line
-    val strict = graft.ops.Web.domainBoilerplate(lines, minFrac = 0.6)
+    val strict = graft.ops.Web.domainBoilerplate(lines, "domain", minFrac = 0.6)
       .filter(col("boilerplate")).collect()
     assert(strict.map(_.getString(1)).toSeq == Seq("footer line"))
   }
